@@ -25,7 +25,9 @@ from airflow_crypto_btc_spark.plans.registry_tpch2 import TPCH2_REGISTRY
 from airflow_crypto_btc_spark.plans.registry_tpch3 import TPCH3_REGISTRY
 from airflow_crypto_btc_spark.plans.registry_unigram import UNIGRAM_REGISTRY
 
-_MERGED: dict[str, QuerySpec] = {
+#: Registration order: the reference-parity core (``REGISTRY``) comes
+#: first, then each extension module in the order it was added.
+ALL_QUERIES: dict[str, QuerySpec] = {
     **REGISTRY,
     **EXT_REGISTRY,
     **EXT2_REGISTRY,
@@ -39,122 +41,7 @@ _MERGED: dict[str, QuerySpec] = {
     **ANALYTICS_REGISTRY,
     **SQL_REGISTRY,
     **UNIGRAM_REGISTRY,
-    # appended last: keeps the driver's first-50 correctness window stable
     **INCREMENTAL_REGISTRY,
     **TAKEDOWN_REGISTRY,
     **PROBE_REGISTRY,
 }
-
-# The driver's hard correctness gate checks the FIRST 50 entries, so the
-# catalog's dict order IS the driver-visible sample.  Three tiers:
-#
-# 1. _WINDOW_PRIORITY — the explicit first-50 curation (introduced in
-#    round 10 after CORRECTNESS_r05-r09 all sampled the same
-#    registration-order window, leaving the newest families
-#    driver-unchecked).  The list keeps the reference-parity core
-#    (flagship, OHLC, windows, sinks, TPC-H heads) and rotates >=10
-#    slots per round so every family head passes through the driver's
-#    own gate within ~2 rounds (pinned by tests/test_catalog_window.py).
-#    Round-14 rotation (46 slots; ledger now freezes the r02..r13
-#    union = 191, so ever-windowed reaches 237/268 when this window
-#    ships — the round-13 judge's >= 235 target; the backlog-cursor
-#    schedule that retires the remaining 31 is enforced by
-#    tests/test_catalog_window.py against plans/window_ledger.py).
-#    IN — first, the four round-13-shipped entries the driver's own
-#    hash gate has NEVER checked (the merge-on-read deletion-vector
-#    family + CDC APPLY CHANGES — the round-13 judge's #1 ask); they
-#    sit mid-backlog in catalog order, so they enter under the
-#    new-families exception (newer than the frozen ledger era).  Then
-#    the FIRST 42 of the never-windowed backlog in catalog order: the
-#    curation quota/census family, the TA/indicator battery
-#    (RSI/MACD/bollinger/drawdown/ATR), the SQL-surface battery
-#    (grouping sets, lateral top-k, null semantics), the incremental
-#    dedup/index-serve family, and the jsonl/orc sources.  OUT — the
-#    shipped round-13 window (trained-ANN serve family, 13 TPC-H
-#    singles, DQ monitors, text-dup/curation battery), all unioned
-#    into the frozen ledger and still covered every round by the
-#    beyond-window full-catalog sweep.  KEEP (4) — the flagship,
-#    TPC-H q1, and the two entries that sat in early windows only as
-#    `no_oracle` and have never produced a driver HASH match
-#    (approx_distinct_tokens, sim_cosine_topk_fast — both
-#    judge-verified oracle-backed since r13; the round-13 judge's #3
-#    ask is to put them through the driver's own hash gate).
-# 2. every other oracle-backed entry, registration order preserved
-#    (the beyond-window rotation sweep covers these every round).
-# 3. rows-only (sql=None) sketches last — a window slot spent on an
-#    entry the driver can only mark `no_oracle` is a wasted slot.
-_WINDOW_KEEP = [
-    "flagship_daily_indicators",
-    "q1_pricing_summary",
-    "approx_distinct_tokens",
-    "sim_cosine_topk_fast",
-]
-
-_WINDOW_ROTATED_IN = [
-    # round-14 rotation: the 4 never-driver-gated round-13 entries
-    # first (new-families exception — newer than the frozen ledger),
-    # then 42 slots from the HEAD of the never-windowed backlog in
-    # catalog order (plans/window_ledger.window_backlog cursor rule).
-    "cdc_apply_changes",
-    "curate_takedown_deferred",
-    "curate_takedown_dv_applied",
-    "curate_takedown_dv_from_stream",
-    "curate_contamination",
-    "curate_pack_sequences",
-    "curate_domain_quota",
-    "curate_domain_census",
-    "curate_quota_decisions",
-    "curate_corpus_diff",
-    "curate_data_card_from_facts",
-    "indicators_incremental",
-    "join_range_attribution",
-    "forecast_baselines",
-    "ohlc_resample_weekly",
-    "backtest_ma_crossover",
-    "win_stochastic_atr",
-    "anomaly_runs",
-    "win_max_drawdown",
-    "corr_matrix_assets",
-    "win_rsi14",
-    "win_bollinger",
-    "win_rolling_median",
-    "win_zscore_outliers",
-    "ewm_macd",
-    "ts_gap_fill",
-    "ts_twap",
-    "category_sales_deviation",
-    "funnel_stages",
-    "cohort_retention",
-    "scd2_intervals",
-    "histogram_equidepth",
-    "histogram_equiwidth",
-    "sql_recursive_return_index",
-    "sql_grouping_sets",
-    "sql_filtered_aggregates",
-    "sql_lateral_topk",
-    "sql_window_value_battery",
-    "sql_null_battery",
-    "rollup_incremental_ohlc",
-    "curate_near_dup_purge",
-    "dedup_near_clusters_two_star",
-    "dedup_lsh_pairs_capped",
-    "src_jsonl_documents",
-    "src_orc_documents",
-    "dedup_incremental_pairs",
-]
-
-_WINDOW_PRIORITY = _WINDOW_KEEP + _WINDOW_ROTATED_IN
-
-ALL_QUERIES: dict[str, QuerySpec] = {
-    k: _MERGED[k]
-    for k in _WINDOW_PRIORITY
-    if k in _MERGED and _MERGED[k].sql is not None
-}
-ALL_QUERIES.update(
-    {
-        k: v
-        for k, v in _MERGED.items()
-        if k not in ALL_QUERIES and v.sql is not None
-    }
-)
-ALL_QUERIES.update({k: v for k, v in _MERGED.items() if v.sql is None})

@@ -42,7 +42,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 @dataclass(frozen=True)
 class QuerySpec:
     fn: QueryFn
-    sql: str | None  # None → non-SQL-expressible, driver does rows-only check
+    sql: str  # DuckDB oracle: same columns, same rows as ``fn``
 
 
 def _dec_sum(col, alias: str, scale: int = 6):

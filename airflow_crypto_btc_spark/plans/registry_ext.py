@@ -990,7 +990,7 @@ def q_mm_block_hash_near_dup(spark, sf_dir):
     block hashing exists to catch), so the entry asserts GUARANTEED
     true positives at every SF — 4-5 seeded pairs at sf0.001/sf0.01,
     where the raw fixture's answer is legitimately empty and the
-    driver window would otherwise value-check a vacuous result (the
+    oracle check would otherwise value-check a vacuous result (the
     round-9 demerit).  The bar stays at the production-shaped
     ``max_hamming=3`` (4 pigeonhole bands of 8 bits): loosening it to
     catch CHANCE collisions at sf0.01 instead would degrade the bands
@@ -1216,10 +1216,7 @@ EXT_REGISTRY: dict[str, QuerySpec] = {
     "mm_byte_features": QuerySpec(q_mm_byte_features, _SQL_MM_BYTE_FEATURES),
 }
 # mm_block_hash / mm_block_hash_near_dup are registered in
-# registry_incremental.py: appending keeps the driver's first-50
-# correctness window stable, and the pairs entry's sf0.01 result is
-# legitimately empty (no same-grid payload near-dups in the small
-# fixture) — a slot the value-checked window shouldn't spend.
+# registry_incremental.py.
 
 
 def q_sim_centroid_drift(spark, sf_dir):

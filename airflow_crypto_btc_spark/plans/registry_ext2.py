@@ -365,13 +365,16 @@ _SQL_DQ_EXPECTATION_SUITE = """
 
 # ------------------------------------------------ blocked fuzzy-match join
 
+#: edit-distance bound shared by the Spark plan and its oracle
+_FUZZY_MAX_EDITS = 1
+
 
 def q_fuzzy_name_pairs(spark, sf_dir):
     """Entity-resolution pattern: candidate pairs by cheap blocking key
-    (name prefix), exact Levenshtein ≤ 1 inside each block.  Blocking
-    turns the O(n²) all-pairs edit-distance into O(Σ block²) with
-    bounded blocks — the standard scale path for fuzzy joins; the
-    equi-join on the block key shuffles both sides once."""
+    (name prefix), exact Levenshtein ≤ ``_FUZZY_MAX_EDITS`` inside each
+    block.  Blocking turns the O(n²) all-pairs edit-distance into
+    O(Σ block²) with bounded blocks — the standard scale path for fuzzy
+    joins; the equi-join on the block key shuffles both sides once."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.expr("substr(c_name, 10, 7)").alias("blk")
     )
@@ -379,13 +382,13 @@ def q_fuzzy_name_pairs(spark, sf_dir):
     pairs = a.join(b, "blk").filter(F.col("a.c_custkey") < F.col("b.c_custkey"))
     # banded threshold form (Spark 3.5+): O(len·k) instead of O(len²)
     # per pair and early-exits past the bound, returning -1 for pairs
-    # beyond it — those are exactly the rows the ≤ 1 filter drops, and
+    # beyond it — those are exactly the rows the bound filter drops, and
     # surviving rows carry the true distance, so output is identical
     # to the unbounded form (the oracle computes the unbounded one)
-    lev = F.expr("levenshtein(a.c_name, b.c_name, 1)")
+    lev = F.expr(f"levenshtein(a.c_name, b.c_name, {_FUZZY_MAX_EDITS})")
     return (
         pairs.withColumn("lev", lev)
-        .filter((F.col("lev") >= 0) & (F.col("lev") <= 1))
+        .filter((F.col("lev") >= 0) & (F.col("lev") <= _FUZZY_MAX_EDITS))
         .select(
             F.col("a.c_custkey").alias("custkey_a"),
             F.col("b.c_custkey").alias("custkey_b"),
@@ -394,14 +397,14 @@ def q_fuzzy_name_pairs(spark, sf_dir):
     )
 
 
-_SQL_FUZZY_NAME_PAIRS = """
+_SQL_FUZZY_NAME_PAIRS = f"""
     WITH c AS (
       SELECT c_custkey, c_name, substr(c_name, 10, 7) AS blk FROM customer
     )
     SELECT a.c_custkey AS custkey_a, b.c_custkey AS custkey_b,
       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS lev
     FROM c a JOIN c b ON a.blk = b.blk AND a.c_custkey < b.c_custkey
-    WHERE levenshtein(a.c_name, b.c_name) <= 1
+    WHERE levenshtein(a.c_name, b.c_name) <= {_FUZZY_MAX_EDITS}
 """
 
 

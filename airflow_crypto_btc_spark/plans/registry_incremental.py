@@ -1,5 +1,5 @@
-"""Round-4 query entries.  This registry is merged LAST into the catalog
-so late additions never reorder the driver's first-50 correctness window.
+"""Round-4 query entries, merged after the earlier registries in the
+catalog.
 
 ``rollup_incremental_ohlc`` proves the partial-aggregate merge algebra
 (operators/incremental.py) against a full-recompute oracle: the events
@@ -1277,7 +1277,7 @@ INCREMENTAL_REGISTRY: dict[str, QuerySpec] = {
         q_sim_pq_topk_from_codes, _reg_ml._pq_topk_sql()
     ),
     # SemDeDup-shaped cluster-bounded embedding dedup (function + SQL in
-    # registry_ext; registered here so the first-50 window stays stable)
+    # registry_ext)
     "dedup_semantic_purge": QuerySpec(
         q_dedup_semantic_purge, _SQL_DEDUP_SEMANTIC_PURGE
     ),
@@ -1314,8 +1314,7 @@ INCREMENTAL_REGISTRY: dict[str, QuerySpec] = {
 }
 
 # Multimodal block-hash family — defined beside the other mm_* entries in
-# registry_ext.py, registered here so the driver's first-50 window keeps
-# its established membership (see catalog.py ordering note).
+# registry_ext.py.
 from airflow_crypto_btc_spark.plans.registry_ext import (  # noqa: E402
     _SQL_MM_BLOCK_HASH,
     _SQL_MM_BLOCK_HASH_NEAR_DUP,
@@ -1439,8 +1438,7 @@ INCREMENTAL_REGISTRY.update(
 )
 
 # Balanced output sharding — defined beside the other curation entries in
-# registry_curation.py, registered here so the driver's first-50 window
-# keeps its established membership (see catalog.py ordering note).
+# registry_curation.py.
 from airflow_crypto_btc_spark.plans.registry_curation import (  # noqa: E402
     _SQL_CURATE_BALANCED_SHARDS,
     _SQL_CURATE_SHARD_SUMMARY,

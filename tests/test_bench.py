@@ -1,14 +1,5 @@
-"""The bench emitters: every per-query median must survive the driver's
-fixed-size tail capture (BENCH_r07 parsed null, BENCH_r08 lost 28/93
-medians, BENCH_r09 lost 36/99 — the capture keeps only the LAST 2000
-characters of stdout, measured from the artifacts themselves).
-
-The round-10 contract tested here: the FINAL block (one compressed
-medians_z line + the summary line) fits bench.TAIL_BUDGET ≤ 1900 bytes
-and round-trips the complete 2-decimal medians map; the human-readable
-chunk lines that precede it keep their old shape but nothing depends on
-them surviving.
-"""
+"""The bench's two outputs: the one-line summary that ends stdout and the
+plain-name ``BENCH_MEDIANS.json`` record."""
 
 from __future__ import annotations
 
@@ -17,227 +8,15 @@ import json
 import pytest
 
 import bench
-
-
-def _fake_timings() -> dict[str, float]:
-    # Realistic shape: the actual headline names with plausible medians.
-    return {name: round(0.1 + (i % 17) * 0.37, 4) for i, name in enumerate(bench.HEADLINE)}
-
-
-@pytest.mark.smoke
-def test_chunks_reconstruct_full_map_in_order() -> None:
-    timings = _fake_timings()
-    chunks = bench.chunk_timings(timings)
-    merged: dict[str, float] = {}
-    for c in chunks:
-        merged.update(c)
-    assert merged == timings
-    assert list(merged) == list(timings)  # catalog order preserved
-
-
-@pytest.mark.smoke
-def test_emitted_chunk_lines_are_bounded() -> None:
-    timings = _fake_timings()
-    chunks = bench.chunk_timings(timings)
-    assert len(chunks) >= 2  # 90+ queries never fit one bounded chunk
-    for i, chunk in enumerate(chunks, start=1):
-        line = json.dumps(
-            {
-                "metric": "headline_queries_chunk",
-                "chunk": i,
-                "of": len(chunks),
-                "sf": 0.1,
-                "reps": 3,
-                "stat": "median_per_query",
-                "queries": chunk,
-            },
-            separators=(",", ":"),
-        )
-        assert len(line) <= 1400, f"chunk {i} serialized to {len(line)} bytes"
-
-
-@pytest.mark.smoke
-def test_total_emitted_bytes_fit_a_small_tail_window() -> None:
-    # The chunk lines are NON-contractual (the driver keeps only the
-    # last 2000 chars; the medians_z + summary tail is the artifact,
-    # pinned by test_final_block_fits_the_2000_char_tail...) — this
-    # bound only keeps the human-readable output proportional to the
-    # headline size instead of letting per-line spam creep in.
-    timings = _fake_timings()
-    chunks = bench.chunk_timings(timings)
-    total_bytes = sum(
-        len(
-            json.dumps(
-                {
-                    "metric": "headline_queries_chunk",
-                    "chunk": i,
-                    "of": len(chunks),
-                    "sf": 0.1,
-                    "reps": 3,
-                    "stat": "median_per_query",
-                    "queries": c,
-                },
-                separators=(",", ":"),
-            )
-        )
-        + 1
-        for i, c in enumerate(chunks, start=1)
-    )
-    total_bytes += len(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": round(sum(timings.values()), 4),
-                "unit": "sec",
-                "sf": 0.1,
-                "n_queries": len(timings),
-            },
-            separators=(",", ":"),
-        )
-    )
-    assert total_bytes < 40 * len(bench.HEADLINE), (
-        f"bench emits {total_bytes} bytes for {len(bench.HEADLINE)} lines; per-line output crept up"
-    )
-
-
-def test_chunking_handles_tiny_and_empty_maps() -> None:
-    assert bench.chunk_timings({}) == []
-    one = {"flagship_daily_indicators": 1.2345}
-    assert bench.chunk_timings(one) == [one]
-
-
-@pytest.mark.smoke
-def test_final_block_fits_the_2000_char_tail_and_roundtrips() -> None:
-    # THE round-10 contract: medians_z line + summary line + newlines
-    # must fit the driver's measured 2000-char tail with margin, and the
-    # complete map must decode from the line alone.
-    timings = _fake_timings()
-    summary = bench.summary_line(
-        round(sum(timings.values()), 4), 0.1, len(timings)
-    )
-    zline = bench.medians_z_line(
-        timings, budget=bench.TAIL_BUDGET - len(summary) - 2
-    )
-    assert len(zline) + len(summary) + 2 <= bench.TAIL_BUDGET
-    assert bench.TAIL_BUDGET <= 1990  # driver window is 2000; hard ceiling
-    # the guarantee is structural, not margin-based: medians_z_line
-    # returns a line <= its budget (0-decimal floor), so the block can
-    # never reach 2000 regardless of values
-    decoded = bench.decode_medians_z(zline)
-    assert decoded == {k: round(v, 2) for k, v in timings.items()}
-    # the envelope self-identifies the codec and the decimals used
-    env = json.loads(zline)
-    assert env["enc"] == "zlib+b85"
-    assert env["decimals"] == 2  # bench-shaped maps must keep 2 decimals
-
-    # ...a realistic-but-fully-distinct map (every median unique,
-    # bench-typical 0.05-9.5 s range) may step to 1 decimal at 133
-    # names (the compressed name list alone is ~1.43 KB) but must fit
-    # and decode at the advertised precision
-    import random
-
-    rng = random.Random(3)
-    distinct = {
-        name: round(rng.uniform(0.05, 9.5), 4) for name in bench.HEADLINE
-    }
-    s2 = bench.summary_line(round(sum(distinct.values()), 4), 0.1, 99)
-    z2 = bench.medians_z_line(
-        distinct, budget=bench.TAIL_BUDGET - len(s2) - 2
-    )
-    nd2 = json.loads(z2)["decimals"]
-    assert nd2 in (2, 1)
-    assert len(z2) + len(s2) + 2 <= bench.TAIL_BUDGET
-    assert bench.decode_medians_z(z2) == {
-        k: round(v, nd2) for k, v in distinct.items()
-    }
-
-
-@pytest.mark.smoke
-def test_final_block_fits_even_with_adversarial_values() -> None:
-    # Worst realistic case: every median distinct, max digits at 2
-    # decimals (e.g. 17.93) — poor compressibility; must still fit.
-    import random
-
-    rng = random.Random(7)
-    timings = {
-        name: round(rng.uniform(0.01, 59.99), 4)
-        for name in bench.HEADLINE
-    }
-    summary = bench.summary_line(
-        round(sum(timings.values()), 4), 0.1, len(timings)
-    )
-    zline = bench.medians_z_line(
-        timings, budget=bench.TAIL_BUDGET - len(summary) - 2
-    )
-    assert len(zline) + len(summary) + 2 <= bench.TAIL_BUDGET
-    # this shape trips the 1-decimal fallback — the envelope must say so
-    # and the decode must match at the advertised precision
-    nd = json.loads(zline)["decimals"]
-    assert bench.decode_medians_z(zline) == {
-        k: round(v, nd) for k, v in timings.items()
-    }
-
-
-def test_decode_medians_z_raises_on_truncation() -> None:
-    timings = _fake_timings()
-    zline = bench.medians_z_line(timings, budget=10_000)
-    with pytest.raises(Exception):
-        bench.decode_medians_z(zline[: len(zline) // 2])
-
-
-def test_medians_z_headline_ref_refuses_drifted_list(monkeypatch) -> None:
-    """The @headline reference form must fail LOUDLY when decoded
-    against a tree whose HEADLINE differs from the recording tree —
-    silently misattributing 171 values would corrupt every
-    round-over-round comparison."""
-    import bench
-
-    timings = {name: 1.0 for name in bench.HEADLINE}
-    line = bench.medians_z_line(timings, budget=bench.TAIL_BUDGET)
-    assert "@headline:" in __import__("zlib").decompress(
-        __import__("base64").b85decode(
-            __import__("json").loads(line)["q"]
-        )
-    ).decode()
-    assert bench.decode_medians_z(line) == {
-        k: 1.0 for k in bench.HEADLINE
-    }
-    monkeypatch.setattr(
-        bench, "HEADLINE", bench.HEADLINE[:-1] + ["drifted_entry"]
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="drifted"):
-        bench.decode_medians_z(line)
-
-
-def test_medians_z_cold_flags_roundtrip() -> None:
-    """Cold-build flags ride the compressed payload as sorted-name
-    indexes and decode back to names; absent = empty (incl. historical
-    lines)."""
-    import bench
-
-    timings = {name: 1.0 for name in bench.HEADLINE}
-    cold = [bench.HEADLINE[3], bench.HEADLINE[0]]
-    line = bench.medians_z_line(
-        timings, budget=bench.TAIL_BUDGET, cold=cold
-    )
-    assert len(line) <= bench.TAIL_BUDGET
-    assert sorted(bench.decode_cold_z(line)) == sorted(cold)
-    assert bench.decode_medians_z(line) == {
-        k: 1.0 for k in bench.HEADLINE
-    }
-    plain = bench.medians_z_line(timings, budget=bench.TAIL_BUDGET)
-    assert bench.decode_cold_z(plain) == []
+from airflow_crypto_btc_spark.plans.catalog import ALL_QUERIES
 
 
 @pytest.mark.smoke
 def test_medians_file_schema_roundtrips(tmp_path) -> None:
-    """Round-15 bench contract: the COMPLETE plain-name medians land at
-    a fixed committed path (bench.MEDIANS_PATH) every run, so
-    cross-round PERF comparison never depends on decoding the
-    compressed tail line against a drifted HEADLINE list."""
-    timings = _fake_timings()
+    timings = {
+        name: round(0.1 + (i % 17) * 0.37, 4)
+        for i, name in enumerate(ALL_QUERIES)
+    }
     path = str(tmp_path / "BENCH_MEDIANS.json")
     bench.write_medians_file(
         timings, 0.1, cpus=32, reps=3,
@@ -253,5 +32,34 @@ def test_medians_file_schema_roundtrips(tmp_path) -> None:
     assert payload["medians"] == {k: timings[k] for k in sorted(timings)}
     assert payload["cold"] == ["sim_pq_topk", "text_bpe_merges"]
     assert payload["total"] == round(sum(timings.values()), 4)
-    # plain names, no codec: every headline entry appears verbatim
-    assert set(payload["medians"]) == set(bench.HEADLINE)
+    assert set(payload["medians"]) == set(ALL_QUERIES)
+
+
+def test_main_times_every_catalog_entry(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+) -> None:
+    names = ["agg_count_total", "win_ma7"]
+    path = str(tmp_path / "BENCH_MEDIANS.json")
+    monkeypatch.setattr(
+        bench, "ALL_QUERIES", {n: ALL_QUERIES[n] for n in names}
+    )
+    monkeypatch.setattr(bench, "MEDIANS_PATH", path)
+    monkeypatch.setattr(bench, "get_spark", lambda **_: spark)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    # cpus comes from the session, not from this variable's default
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+
+    bench.main()
+
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["metric"] == "headline_queries_total_runtime"
+    assert summary["unit"] == "sec"
+    assert summary["n_queries"] == 2
+    with open(path) as fh:
+        payload = json.load(fh)
+    assert sorted(payload["medians"]) == names
+    assert payload["reps"] == 1
+    assert payload["cpus"] == spark.sparkContext.defaultParallelism
+    assert summary["value"] == payload["total"]
+    assert summary["sf"] == payload["sf"]

@@ -6,11 +6,8 @@ over the same parquet fixtures, then compares row count, column set, and
 reasonable driver-side hash also matches.
 
 Usage:  python tools/oracle_check.py [sf_dir] [query ...]
-        python tools/oracle_check.py [sf_dir] --window N-M
 
-``--window N-M`` selects queries by CATALOG ORDER (0-based, half-open):
-the driver hash-checks only the first 50 entries, so ``--window 50-153``
-is the rotation run that covers everything beyond the driver's window.
+With no query names every catalog entry runs; an unknown name is an error.
 """
 
 from __future__ import annotations
@@ -68,17 +65,19 @@ def compare(name: str, spark_df, oracle_df) -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    rest = sys.argv[2:]
-    window = None
-    if rest and rest[0] == "--window":
-        lo, hi = rest[1].split("-")
-        window = (int(lo), int(hi))
-        rest = rest[2:]
-    only = set(rest)
+    only = sys.argv[2:]
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     from airflow_crypto_btc_spark.session import get_spark
+
+    qs, oracles = e.queries(), e.oracle_sql()
+    unknown = [n for n in only if n not in qs]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    if only:
+        qs = {n: qs[n] for n in only}
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
@@ -90,23 +89,13 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    if window is not None:
-        names = list(qs)[window[0]:window[1]]
-        print(f"window {window[0]}-{window[1]}: {len(names)} queries")
-        qs = {n: qs[n] for n in names}
     failures = 0
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {ex}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows")
             continue
         try:
             odf = con.execute(oracles[name]).df()
