@@ -10,20 +10,27 @@ its randomness from md5:
   means string-min == numeric-min, no integer conversion needed.
 - *bit extraction* (simhash): parity of the i-th hex digit.
 
-Everything here returns Spark ``Column``s built from SQL expression strings
-(the kernels are HOF-lambda-heavy; expression text keeps them 1:1 with the
-DuckDB oracle SQL in ``plans/registry.py``).  All kernels are **per-row array
-expressions — no explode, no shuffle, no UDF**: at 100 TB each document's
-signature is computed where the row already lives, inside whole-stage
-codegen.
+The ``*_expr`` helpers return Spark ``Column``s built from SQL expression
+strings (expression text keeps them 1:1 with the DuckDB oracle SQL in
+``plans/registry.py``); they are **per-row array expressions — no explode,
+no shuffle, no UDF**.  :func:`split_tokens` is the Python side of
+:func:`tokens_expr` for the Arrow kernels (MinHash/SimHash in
+``operators/dedup.py``, BPE counts in ``operators/vocab.py``).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MERSENNE_P = 1_000_000_007
+
+#: Java's ``\s`` — what Spark's ``split(text, '\\s+')`` compiles — is
+#: ASCII-only ``[ \t\n\x0B\f\r]``; Python's ``\s`` would also split on
+#: U+00A0/U+3000, which CJK documents contain
+_JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
 
 
 def hex8_to_bigint_sql(hex_expr: str) -> str:
@@ -37,6 +44,14 @@ def tokens_expr(text_col: str = "text") -> Column:
     return F.expr(f"filter(split({text_col}, '\\\\s+'), t -> t != '')")
 
 
+def split_tokens(text) -> list[str]:
+    """:func:`tokens_expr` in Python, token for token (a non-string
+    yields no tokens)."""
+    if not isinstance(text, str):
+        return []
+    return [t for t in _JAVA_WS.split(text) if t]
+
+
 def shingles_expr(tokens_col: str = "tokens", k: int = 3) -> Column:
     """k-token shingles joined by single spaces; empty array below k tokens
     (guard required: Spark ``sequence(0, negative)`` counts DOWN)."""
@@ -45,56 +60,6 @@ def shingles_expr(tokens_col: str = "tokens", k: int = 3) -> Column:
         f"CASE WHEN size({tokens_col}) >= {k} THEN "
         f"transform(sequence(0, size({tokens_col})-{k}), i -> {lam}) "
         f"ELSE array() END"
-    )
-
-
-def minhash_signature_expr(
-    shingles_col: str = "shingles", num_hashes: int = 12
-) -> Column:
-    """MinHash signature: array of ``num_hashes`` lexicographic-min md5
-    values over seed-salted shingles.  min(md5) over a fixed-width hex
-    string equals min over the underlying 128-bit integer, so no numeric
-    conversion is needed and DuckDB agrees bit-for-bit.
-
-    Perf note (measured, sf0.1): a hash-once + xor-mixed-family variant
-    is SLOWER here — HOF lambdas are interpreted per element, so the
-    k×|shingles| lambda evaluations dominate regardless of what the
-    lambda body computes, and the hex→bigint conversion adds a pass.
-    The k× md5 stays; the Arrow twin (operators/dedup_fast.py) is the
-    designed fast path (~3× quicker), memoizing md5 across a batch."""
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), j -> "
-        f"array_min(transform({shingles_col}, "
-        f"s -> md5(concat(cast(j as string), '|', s)))))"
-    )
-
-
-def simhash_expr(tokens_col: str = "tokens", bits: int = 16) -> Column:
-    """SimHash fingerprint over ``bits`` bits (≤32: one md5 hex digit per
-    bit).  bit i = sign of sum over tokens of ±1 by parity of hex digit i of
-    md5(token); ties (sum == 0) → 0."""
-    assert bits <= 32
-    return F.expr(
-        f"aggregate(sequence(0, {bits - 1}), cast(0 as bigint), (acc, i) -> "
-        f"acc + CASE WHEN aggregate({tokens_col}, 0, (a, t) -> a + "
-        f"CASE WHEN cast(conv(substr(md5(t), cast(i+1 as int), 1),16,10) "
-        f"as int) % 2 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN shiftleft(cast(1 as bigint), cast(i as int)) ELSE 0 END)"
-    )
-
-
-def simhash_from_md5_expr(md5s_col: str = "tok_md5", bits: int = 16) -> Column:
-    """:func:`simhash_expr` over PRE-hashed tokens (``md5s_col`` = array of
-    md5 hex strings).  Hoisting ``md5(t)`` into a separate per-row
-    projection evaluates it once per token instead of once per (token, bit)
-    — identical fingerprints, ``bits``× fewer digest computations."""
-    assert bits <= 32
-    return F.expr(
-        f"aggregate(sequence(0, {bits - 1}), cast(0 as bigint), (acc, i) -> "
-        f"acc + CASE WHEN aggregate({md5s_col}, 0, (a, h) -> a + "
-        f"CASE WHEN cast(conv(substr(h, cast(i+1 as int), 1),16,10) "
-        f"as int) % 2 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN shiftleft(cast(1 as bigint), cast(i as int)) ELSE 0 END)"
     )
 
 

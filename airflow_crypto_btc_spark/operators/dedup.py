@@ -5,8 +5,9 @@ Scale design (the whole point — SURVEY §7 hard-part 6):
 
 - **Exact dedup** is a hash-groupBy on a content digest: one shuffle of
   (digest, doc_id) pairs, never of the document bodies.
-- **MinHash signatures** are per-row array expressions (no explode, no
-  UDF) — linear scan, embarrassingly parallel.
+- **MinHash signatures and SimHash fingerprints** are computed by
+  Arrow ``mapInPandas`` kernels — one linear scan, embarrassingly
+  parallel (see "Serve engine" below).
 - **LSH banding** turns O(n²) all-pairs into: explode b band keys per doc
   (b·n rows), shuffle on band key, pair only within buckets.  Candidate
   pairs are then *verified* with exact Jaccard — false positives die, false
@@ -18,19 +19,40 @@ Scale design (the whole point — SURVEY §7 hard-part 6):
 
 Determinism: all hashes derive from md5 (see ``functions/hashing.py``), so
 the DuckDB oracle reproduces signatures, bands, and pair sets bit-for-bit.
+
+Serve engine: the md5 kernels (MinHash signatures, the LSH prep front
+end, SimHash) run in Arrow ``mapInPandas`` workers because as JVM
+higher-order expressions they pay an interpreted lambda dispatch per
+(seed, shingle) / (bit, token), while the Python worker memoizes each
+distinct shingle's or token's digests across a batch and runs md5 at C
+speed (measured at sf0.1: ~3× on the LSH front end, 7.9× on
+``dedup_simhash``).  md5 is md5 and every comparison is over
+hex strings or exact integer sums, so the outputs are bit-identical to
+the DuckDB oracles; tokenization uses
+``functions.hashing.split_tokens``, the exact Python image of Spark's
+Java-regex ``split``.
 """
 
 from __future__ import annotations
+
+from hashlib import md5 as _md5
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.functions.hashing import (
-    minhash_signature_expr,
     shingles_expr,
-    simhash_from_md5_expr,
+    split_tokens,
     tokens_expr,
 )
+from airflow_crypto_btc_spark.operators.physical import widen_small_input
+
+#: Per-task input floor for the md5 kernels: they burn num_hashes md5
+#: calls per shingle — orders of magnitude more CPU per input byte than
+#: a BLAS pass — so even a few KB of text per task is worth a
+#: round-robin shuffle (the column-pruned scan estimate of the sf0.1
+#: documents table is ~250 KB and measured fastest at full width).
+_MD5_KERNEL_FLOOR = 8 << 10
 
 
 #: the ONE definition of content identity for exact dedup and every
@@ -68,6 +90,53 @@ def with_shingle_sets(
     )
 
 
+def _map_documents(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    fn,
+    out_schema: str,
+    out_id: str | None = None,
+) -> DataFrame:
+    """Run an md5 kernel ``fn`` (an iterator of pandas batches with
+    ``id_col``/``text_col`` → an iterator of output frames) over the
+    (id, text) projection.  The output keeps the id column's type under
+    the name ``out_id`` (default: ``id_col`` itself)."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    return widen_small_input(
+        df.select(id_col, text_col), min_bytes_per_task=_MD5_KERNEL_FLOOR
+    ).mapInPandas(fn, schema=f"`{out_id or id_col}` {id_type}, {out_schema}")
+
+
+def _minhash_row(
+    text, k_shingle: int, num_hashes: int, cache: dict[str, list[str]]
+) -> tuple[set[str], list[str] | None]:
+    """(distinct k-token shingle set, per-seed min md5 over it) for one
+    document; the mins are None for an empty set.  Seed ``j`` hashes
+    ``md5('j|shingle')``; ``cache`` memoizes each shingle's digests
+    across the batch."""
+    toks = split_tokens(text)
+    sh = {
+        " ".join(toks[i : i + k_shingle])
+        for i in range(len(toks) - k_shingle + 1)
+    }
+    mins: list[str] | None = None
+    for s in sh:
+        hx = cache.get(s)
+        if hx is None:
+            enc = s.encode("utf-8")
+            hx = cache[s] = [
+                _md5(b"%d|%s" % (j, enc)).hexdigest()
+                for j in range(num_hashes)
+            ]
+        mins = (
+            list(hx)
+            if mins is None
+            else [m if m < h else h for m, h in zip(mins, hx)]
+        )
+    return sh, mins
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -75,11 +144,90 @@ def minhash_signatures(
     k_shingle: int = 3,
     num_hashes: int = 12,
 ) -> DataFrame:
-    """(id, sig) with sig = array of num_hashes min-md5 values over the
-    shingle *set* (distinct — duplicates can't change a min, but the oracle
-    must use the same universe)."""
-    return with_shingle_sets(df, text_col, k_shingle).withColumn(
-        "sig", minhash_signature_expr("shingle_set", num_hashes)
+    """(id, sig, set_size) with sig = array of num_hashes min-md5 values
+    over the distinct k-token shingle *set* (duplicates can't change a
+    min, but the oracle must use the same universe).  A document with
+    fewer than ``k_shingle`` tokens has an empty set and an all-NULL
+    sig, as ``list_min`` over an empty list gives in the oracle."""
+    import pandas as pd
+
+    def _run(batches):
+        for pdf in batches:
+            cache: dict[str, list[str]] = {}
+            sigs, sizes = [], []
+            for txt in pdf[text_col]:
+                sh, mins = _minhash_row(txt, k_shingle, num_hashes, cache)
+                sizes.append(len(sh))
+                sigs.append(mins or [None] * num_hashes)
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "sig": sigs, "set_size": sizes}
+            )
+
+    return _map_documents(
+        df, id_col, text_col, _run, "sig array<string>, set_size long"
+    )
+
+
+def minhash_prep(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k_shingle: int = 3,
+    num_hashes: int = 12,
+    bands: int = 4,
+) -> DataFrame:
+    """One-pass front end of the LSH pair pipeline: returns
+    ``(id, band_keys, shingle_set, set_size)`` — band keys for the bucket
+    join and sorted shingle sets for the exact-Jaccard verify from a
+    SINGLE scan of the corpus.
+
+    ``band_keys[b]`` equals the oracle's ``md5(array_to_string(sig[b*r+1
+    : b*r+r], ''))`` — including the empty-shingle case, where every
+    signature entry is NULL, the join yields ``''`` and the band key
+    degenerates to ``md5('')`` (such docs all band together; see the
+    bucket cap in :func:`minhash_lsh_pairs`).
+    """
+    import pandas as pd
+
+    rows_per_band = num_hashes // bands
+    empty = [_md5(b"").hexdigest()] * bands
+
+    def _run(batches):
+        for pdf in batches:
+            cache: dict[str, list[str]] = {}
+            keys, sets_out, sizes = [], [], []
+            for txt in pdf[text_col]:
+                sh, mins = _minhash_row(txt, k_shingle, num_hashes, cache)
+                sets_out.append(sorted(sh))
+                sizes.append(len(sh))
+                keys.append(
+                    empty
+                    if mins is None
+                    else [
+                        _md5(
+                            "".join(
+                                mins[b * rows_per_band : (b + 1) * rows_per_band]
+                            ).encode()
+                        ).hexdigest()
+                        for b in range(bands)
+                    ]
+                )
+            yield pd.DataFrame(
+                {
+                    "id": pdf[id_col],
+                    "band_keys": keys,
+                    "shingle_set": sets_out,
+                    "set_size": sizes,
+                }
+            )
+
+    return _map_documents(
+        df,
+        id_col,
+        text_col,
+        _run,
+        "band_keys array<string>, shingle_set array<string>, set_size long",
+        out_id="id",
     )
 
 
@@ -90,68 +238,18 @@ def _minhash_sets_and_bands(
     k_shingle: int,
     num_hashes: int,
     bands: int,
-    kernel: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared front end of the LSH pipeline: ``(sets, banded)`` where
     ``sets`` = (id, shingle_set, set_size) and ``banded`` =
-    (id, band_idx, band_key), both lazily checkpointed (each feeds two
-    join inputs downstream and Spark has no cross-input subplan reuse).
-
-    ``kernel='hof'`` keeps everything in JVM expressions (bit-identical
-    to the DuckDB oracle SQL); ``kernel='arrow'`` computes shingle sets,
-    signatures, and band keys in ONE Arrow ``mapInPandas`` scan
-    (``operators/dedup_fast.minhash_prep_fast``) — same md5 math, so
-    band keys, set sizes, and the downstream pair/jaccard outputs are
-    bit-identical (pinned by tests/test_dedup.py).  One representational
-    difference: the Arrow kernel emits ``shingle_set`` SORTED while the
-    HOF path keeps ``array_distinct`` appearance order — harmless for
-    every computation here (intersection math is order-insensitive), but
-    a persisted index that MIXES kernels will have byte-wise-differing
-    ``sets`` rows across commits, so frame-level comparisons of index
-    tables must compare as sets, or the index should stick to one
-    kernel.  ~3× faster: the HOF path pays interpreted-lambda overhead
-    per (seed, shingle) while the Arrow kernel memoizes digests across
-    each batch.  The signature math is evaluated once per document
-    either way.
-    """
-    if kernel == "arrow":
-        from airflow_crypto_btc_spark.operators.dedup_fast import (
-            minhash_prep_fast,
-        )
-
-        prep = minhash_prep_fast(
-            df, id_col, text_col, k_shingle, num_hashes, bands
-        ).localCheckpoint(eager=False)  # ONE python scan feeds both
-        sets = prep.select("id", "shingle_set", "set_size")
-        banded = prep.select(
-            "id", F.posexplode("band_keys").alias("band_idx", "band_key")
-        )
-        return sets, banded
-    if kernel != "hof":
-        raise ValueError(f"unknown minhash kernel: {kernel!r}")
-    rows_per_band = num_hashes // bands
-    # Shingle sets: computed once and materialized (lazy local checkpoint)
-    # — they feed the signature branch AND both verify joins.  The
-    # expensive num_hashes×|shingles| signature expression is evaluated
-    # ONLY on the banding branch.  Ids + shingle sets are tiny relative to
-    # the corpus, which is exactly why an LSH index is persisted at scale.
-    sets = (
-        with_shingle_sets(df, text_col, k_shingle)
-        .select(F.col(id_col).alias("id"), "shingle_set", "set_size")
-        .localCheckpoint(eager=False)
-    )
-    base = sets.withColumn(
-        "sig", minhash_signature_expr("shingle_set", num_hashes)
-    )
-    band_arr = F.expr(
-        f"transform(sequence(0, {bands - 1}), b -> "
-        f"struct(b AS band_idx, md5(array_join(slice(sig, "
-        f"b * {rows_per_band} + 1, {rows_per_band}), '')) AS band_key))"
-    )
-    banded = (
-        base.withColumn("band", F.explode(band_arr))
-        .select("id", "band.band_idx", "band.band_key")
-        .localCheckpoint(eager=False)
+    (id, band_idx, band_key), both projections of ONE lazily
+    checkpointed :func:`minhash_prep` scan (each feeds two join inputs
+    downstream and Spark has no cross-input subplan reuse)."""
+    prep = minhash_prep(
+        df, id_col, text_col, k_shingle, num_hashes, bands
+    ).localCheckpoint(eager=False)
+    sets = prep.select("id", "shingle_set", "set_size")
+    banded = prep.select(
+        "id", F.posexplode("band_keys").alias("band_idx", "band_key")
     )
     return sets, banded
 
@@ -257,7 +355,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 12,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    kernel: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH banding + exact-Jaccard verify.
@@ -267,11 +364,6 @@ def minhash_lsh_pairs(
     candidate pairs → join back shingle sets → exact Jaccard filter.
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    ``kernel``: ``'arrow'`` (default — one vectorized scan produces band
-    keys AND shingle sets) or ``'hof'`` (pure JVM expressions, 1:1 with
-    the DuckDB oracle SQL).  Both are bit-identical; see
-    :func:`_minhash_sets_and_bands`.
-
     ``max_bucket_size``: optional skew guard — buckets above the cap are
     skipped (and reportable via :func:`minhash_lsh_skipped_buckets`)
     instead of joined quadratically.  None = no cap, exact LSH semantics;
@@ -280,7 +372,7 @@ def minhash_lsh_pairs(
     band keys, so only documents degenerate in EVERY band are lost.
     """
     sets, banded = _minhash_sets_and_bands(
-        df, id_col, text_col, k_shingle, num_hashes, bands, kernel
+        df, id_col, text_col, k_shingle, num_hashes, bands
     )
     return _verified_minhash_pairs(
         sets, banded, jaccard_threshold, max_bucket_size
@@ -296,7 +388,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = 12,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    kernel: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with AT LEAST ONE endpoint in the delta — the
@@ -330,7 +421,7 @@ def minhash_lsh_pairs_incremental(
     capped run.
     """
     sets, banded = _minhash_sets_and_bands(
-        df, id_col, text_col, k_shingle, num_hashes, bands, kernel
+        df, id_col, text_col, k_shingle, num_hashes, bands
     )
     delta_ids = (
         df.filter(delta_filter)
@@ -395,7 +486,6 @@ def build_minhash_index(
     k_shingle: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    kernel: str = "arrow",
 ) -> None:
     """Materialize the LSH index (shingle sets + band keys) into a pair
     of snapshot tables, recording ``source_version`` — the corpus
@@ -421,7 +511,7 @@ def build_minhash_index(
     from airflow_crypto_btc_spark.sources.snapshot_table import overwrite
 
     sets, banded = _minhash_sets_and_bands(
-        df, id_col, text_col, k_shingle, num_hashes, bands, kernel
+        df, id_col, text_col, k_shingle, num_hashes, bands
     )
     banded = banded.withColumn("bkn", F.xxhash64("band_idx", "band_key"))
     meta = {"source_version": source_version}
@@ -436,17 +526,15 @@ def minhash_band_rows(
     k_shingle: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, band_idx, band_key) band rows recomputed from raw text —
     deterministic md5 math, bit-identical to what the index holds for
-    the same documents (pinned by the kernel-parity tests).  The DELTA's
-    rows are |Δ|-sized to compute; pass them as ``delta_banded`` to
-    :func:`minhash_lsh_pairs_from_index_tables` so the probe can
-    file-prune the bands table WITHOUT first scanning it to learn the
-    delta's bucket keys."""
+    the same documents.  The DELTA's rows are |Δ|-sized to compute; pass
+    them as ``delta_banded`` to :func:`minhash_lsh_pairs_from_index_tables`
+    so the probe can file-prune the bands table WITHOUT first scanning it
+    to learn the delta's bucket keys."""
     _, banded = _minhash_sets_and_bands(
-        df, id_col, text_col, k_shingle, num_hashes, bands, kernel
+        df, id_col, text_col, k_shingle, num_hashes, bands
     )
     return banded
 
@@ -525,7 +613,6 @@ def minhash_lsh_skipped_buckets(
     k_shingle: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    kernel: str = "arrow",
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Accounting side of the bucket cap: the (band_idx, band_key,
@@ -533,7 +620,7 @@ def minhash_lsh_skipped_buckets(
     given cap — run it alongside a capped dedup pass so the skipped mass
     is observable, not silent."""
     _, banded = _minhash_sets_and_bands(
-        df, id_col, text_col, k_shingle, num_hashes, bands, kernel
+        df, id_col, text_col, k_shingle, num_hashes, bands
     )
     return (
         banded.groupBy("band_idx", "band_key")
@@ -773,40 +860,36 @@ def simhash_fingerprints(
 ) -> DataFrame:
     """(id, simhash): sign-aggregated token-hash fingerprint; near-dups
     differ in few bits (compare via hamming distance on the bigint).
+    Bit i (``bits`` ≤ 32, one md5 hex digit per bit) is set when the
+    ±1 votes of the tokens — +1 when hex digit i of md5(token) is odd —
+    sum to > 0; ties go to 0.  Each distinct token's vote vector is
+    computed once per batch."""
+    import numpy as np
+    import pandas as pd
 
-    Round-15: delegates to the Arrow kernel
-    (``dedup_fast.simhash_fingerprints_fast``) — bit-identical by
-    construction (md5 is md5; the ±1 parity sums are exact integers)
-    and already frame-equality-pinned in tests/test_properties.py.
-    The HOF expression form measured ~10 s combined on the two simhash
-    bench lines at sf0.1, all of it interpreted lambda dispatch over
-    16×|tokens| hex-digit probes (a packed-parity rewrite of the BODY
-    lost — dispatch, not body, dominates; r14 opt record), which is
-    exactly the §4 boundary the Arrow twin removes.
-    ``simhash_fingerprints_hof`` below is the parity reference."""
-    from airflow_crypto_btc_spark.operators.dedup_fast import (
-        simhash_fingerprints_fast,
-    )
+    parity = {c: int(c, 16) & 1 for c in "0123456789abcdef"}
 
-    return simhash_fingerprints_fast(df, id_col, text_col, bits)
+    def _run(batches):
+        for pdf in batches:
+            cache: dict[str, np.ndarray] = {}
+            out = []
+            for txt in pdf[text_col]:
+                sums = np.zeros(bits, dtype=np.int64)
+                for t in split_tokens(txt):
+                    p = cache.get(t)
+                    if p is None:
+                        hx = _md5(t.encode("utf-8")).hexdigest()
+                        p = cache[t] = np.array(
+                            [1 if parity[hx[i]] else -1 for i in range(bits)],
+                            dtype=np.int64,
+                        )
+                    sums += p
+                out.append(
+                    int(sum(1 << i for i in range(bits) if sums[i] > 0))
+                )
+            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
 
-
-def simhash_fingerprints_hof(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 16,
-) -> DataFrame:
-    """The original pure-expression SimHash (kept as the Arrow twin's
-    parity reference).  Token md5s are hoisted into their own projection
-    so each token is digested once, not once per bit — same
-    fingerprints, 16× less hashing."""
-    return (
-        df.withColumn("tokens", tokens_expr(text_col))
-        .withColumn("tok_md5", F.expr("transform(tokens, t -> md5(t))"))
-        .withColumn("simhash", simhash_from_md5_expr("tok_md5", bits))
-        .select(F.col(id_col), "simhash")
-    )
+    return _map_documents(df, id_col, text_col, _run, "simhash long")
 
 
 def simhash_near_dup_pairs(
@@ -868,9 +951,9 @@ def banded_hamming_pairs(
     n_bands = max_hamming + 1
     band_width = bits // n_bands
     # fp must be STORED before the band explode: Generate inlines a
-    # lazy fp expression (the simhash nested-aggregate HOF for the
-    # text path) and re-evaluates it per exploded band row — the same
-    # explode-inlining cliff measured at 12× on the shingle path
+    # lazy fp expression (e.g. the payload block hash) and re-evaluates
+    # it per exploded band row — the same explode-inlining cliff
+    # measured at 12× on the shingle path
     fps = fps.localCheckpoint(eager=False)
 
     band_arr = F.expr(

@@ -239,14 +239,10 @@ def viterbi_segment(
     columns plus (seg, lp): NULL seg means no segmentation exists (a
     char outside the piece set — the caller's [UNK] case).
 
-    Round-15 note (measured, then kept HOF): an Arrow twin exists
-    (``tokenize_fast.viterbi_segment_fast``, parity-pinned) but LOST at
-    sf0.1 — the fixture corpus has ~31 distinct words, so the DP is
-    nearly free in any engine and the twin's extra model collect +
-    Python worker pass per call only added job barriers
-    (text_unigram_encode 3.2 → 5.3 s).  The expression form stays the
-    serve path; the twin remains for corpora whose DISTINCT-WORD table
-    is the real cost."""
+    Served as a JVM expression because an Arrow form measured slower
+    at sf0.1 (text_unigram_encode 3.2 → 5.3 s): the distinct-word table
+    is small, so its extra model collect and Python pass cost more than
+    the DP."""
     dp = _viterbi_expr(word_col, max_piece_len)
     return (
         words.crossJoin(F.broadcast(_scores_map(scored)))
@@ -257,11 +253,6 @@ def viterbi_segment(
             F.expr("__t.score").alias("lp"),
         )
     )
-
-
-#: parity-reference alias for tests/test_tokenize_fast.py — the HOF
-#: form IS the serve path (see the round-15 note above)
-viterbi_segment_hof = viterbi_segment
 
 
 def _em_round(

@@ -31,7 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.functions.hashing import tokens_expr
+from airflow_crypto_btc_spark.functions.hashing import (
+    split_tokens,
+    tokens_expr,
+)
 
 
 def vocab_build(
@@ -268,6 +271,7 @@ _BPE_MARK = "\x1f"
 #: separator the oracle uses as its empty-census sentinel (chr 30) —
 #: both are non-whitespace control chars no real tokenizer input carries
 _BPE_SCRUB = "\x1f\x1e"
+_BPE_SCRUB_TABLE = str.maketrans("", "", _BPE_SCRUB)
 
 
 def _bpe_seq_expr(word_col: str) -> F.Column:
@@ -363,14 +367,6 @@ def bpe_train(
             ),
         ).localCheckpoint(eager=False)
     return out
-
-
-def _bpe_apply_merge(syms: list[str], l: str, r: str) -> list[str]:
-    """Canonical greedy left-to-right merge of one pair in a symbol
-    list: each match consumes both symbols (the merged token never
-    re-pairs within the same step) — exactly the semantics of the
-    marker-encoded string replace both engines run."""
-    return _bpe_merge_deltas(syms, l, r)[0]
 
 
 def _bpe_merge_deltas(
@@ -557,7 +553,7 @@ def encode_from_bpe(
 ) -> DataFrame:
     """Frozen-tokenizer encode: load the persisted merge list (a few
     rows — the model is kilobytes) and apply it to every document in
-    one scan projection.  Serving never retrains; a merge-table rebuild
+    one scan.  Serving never retrains; a merge-table rebuild
     under a caller expecting the old generation is refused by
     metadata."""
     return bpe_encode_counts(
@@ -568,31 +564,30 @@ def encode_from_bpe(
     )
 
 
+def _bpe_count_word(w: str, merges) -> int:
+    """Post-merge symbol count of one (already-scrubbed) word through
+    the marker-string pipeline the oracle runs, string op for string op:
+    build the spaced marker-terminated sequence (:func:`_bpe_seq_expr`),
+    apply each merge as a literal left-to-right replace in training
+    order, count = ``size(split(btrim(s), ' '))``.  An empty-after-scrub
+    word follows the SQL idiom's ``sequence(1, 0) = [1, 0]`` quirk, so
+    parity holds on every input, not just clean ones."""
+    if w:
+        parts = [c + _BPE_MARK for c in w]
+    else:
+        # sequence(1, length('')) = sequence(1, 0) = [1, 0]: two
+        # substr('', …) = '' elements, each marker-terminated
+        parts = [_BPE_MARK, _BPE_MARK]
+    s = " " + " ".join(parts) + " " + _BPE_EOW + _BPE_MARK
+    for _step, left, right, _pc in merges:
+        s = s.replace(
+            f" {left}{_BPE_MARK} {right}{_BPE_MARK}",
+            f" {left}{right}{_BPE_MARK}",
+        )
+    return len(s.strip(" ").split(" "))
+
+
 def bpe_encode_counts(
-    docs: DataFrame,
-    merges,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Encode every document with a trained merge list and report
-    (id, n_words, n_bpe_tokens).
-
-    Round-15: delegates to the Arrow kernel
-    (``tokenize_fast.bpe_counts_fast``), which replicates the
-    marker-string replace chain string-op for string-op but evaluates
-    it once per DISTINCT word per batch instead of once per word
-    instance per document (the expression form below re-derived the
-    whole merge chain for every token of every row).
-    ``bpe_encode_counts_hof`` is the original expression form, kept as
-    the parity reference (tests/test_tokenize_fast.py)."""
-    from airflow_crypto_btc_spark.operators.tokenize_fast import (
-        bpe_counts_fast,
-    )
-
-    return bpe_counts_fast(docs, merges, id_col=id_col, text_col=text_col)
-
-
-def bpe_encode_counts_hof(
     docs: DataFrame,
     merges,
     id_col: str = "doc_id",
@@ -603,42 +598,53 @@ def bpe_encode_counts_hof(
     training-batch planner reads (subword counts, not whitespace
     counts, decide packing budgets).
 
-    One pure per-row projection: each word becomes its spaced,
-    marker-terminated symbol string (see ``_BPE_MARK`` — the marker is
-    the non-consuming right boundary that makes repeated-symbol runs
-    merge canonically), the merges apply as a chain of literal
-    ``replace`` calls IN TRAINING ORDER (BPE's apply rule), and the
-    token count is the sum of the words' post-merge symbol counts.  No
-    shuffle, no UDF — the merge chain compiles into the scan
-    projection, so encoding 100 TB is exactly one pass."""
-    # the control-char scrub is hoisted into the token list (ONE
-    # translate per word) — inlining it as `substr(translate(w,..),i,1)`
-    # would re-evaluate the translate per CHARACTER inside the lambda
-    word_tok = (
-        f"concat(' ', concat_ws(' ', "
-        f"transform(sequence(1, length(w)), "
-        f"i -> concat(substr(w, i, 1), '{_BPE_MARK}'))), "
-        f"' {_BPE_EOW}{_BPE_MARK}')"
-    )
-    expr = word_tok
-    for _, left, right, _pc in merges:
-        # literal (non-regex) replace; merge order is the apply order
-        sl = left.replace("\\", "\\\\").replace("'", "\\'")
-        sr = right.replace("\\", "\\\\").replace("'", "\\'")
-        expr = (
-            f"replace({expr}, ' {sl}{_BPE_MARK} {sr}{_BPE_MARK}', "
-            f"' {sl}{sr}{_BPE_MARK}')"
-        )
-    per_word = f"size(split(btrim({expr}), ' '))"
-    toks_sql = (
-        f"transform(filter(split({text_col}, '\\\\s+'), t -> t != ''), "
-        f"t -> translate(t, '{_BPE_SCRUB}', ''))"
-    )
-    return docs.select(
-        F.col(id_col),
-        F.size(tokens_expr(text_col)).cast("long").alias("n_words"),
-        F.expr(
-            f"aggregate(transform({toks_sql}, w -> {per_word}), "
-            f"cast(0 as bigint), (acc, x) -> acc + cast(x as bigint))"
-        ).cast("long").alias("n_bpe_tokens"),
+    Each word becomes its spaced, marker-terminated symbol string (see
+    ``_BPE_MARK`` — the marker is the non-consuming right boundary that
+    makes repeated-symbol runs merge canonically), the merges apply as
+    literal replaces IN TRAINING ORDER (BPE's apply rule), and the
+    token count is the sum of the words' post-merge symbol counts.
+
+    Served by an Arrow ``mapInPandas`` kernel: the merge chain runs once
+    per DISTINCT word per batch (dict memo) instead of once per word
+    instance — as a JVM expression it re-derived the whole chain for
+    every token of every row (3.2× slower at sf0.1).  The merge list
+    is a driver-side Python list in every caller (the persisted model
+    is kilobytes).  A NULL text gives n_words -1 and a NULL count, as
+    ``size``/``aggregate`` over ``split(NULL)`` do."""
+    import pandas as pd
+
+    mg = [tuple(m) for m in merges]
+
+    def _run(batches):
+        memo: dict[str, int] = {}
+        for pdf in batches:
+            n_words: list[int] = []
+            n_bpe: list[int | None] = []
+            for txt in pdf[text_col]:
+                if not isinstance(txt, str):
+                    n_words.append(-1)
+                    n_bpe.append(None)
+                    continue
+                toks = split_tokens(txt)
+                n_words.append(len(toks))
+                total = 0
+                for t in toks:
+                    w = t.translate(_BPE_SCRUB_TABLE)
+                    c = memo.get(w)
+                    if c is None:
+                        c = memo[w] = _bpe_count_word(w, mg)
+                    total += c
+                n_bpe.append(total)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "n_words": n_words,
+                    "n_bpe_tokens": pd.array(n_bpe, dtype="Int64"),
+                }
+            )
+
+    id_type = docs.schema[id_col].dataType.simpleString()
+    return docs.select(id_col, text_col).mapInPandas(
+        _run,
+        schema=f"`{id_col}` {id_type}, n_words long, n_bpe_tokens long",
     )

@@ -183,12 +183,10 @@ def wordpiece_segment(
     segment the same way.  Returns (word, pieces_str, n_pieces,
     is_unk).
 
-    Round-15 note (measured, then kept HOF): an Arrow twin exists
-    (``tokenize_fast.wordpiece_segment_fast``, parity-pinned) but LOST
-    at sf0.1 — the fixture corpus has ~31 distinct words, so the walk
-    is nearly free in any engine and the twin's extra vocab collect +
-    Python pass per call only added job barriers (wordpiece_encode
-    1.8 → 2.8 s).  The expression form stays the serve path."""
+    Served as a JVM expression because an Arrow form measured slower
+    at sf0.1 (text_wordpiece_encode 1.8 → 2.8 s): the distinct-word
+    table is small, so its extra vocab collect and Python pass cost
+    more than the walk."""
     jumps = (
         f"transform(sequence(1, length({word_col})), p -> "
         f"array_max(filter(sequence(1, least({max_piece_len}, "
@@ -426,8 +424,3 @@ def wordpiece_encode_from_model(
         text_col,
         byte_fallback=byte_fallback,
     )
-
-
-#: parity-reference alias for tests/test_tokenize_fast.py — the HOF
-#: form IS the serve path (see the round-15 note in wordpiece_segment)
-wordpiece_segment_hof = wordpiece_segment

@@ -284,7 +284,7 @@ def q_dedup_minhash_signature(spark, sf_dir):
     return out.select(
         "doc_id",
         F.expr("array_join(sig, '|')").alias("sig"),
-        F.col("set_size").cast("long").alias("set_size"),
+        "set_size",
     )
 
 

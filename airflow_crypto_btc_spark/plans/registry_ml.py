@@ -17,10 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.dedup_fast import (
-    minhash_signatures_fast,
-    simhash_fingerprints_fast,
-)
 from airflow_crypto_btc_spark.operators.similarity import (
     ivf_topk,
     kmeans_centroid_arrays,
@@ -228,28 +224,6 @@ def _semantic_purge_trained_sql(threshold: float = 0.3) -> str:
     SELECT assigned.id AS vec_id, cid, dup_of, dup_of IS NULL AS keep
     FROM assigned LEFT JOIN dups ON assigned.id = dups.id_dup
 """
-
-
-def q_dedup_minhash_signature_fast(spark, sf_dir):
-    return minhash_signatures_fast(load_table(spark, sf_dir, "documents"))
-
-
-def q_dedup_simhash_fast(spark, sf_dir):
-    return simhash_fingerprints_fast(load_table(spark, sf_dir, "documents"))
-
-
-def _exact_twin_sql():
-    """The vectorized twins are md5-exact (no float associativity), so they
-    share the HOF operators' DuckDB oracles verbatim."""
-    from airflow_crypto_btc_spark.plans.registry_ext import (
-        _SQL_DEDUP_MINHASH_SIGNATURE,
-        _SQL_DEDUP_SIMHASH,
-    )
-
-    return _SQL_DEDUP_MINHASH_SIGNATURE, _SQL_DEDUP_SIMHASH
-
-
-_SQL_MINHASH_SIG, _SQL_SIMHASH = _exact_twin_sql()
 
 
 # ------------------------------------------- int8 quantization (PQ-lite)
@@ -943,10 +917,6 @@ ML_REGISTRY: dict[str, QuerySpec] = {
     "dedup_semantic_purge_trained": QuerySpec(
         q_dedup_semantic_purge_trained, _semantic_purge_trained_sql()
     ),
-    "dedup_minhash_signature_fast": QuerySpec(
-        q_dedup_minhash_signature_fast, _SQL_MINHASH_SIG
-    ),
-    "dedup_simhash_fast": QuerySpec(q_dedup_simhash_fast, _SQL_SIMHASH),
 }
 
 

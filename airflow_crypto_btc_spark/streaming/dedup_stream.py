@@ -8,7 +8,7 @@ each micro-batch of documents
 1. drops ids the index already holds (re-delivery / within-batch
    duplicates) by anti-joining the last-committed index table,
 2. computes the survivors' index rows (one Arrow scan,
-   ``operators/dedup_fast.minhash_prep_fast``),
+   ``operators/dedup.minhash_prep``),
 3. probes the committed index ∪ the batch rows for pairs with at least
    one batch endpoint, then commits bands, sets, and pairs in that
    order under txn ids ``<query>:<batch_id>:bands`` / ``:sets`` /
@@ -55,8 +55,8 @@ from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.dedup import (
     minhash_lsh_pairs_from_index,
+    minhash_prep,
 )
-from airflow_crypto_btc_spark.operators.dedup_fast import minhash_prep_fast
 from airflow_crypto_btc_spark.operators.incremental import (
     ConcurrentMaintenanceError,
 )
@@ -193,7 +193,7 @@ def near_dup_index_sink(
                 fresh[id_col] == F.col("_indexed_id"),
                 "left_anti",
             )
-        prep = minhash_prep_fast(
+        prep = minhash_prep(
             fresh, id_col, text_col, k_shingle, num_hashes, bands
         ).localCheckpoint(eager=False)  # one Arrow scan feeds everything
         # the sets table records each id's content digest at index time —

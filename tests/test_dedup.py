@@ -127,56 +127,60 @@ def test_simhash_banding_finds_all_close_pairs(spark, sf_dir):
     assert banded == brute
 
 
-def test_fast_twins_match_hof_operators(spark, sf_dir):
-    """mapInPandas twins are md5-exact: frame equality with the HOF path
-    on the real documents fixture (CJK whitespace included)."""
-    from pyspark.sql import functions as F
-
-    from airflow_crypto_btc_spark.operators.dedup import (
+def test_md5_kernels_match_hof_references(spark, sf_dir):
+    """The Arrow MinHash and SimHash kernels are md5-exact: row equality
+    with their JVM-expression forms on the real documents fixture (CJK
+    whitespace included)."""
+    from kernel_reference import (
+        minhash_signatures_hof,
         simhash_fingerprints_hof,
     )
-    from airflow_crypto_btc_spark.operators.dedup_fast import (
-        minhash_signatures_fast,
-        simhash_fingerprints_fast,
-    )
+
     from airflow_crypto_btc_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-
-    hof_mh = (
-        minhash_signatures(docs)
-        .select(
-            "doc_id",
-            F.expr("array_join(sig, '|')").alias("sig"),
-            F.col("set_size").cast("long").alias("set_size"),
-        )
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # below k_shingle tokens: empty shingle set, all-NULL signature
+    docs = docs.unionByName(
+        spark.createDataFrame([(-1, "two words"), (-2, "")], docs.schema)
     )
-    fast_mh = (
-        minhash_signatures_fast(docs)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert hof_mh.equals(fast_mh)
 
-    # round-15: dedup.simhash_fingerprints DELEGATES to the fast
-    # kernel, so the parity pin runs against the retained HOF form
-    hof_sh = (
+    def rows(df):
+        return {r[0]: tuple(r[1:]) for r in df.collect()}
+
+    mh = rows(minhash_signatures(docs))
+    assert mh == rows(minhash_signatures_hof(docs))
+    assert mh[-1] == ([None] * 12, 0)
+    assert rows(simhash_fingerprints(docs)) == rows(
         simhash_fingerprints_hof(docs)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
     )
-    fast_sh = (
-        simhash_fingerprints_fast(docs)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
+
+
+def test_kernels_keep_the_callers_id_column(spark):
+    """A non-default ``id_col`` names the output id column: SimHash pair
+    generation over a string ``url`` id finds the same pairs as the
+    ``doc_id`` run, and the signature/fingerprint frames carry ``url``."""
+    from airflow_crypto_btc_spark.operators.dedup import (
+        simhash_near_dup_pairs,
     )
-    assert hof_sh.equals(fast_sh)
+
+    by_id = spark.createDataFrame(DOCS, "doc_id long, text string")
+    by_url = spark.createDataFrame(
+        [(f"https://x/{i}", t) for i, t in DOCS], "url string, text string"
+    )
+    want = {
+        (f"https://x/{r['id_a']}", f"https://x/{r['id_b']}", r["hamming"])
+        for r in simhash_near_dup_pairs(by_id).collect()
+    }
+    got = {
+        tuple(r) for r in simhash_near_dup_pairs(by_url, id_col="url").collect()
+    }
+    assert got == want and got
+    assert simhash_fingerprints(by_url, id_col="url").columns == [
+        "url", "simhash",
+    ]
+    assert minhash_signatures(by_url, id_col="url").columns == [
+        "url", "sig", "set_size",
+    ]
 
 
 def test_near_dup_clusters_multi_hop_chain(spark):
@@ -208,25 +212,28 @@ def test_near_dup_clusters_no_pairs_all_singletons(spark):
     assert all(r.doc_id == r.cluster_id for r in got) and len(got) == 4
 
 
-def test_lsh_kernels_bit_identical(spark, sf_dir):
-    """The Arrow prep kernel (default) and the HOF expression kernel must
-    produce the SAME pair set with the SAME jaccard values — same md5
-    math, different execution engine."""
+def test_lsh_pairs_match_duckdb_oracle(spark, sf_dir):
+    """The served LSH pipeline (Arrow prep scan → bucket join → exact
+    Jaccard) produces the DuckDB oracle's pair set with the same
+    jaccard values on the documents fixture."""
+    import duckdb
+
+    from airflow_crypto_btc_spark.plans.registry_ext import lsh_pairs_sql
     from airflow_crypto_btc_spark.sources.tables import load_table
 
-    d = load_table(spark, sf_dir, "documents")
-    hof = (
-        minhash_lsh_pairs(d, kernel="hof")
-        .orderBy("id_a", "id_b")
-        .toPandas()
+    got = sorted(
+        tuple(r)
+        for r in minhash_lsh_pairs(
+            load_table(spark, sf_dir, "documents")
+        ).collect()
     )
-    arrow = (
-        minhash_lsh_pairs(d, kernel="arrow")
-        .orderBy("id_a", "id_b")
-        .toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{sf_dir}/documents.parquet'"
     )
-    assert len(hof) > 0
-    assert hof.equals(arrow)
+    want = sorted(tuple(r) for r in con.execute(lsh_pairs_sql()).fetchall())
+    assert got == want and got
 
 
 def test_lsh_bucket_cap_bounds_pairs(spark):
@@ -340,24 +347,24 @@ def test_two_star_raises_when_budget_too_small(spark):
         _two_star_components(pairs, max_iterations=1)
 
 
-def test_arrow_kernel_supports_string_ids(spark):
-    """kernel='arrow' is the default, so the generic id_col contract
-    (any orderable id type) must survive the mapInPandas schema."""
+def test_lsh_pairs_string_ids_match_long_ids(spark):
+    """The generic id_col contract (any orderable id type) survives the
+    Arrow kernel's schema: string ids pair up exactly like long ids."""
     from airflow_crypto_btc_spark.operators.dedup import minhash_lsh_pairs
 
-    docs = spark.createDataFrame(
-        [(f"url-{i}", t) for i, (_, t) in enumerate(DOCS)],
-        "doc_id string, text string",
+    def pairs(docs, key):
+        return {
+            (frozenset((key(r["id_a"]), key(r["id_b"]))), r["jaccard"])
+            for r in minhash_lsh_pairs(docs).collect()
+        }
+
+    by_long = spark.createDataFrame(DOCS, "doc_id long, text string")
+    by_str = spark.createDataFrame(
+        [(f"url-{i}", t) for i, t in DOCS], "doc_id string, text string"
     )
-    arrow = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(docs).collect()
-    }
-    hof = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(docs, kernel="hof").collect()
-    }
-    assert arrow == hof and arrow  # non-empty and kernel-identical
+    want = pairs(by_long, int)
+    assert pairs(by_str, lambda s: int(s.removeprefix("url-"))) == want
+    assert want
 
 
 def test_incremental_pairs_decomposition(spark, sf_dir):
@@ -405,9 +412,7 @@ def test_incremental_pairs_from_persisted_index(spark, sf_dir, tmp_path):
     from airflow_crypto_btc_spark.operators.dedup import (
         minhash_lsh_pairs_from_index,
         minhash_lsh_pairs_incremental,
-    )
-    from airflow_crypto_btc_spark.operators.dedup_fast import (
-        minhash_prep_fast,
+        minhash_prep,
     )
     from airflow_crypto_btc_spark.sources.snapshot_table import (
         append,
@@ -420,7 +425,7 @@ def test_incremental_pairs_from_persisted_index(spark, sf_dir, tmp_path):
     bands_tbl = str(tmp_path / "lsh_bands")
 
     def index_rows(d):
-        prep = minhash_prep_fast(d)
+        prep = minhash_prep(d)
         sets = prep.select("id", "shingle_set", "set_size")
         bands = prep.select(
             "id", F.posexplode("band_keys").alias("band_idx", "band_key")

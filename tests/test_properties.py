@@ -393,36 +393,28 @@ _texts = st.lists(
 @given(texts=_texts)
 @settings(**_SETTINGS)
 def test_minhash_kernels_agree_on_arbitrary_text(spark, texts):
-    """The Arrow prep kernel and the HOF expression kernel must emit
+    """The Arrow prep kernel and the JVM-expression reference must emit
     identical (band_keys, set_size) for ANY document — the tokenizer
     parity (Java \\s vs Python \\s) is exactly what random unicode
     whitespace attacks."""
     from pyspark.sql import functions as F
 
-    from airflow_crypto_btc_spark.functions.hashing import (
-        minhash_signature_expr,
-    )
-    from airflow_crypto_btc_spark.operators.dedup import with_shingle_sets
-    from airflow_crypto_btc_spark.operators.dedup_fast import (
-        minhash_prep_fast,
-    )
+    from kernel_reference import minhash_signatures_hof
+
+    from airflow_crypto_btc_spark.operators.dedup import minhash_prep
 
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    hof = (
-        with_shingle_sets(df)
-        .withColumn("sig", minhash_signature_expr("shingle_set", 12))
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(sequence(0, 3), b -> "
-                "md5(array_join(slice(sig, b * 3 + 1, 3), '')))"
-            ).alias("band_keys"),
-            F.col("set_size").cast("long").alias("set_size"),
-        )
+    hof = minhash_signatures_hof(df).select(
+        "doc_id",
+        F.expr(
+            "transform(sequence(0, 3), b -> "
+            "md5(array_join(slice(sig, b * 3 + 1, 3), '')))"
+        ).alias("band_keys"),
+        "set_size",
     )
-    fast = minhash_prep_fast(df).select(
+    fast = minhash_prep(df).select(
         F.col("id").alias("doc_id"), "band_keys", "set_size"
     )
     lhs = {r["doc_id"]: (r["band_keys"], r["set_size"])
@@ -435,22 +427,19 @@ def test_minhash_kernels_agree_on_arbitrary_text(spark, texts):
 @given(texts=_texts)
 @settings(**_SETTINGS)
 def test_simhash_twin_agrees_on_arbitrary_text(spark, texts):
+    from kernel_reference import simhash_fingerprints_hof
+
     from airflow_crypto_btc_spark.operators.dedup import (
-        simhash_fingerprints_hof,
-    )
-    from airflow_crypto_btc_spark.operators.dedup_fast import (
-        simhash_fingerprints_fast,
+        simhash_fingerprints,
     )
 
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    # round-15: dedup.simhash_fingerprints now DELEGATES to the fast
-    # kernel, so the parity pin runs against the retained HOF form
     lhs = {r["doc_id"]: r["simhash"]
            for r in simhash_fingerprints_hof(df).collect()}
     rhs = {r["doc_id"]: r["simhash"]
-           for r in simhash_fingerprints_fast(df).collect()}
+           for r in simhash_fingerprints(df).collect()}
     assert lhs == rhs
 
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from kernel_reference import py_greedy, py_viterbi
+
 SETTINGS = dict(
     max_examples=5,
     deadline=None,
@@ -31,23 +33,6 @@ _piece_pool = st.lists(
 )
 
 
-def _py_greedy(word: str, vocab: set[str], maxl: int):
-    """Reference WordPiece MaxMatch: longest piece at each position,
-    ## continuation namespace, whole-word UNK on any miss."""
-    pos, pieces = 0, []
-    while pos < len(word):
-        for ln in range(min(maxl, len(word) - pos), 0, -1):
-            cand = word[pos : pos + ln]
-            key = cand if pos == 0 else "##" + cand
-            if key in vocab:
-                pieces.append(key)
-                pos += ln
-                break
-        else:
-            return ["[UNK]"], True
-    return pieces, False
-
-
 @given(words=_words, pool=_piece_pool)
 @settings(**SETTINGS)
 def test_wordpiece_segment_matches_python_greedy(spark, words, pool):
@@ -66,7 +51,7 @@ def test_wordpiece_segment_matches_python_greedy(spark, words, pool):
         for r in wordpiece_segment(wdf, vdf, max_piece_len=3).collect()
     }
     for w in words:
-        pieces, unk = _py_greedy(w, vocab, 3)
+        pieces, unk = py_greedy(w, vocab, 3)
         assert got[w] == (" ".join(pieces), unk), w
 
 
@@ -229,23 +214,6 @@ def _py_half_away(x: float) -> int:
     return math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)
 
 
-def _py_viterbi(word: str, scores: dict[str, int], maxl: int):
-    """Reference Viterbi DP with the engines' (score, l, seg)
-    tie-break; None = no segmentation."""
-    dp = [None] * (len(word) + 1)
-    dp[0] = (0, 0, "")
-    for i in range(1, len(word) + 1):
-        cands = []
-        for ln in range(1, min(maxl, i) + 1):
-            prev = dp[i - ln]
-            piece = word[i - ln : i]
-            if prev is not None and piece in scores:
-                seg = piece if i == ln else prev[2] + " " + piece
-                cands.append((prev[0] + scores[piece], ln, seg))
-        dp[i] = max(cands) if cands else None
-    return dp[len(word)]
-
-
 def _py_unigram_train(
     word_counts: dict[str, int],
     size: int,
@@ -286,7 +254,7 @@ def _py_unigram_train(
         }
         vcnt: dict[str, int] = {}
         for w, c in word_counts.items():
-            t = _py_viterbi(w, scores, maxl)
+            t = py_viterbi(w, scores, maxl)
             if t is None:
                 continue
             for piece in t[2].split(" "):
@@ -332,7 +300,7 @@ def test_unigram_viterbi_matches_python_dp(spark, words, pool):
         for r in viterbi_segment(wdf, sdf, max_piece_len=3).collect()
     }
     for w in words:
-        t = _py_viterbi(w, pool, 3)
+        t = py_viterbi(w, pool, 3)
         want = (None, None) if t is None else (t[2], t[0])
         assert got[w] == want, w
 
