@@ -33,11 +33,6 @@ def ts_to_iso(col: Column | str) -> Column:
     return F.date_format(col, ISO_FMT)
 
 
-def iso_to_ts(col: Column | str) -> Column:
-    """F5: ISO string → timestamp."""
-    return F.to_timestamp(col, ISO_FMT)
-
-
 def cast_double(col: Column | str) -> Column:
     """F3: numeric-as-string (Binance klines) → double."""
     return (F.col(col) if isinstance(col, str) else col).cast("double")

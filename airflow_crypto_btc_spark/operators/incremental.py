@@ -36,8 +36,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_STATE_COLS = ("open_ts", "open", "high", "low", "close_ts", "close", "n_obs")
-
 
 class ConcurrentMaintenanceError(RuntimeError):
     """Another maintenance run advanced the state table's high-water mark

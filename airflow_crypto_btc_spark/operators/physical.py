@@ -59,14 +59,10 @@ def widen_small_input(df, min_bytes_per_task: int = 16 << 10):
     ``sizeInBytes`` is divided by ``min_bytes_per_task`` and clamped to
     the default parallelism, so a kilobyte-scale input is never
     round-robin-shuffled into 32 near-empty Python workers whose fixed
-    per-task cost exceeds the kernel win (measured: the unconditional
-    form regressed the BLAS cosine kernel 0.38 → 0.63 s at sf0.1 by
-    shuffling a 0.8 MB single-file table).  Callers tune the floor to
-    their kernel's per-byte cost: CPU-heavy kernels (md5 shingling —
-    many hashes per input byte) keep the small default; cheap vectorized
-    kernels (one BLAS matmul pass) pass a floor in the megabytes so
-    widening waits until the input is big enough to amortize the
-    shuffle.
+    per-task cost exceeds the kernel win.  Callers tune the floor to
+    their kernel's per-byte cost: the md5 kernels in ``dedup`` (many
+    hashes per input byte) pass their own small floor; the PQ encode
+    and scoring kernels keep the default.
 
     Guards:
 

@@ -16,6 +16,12 @@ Determinism for the oracle: element products are exact (float→double
 widening then IEEE multiply); only the sum order differs between engines,
 so cosines are rounded to 6 decimals on both sides *before* ranking, with
 the neighbor id as tie-break.
+
+Kernels: every operator evaluates vectors with ONE form — the sequential
+HOF folds ``dot_expr``/``norm2_expr`` and the md5-in-HOF
+:func:`hyperplane_bucket_expr`; no operator probes the vector width.  The
+only exception is PQ codebook training, whose sub-vector width is fixed
+when the plan is built, so it uses the bit-identical unrolled twins.
 """
 
 from __future__ import annotations
@@ -49,21 +55,17 @@ def cosine_topk(
     # Norms are per-vector, so hoist them out of the pair loop: |q|·|v|
     # pairs each evaluate only the dot product, not three O(d) folds.
     # sqrt(norm2) is the same double either way — bit-identical cosines.
-    # The dot itself takes the unrolled codegen'd form when the width is
-    # probeable (value-identical; the |q|·|v| pair loop is exactly where
-    # interpreted-lambda dispatch costs show up).
-    dot, nrm2, _ = _vector_kernels(vectors, vec_col)
     q = vectors.filter(query_filter).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
-    ).withColumn("qn", F.sqrt(nrm2("qe")))
+    ).withColumn("qn", F.sqrt(norm2_expr("qe")))
     v = vectors.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
-    ).withColumn("vn", F.sqrt(nrm2("ve")))
+    ).withColumn("vn", F.sqrt(norm2_expr("ve")))
     pairs = v.join(F.broadcast(q), F.col("nid") != F.col("qid"))
     # zero-norm guard: ANSI mode errors on /0; degenerate vectors get null
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
+        F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -74,130 +76,14 @@ def cosine_topk(
     )
 
 
-def cosine_topk_fast(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_filter: str = "vec_id < 20",
-    k: int = 10,
-) -> DataFrame:
-    """Production-speed twin of :func:`cosine_topk`: Arrow-batched numpy
-    matmul instead of interpreted HOF folds.
-
-    The bounded query set is collected once and shipped as a Spark
-    BROADCAST variable (torrent-distributed once per executor, not
-    serialized into every task's closure — at high query counts closure
-    capture re-ships the matrix with each task); each executor batch
-    computes all query dots as ONE BLAS matmul and emits only its partial
-    top-k — the shuffle carries k rows per (batch, query), never the
-    vectors.  Same results as the exact operator (float64 matmul; ordering
-    ties broken identically), 10-50× less CPU per pair.  Not
-    oracle-hash-checked (BLAS sum order ≠ sequential fold at the last ulp)
-    — tests/test_similarity.py asserts neighbor-set equality with the
-    exact operator instead.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = vectors.filter(query_filter).select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    bc = vectors.sparkSession.sparkContext.broadcast(
-        (qids, Q / np.linalg.norm(Q, axis=1, keepdims=True))
-    )
-
-    def _partial(batches):
-        b_qids, b_Qn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(V, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            # one vectorized 6-dp round for ALL queries (the per-query
-            # loop below only sorts) — same values as rounding per column
-            C = np.round((V / norms) @ b_Qn.T, 6)  # (batch, queries)
-            ids = pdf[id_col].to_numpy()
-            keep = min(k + 1, len(ids))  # +1 survives self-exclusion
-            for j, qid in enumerate(b_qids):
-                # partial cut under the SAME total order as the global
-                # window (rounded cosine desc, nid asc) — an unrounded
-                # argpartition could drop the global tie-break winner at
-                # a batch boundary, making results depend on batching
-                col = C[:, j]
-                top = np.lexsort((ids, -col))[:keep]
-                yield pd.DataFrame(
-                    {
-                        "qid": int(qid),
-                        "nid": ids[top],
-                        "cosine": col[top],
-                    }
-                )
-
-    # 4 MB/task floor: the kernel is ONE BLAS matmul pass per batch —
-    # cheap per byte — so widening a sub-megabyte single-file input
-    # would cost more in round-robin shuffle + per-task Python worker
-    # overhead than the matmul saves (measured 0.38 → 0.63 s at sf0.1).
-    # A multi-megabyte corpus still widens toward full parallelism.
-    partial = widen_small_input(
-        vectors.select(id_col, vec_col), min_bytes_per_task=4 << 20
-    ).mapInPandas(
-        _partial, schema="qid long, nid long, cosine double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        partial.filter(F.col("nid") != F.col("qid"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "nid", "cosine", "rnk")
-    )
-
-
-def _plane_weight(p: int, i: int) -> float:
-    """Driver-side twin of the SQL weight derivation
-    ``hex8_to_bigint(md5('p<p>:<i>')) % 1001 - 500`` — SAME VALUES by
-    construction (md5 is md5; the first-8-hex-chars int is < 2^32 so
-    both ``%`` are positive-operand), so a plan may bake the weights in
-    as literals without changing a single bucket."""
-    import hashlib
-
-    h = int(hashlib.md5(f"p{p}:{i}".encode()).hexdigest()[:8], 16)
-    return float(h % 1001 - 500)
-
-
 def hyperplane_bucket_expr(
-    vec_col: str = "embedding", planes: int = 8, dim: int | None = None
+    vec_col: str = "embedding", planes: int = 8
 ) -> F.Column:
     """Random-hyperplane LSH bucket key: for each plane p, weight on
     dimension i is md5-derived pseudo-random in [-500, 500]; bucket char =
-    sign bit of the projection.  Deterministic and reproducible in SQL.
-
-    ``dim``: when the vector width is known at plan time AND small
-    (≤ ``_UNROLL_MAX_DIM``), the weights are precomputed driver-side
-    (:func:`_plane_weight`) and the projection unrolls into a codegen'd
-    literal chain — the generic form re-derives planes×dim md5 hashes
-    PER ROW inside an interpreted HOF.  The width gate is MEASURED: on
-    a bare dim=64 scan the literal form wins (0.62 → 0.28 s at sf0.1),
-    but embedded in join plans the planes×64-term chains blow the
-    generated-code size past JIT limits and the whole stage falls back
-    to interpreted expression trees — lsh_topk ran 0.85 → 3.1 s.  Above
-    the gate the generic HOF form is used regardless of ``dim``.
-    Left-associated adds = the fold's order, and the weights are
-    value-identical, so the two forms can never disagree on a bucket
-    (asserted in tests)."""
-    if dim is not None and dim <= _UNROLL_MAX_DIM:
-        parts = []
-        for p in range(planes):
-            terms = [
-                F.element_at(F.col(vec_col), i + 1).cast("double")
-                * F.lit(_plane_weight(p, i + 1))
-                for i in range(dim)
-            ]
-            proj = terms[0]
-            for t in terms[1:]:
-                proj = proj + t
-            parts.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*parts)
+    sign bit of the projection.  Deterministic and reproducible in SQL —
+    the weights are derived inside the expression, so the DuckDB oracle
+    and the persisted ANN index compute the same keys."""
     w = hex8_to_bigint_sql("md5(concat('p', cast(p as string), ':', cast(i as string)))")
     proj = (
         f"aggregate(zip_with({vec_col}, "
@@ -210,139 +96,6 @@ def hyperplane_bucket_expr(
         f"concat_ws('', transform(sequence(0, {planes - 1}), "
         f"p -> CASE WHEN {proj} >= 0 THEN '1' ELSE '0' END))"
     )
-
-
-#: Schema-metadata key carrying the embedding width.  The width travels
-#: WITH the column through every projection/join/aggregate that
-#: references it, so derived frames get the fast kernels with no probe
-#: at all — the sturdy channel; the plan-shape probe below is only the
-#: fallback for unannotated frames.
-VEC_DIM_METADATA_KEY = "vec_dim"
-
-
-def annotate_vec_dim(
-    vectors: DataFrame, vec_col: str = "embedding", dim: int | None = None
-) -> DataFrame:
-    """Stamp the vector width into ``vec_col``'s column metadata so every
-    downstream operator reads it from the SCHEMA instead of probing.
-
-    Pass ``dim`` when the width is known up front (the explicit-parameter
-    channel); otherwise one constant-cost ``first()`` probe runs HERE —
-    call this at the scan, where the probe is a bare partition read by
-    construction, and the stamped width then survives arbitrary plan
-    derivation (column metadata rides the attribute reference through
-    Catalyst)."""
-    if dim is None:
-        row = vectors.select(vec_col).first()
-        if row is None or row[0] is None:
-            return vectors
-        dim = len(row[0])
-    return vectors.withMetadata(vec_col, {VEC_DIM_METADATA_KEY: int(dim)})
-
-
-def _schema_vec_dim(vectors: DataFrame, vec_col: str) -> int | None:
-    """Width from column metadata (``annotate_vec_dim``), else None."""
-    try:
-        md = vectors.schema[vec_col].metadata
-    except Exception:
-        return None
-    v = (md or {}).get(VEC_DIM_METADATA_KEY)
-    return int(v) if v is not None else None
-
-
-#: FALLBACK probe gate (the schema-metadata channel above is preferred):
-#: logical-plan node names whose presence means re-executing the frame
-#: for a one-row probe would re-run real work (joins, shuffles, Python
-#: stages) — the probe is then skipped and callers keep the generic HOF
-#: kernels, which are always correct.
-_PROBE_SKIP_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Distinct",
-    "Deduplicate",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "MapPartitions",
-    "Generate",
-    "GlobalLimit",
-)
-
-
-def _plan_is_cheap_scan(vectors: DataFrame) -> bool:
-    """True when a one-row ``first()`` probe of ``vectors`` costs O(one
-    partition scan): the analyzed plan is projections/filters over a
-    relation with no joins, aggregates, windows, or Python stages that
-    would otherwise execute twice (once for the probe, once for the real
-    query, uncached).  Conservative under Spark Connect (no ``_jdf``):
-    returns False."""
-    try:
-        plan = vectors._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    for line in plan.splitlines():
-        # strip the explain tree-drawing prefix; node names lead the line
-        if line.lstrip(" :+-*(0123456789)").startswith(_PROBE_SKIP_NODES):
-            return False
-    return True
-
-
-def _vec_dim(vectors: DataFrame, vec_col: str) -> int | None:
-    """Vector width for the literal-weight / unrolled fast paths.
-
-    Resolution order: (1) column metadata stamped by
-    :func:`annotate_vec_dim` — schema-carried, so it works on ANY derived
-    frame with zero execution and no Spark-version-dependent plan
-    inspection; (2) fallback: a one-row probe (one first() job, constant
-    cost), fired only when the plan is a bare scan — on a derived frame
-    (joins/aggregates upstream) the probe would silently execute the
-    upstream stages twice, so it is skipped and the caller stays on the
-    generic HOF expressions.  None on empty/null input for the same
-    reason."""
-    dim = _schema_vec_dim(vectors, vec_col)
-    if dim is not None:
-        return dim
-    if not _plan_is_cheap_scan(vectors):
-        return None
-    row = vectors.select(vec_col).first()
-    return len(row[0]) if row is not None and row[0] is not None else None
-
-
-#: Width ceiling for unrolled dot/norm chains.  MEASURED, not guessed:
-#: at sub=8 (PQ training) the unrolled form wins over interpreted HOF
-#: dispatch, but at dim=64 the 64-term element_at chains explode the
-#: generated code (1-2 MB task binaries, methods past JIT limits) and
-#: ran ~4× SLOWER than the HOF fold across cosine/ivf/lsh at sf0.1.
-#: The literal-weight BUCKET expression shares the same gate: its
-#: bare-scan dim=64 win (0.62 → 0.28 s) was abandoned after embedding
-#: the planes×64-term chains in join plans blew generated-code size
-#: past JIT limits (lsh_topk 0.85 → 3.1 s) — see
-#: :func:`hyperplane_bucket_expr`'s docstring for the measurement.
-_UNROLL_MAX_DIM = 16
-
-
-def _vector_kernels(vectors: DataFrame, vec_col: str, dim: int | None = None):
-    """(dot, norm2, dim) for an operator over ``vectors``: unrolled
-    codegen'd expression builders when the width is known AND small
-    enough to compile well (value-identical to the HOF folds — see
-    ``dot_expr_unrolled``'s bit-parity argument), the generic HOFs
-    otherwise.  ``dim`` is returned whenever known so callers can
-    still take the literal-weight bucket path.  Pass ``dim`` when the
-    width is known up front to skip the probe entirely; otherwise the
-    probe (one constant-cost first() job) runs only when the plan is a
-    bare scan (:func:`_vec_dim`) — derived frames keep the lazy generic
-    kernels rather than silently executing their upstream stages
-    twice."""
-    if dim is None:
-        dim = _vec_dim(vectors, vec_col)
-    if dim and dim <= _UNROLL_MAX_DIM:
-        return (
-            lambda a, b: dot_expr_unrolled(a, b, dim),
-            lambda a: norm2_expr_unrolled(a, dim),
-            dim,
-        )
-    return dot_expr, norm2_expr, dim
 
 
 def embedding_near_dup_pairs(
@@ -372,14 +125,13 @@ def embedding_near_dup_pairs(
     here trades recall inside degenerate buckets for a bounded join."""
     from airflow_crypto_btc_spark.operators.dedup import _cap_buckets
 
-    dot, nrm2, dim = _vector_kernels(vectors, vec_col)
     base = (
         vectors.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("e"),
-            hyperplane_bucket_expr(vec_col, planes, dim).alias("bucket"),
+            hyperplane_bucket_expr(vec_col, planes).alias("bucket"),
         )
-        .withColumn("nrm", F.sqrt(nrm2("e")))
+        .withColumn("nrm", F.sqrt(norm2_expr("e")))
         .localCheckpoint(eager=False)
     )  # planes×dim projection + norm run once, not once per self-join side
     if max_bucket_size is not None:
@@ -398,7 +150,7 @@ def embedding_near_dup_pairs(
     )
     cos = F.when(
         F.col("na") * F.col("nb") != 0,
-        F.round(dot("ea", "eb") / (F.col("na") * F.col("nb")), 6),
+        F.round(dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6),
     )
     return (
         a.join(b, ["bucket"])
@@ -426,9 +178,7 @@ def embedding_near_dup_skipped_buckets(
     committed index without re-hashing the corpus."""
     return (
         vectors.select(
-            hyperplane_bucket_expr(
-                vec_col, planes, _vec_dim(vectors, vec_col)
-            ).alias("bucket")
+            hyperplane_bucket_expr(vec_col, planes).alias("bucket")
         )
         .groupBy("bucket")
         .agg(F.count("*").alias("bucket_size"))
@@ -460,23 +210,22 @@ def lsh_topk(
     query touches ``1 + planes`` partitions out of ``2^planes`` — the same
     pruning fraction regardless of data volume.
     """
-    dot, nrm2, dim = _vector_kernels(vectors, vec_col)
     base = (
         vectors.select(
             F.col(id_col).alias("nid"),
             F.col(vec_col).alias("ve"),
-            hyperplane_bucket_expr(vec_col, planes, dim).alias("bucket"),
+            hyperplane_bucket_expr(vec_col, planes).alias("bucket"),
         )
-        .withColumn("vn", F.sqrt(nrm2("ve")))
+        .withColumn("vn", F.sqrt(norm2_expr("ve")))
     )
     q = (
         vectors.filter(query_filter)
         .select(
             F.col(id_col).alias("qid"),
             F.col(vec_col).alias("qe"),
-            hyperplane_bucket_expr(vec_col, planes, dim).alias("qb"),
+            hyperplane_bucket_expr(vec_col, planes).alias("qb"),
         )
-        .withColumn("qn", F.sqrt(nrm2("qe")))
+        .withColumn("qn", F.sqrt(norm2_expr("qe")))
     )
     if max_hamming is None:  # exhaustive limit: probe every bucket
         probe = (
@@ -500,7 +249,7 @@ def lsh_topk(
     )
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
+        F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -557,14 +306,13 @@ def build_ann_index(
     from airflow_crypto_btc_spark.sources.snapshot_table import overwrite
 
     skew_warn_fraction = 0.2
-    _, nrm2, dim = _vector_kernels(vectors, vec_col)
     base = (
         vectors.select(
             F.col(id_col).alias("nid"),
             F.col(vec_col).alias("ve"),
-            hyperplane_bucket_expr(vec_col, planes, dim).alias("bucket"),
+            hyperplane_bucket_expr(vec_col, planes).alias("bucket"),
         )
-        .withColumn("vn", F.sqrt(nrm2("ve")))
+        .withColumn("vn", F.sqrt(norm2_expr("ve")))
         # numeric twin of the bucket key: compact(cluster_by=["bnum"])
         # range-aligns the stored parts so a probe's prune range skips
         # whole files (z-order needs numerics; the string key stays the
@@ -673,12 +421,11 @@ def lsh_topk_from_index(
             f"ANN index was built with planes={built_planes}, probe "
             f"requested planes={planes} — bucket keys cannot match"
         )
-    dot, nrm2, dim = _vector_kernels(queries, vec_col)
     q = queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qe"),
-        hyperplane_bucket_expr(vec_col, planes, dim).alias("qb"),
-    ).withColumn("qn", F.sqrt(nrm2("qe")))
+        hyperplane_bucket_expr(vec_col, planes).alias("qb"),
+    ).withColumn("qn", F.sqrt(norm2_expr("qe")))
     if max_hamming is None:
         probe = (
             f"transform(sequence(0, {2 ** planes - 1}), "
@@ -714,7 +461,7 @@ def lsh_topk_from_index(
     base = read_snapshot(spark, table, prune=prune)
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
+        F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -730,8 +477,6 @@ def lsh_topk_from_index(
 def _nearest_centroids(
     df: DataFrame,
     cent: DataFrame,
-    dot,
-    nrm2,
     id_out: str,
     vec_alias: str,
     keep: int,
@@ -760,11 +505,11 @@ def _nearest_centroids(
     the rank."""
     # per-side norms precomputed; only the dot runs per pair
     norm_col = "__n_" + vec_alias
-    df = df.withColumn(norm_col, F.sqrt(nrm2(vec_alias)))
+    df = df.withColumn(norm_col, F.sqrt(norm2_expr(vec_alias)))
     cos = F.when(
         F.col(norm_col) * F.col("cn") != 0,
         F.round(
-            dot(vec_alias, "ce") / (F.col(norm_col) * F.col("cn")),
+            dot_expr(vec_alias, "ce") / (F.col(norm_col) * F.col("cn")),
             6,
         ),
     ).alias("__ccos")
@@ -843,20 +588,17 @@ def semantic_purge(
     """
     from airflow_crypto_btc_spark.operators.dedup import _cap_buckets
 
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     if centroids is None:
         centroids = vectors.filter(centroid_filter).select(
             F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
         )
-    cent = centroids.withColumn("cn", F.sqrt(nrm2("ce")))
+    cent = centroids.withColumn("cn", F.sqrt(norm2_expr("ce")))
     assigned = (
         _nearest_centroids(
             vectors.select(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("e")
             ),
             cent,
-            dot,
-            nrm2,
             "id",
             "e",
             keep=1,
@@ -881,7 +623,7 @@ def semantic_purge(
     )
     cos = F.when(
         F.col("na") * F.col("nb") != 0,
-        F.round(dot("ea", "eb") / (F.col("na") * F.col("nb")), 6),
+        F.round(dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6),
     )
     dups = (
         a.join(b, ["cid"])
@@ -913,20 +655,17 @@ def semantic_purge_skipped_clusters(
     cluster_size) clusters a capped pass skips — run alongside so the
     un-deduped mass is observable, not silent (the twin of
     ``dedup.minhash_lsh_skipped_buckets``)."""
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     if centroids is None:
         centroids = vectors.filter(centroid_filter).select(
             F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
         )
-    cent = centroids.withColumn("cn", F.sqrt(nrm2("ce")))
+    cent = centroids.withColumn("cn", F.sqrt(norm2_expr("ce")))
     return (
         _nearest_centroids(
             vectors.select(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("e")
             ),
             cent,
-            dot,
-            nrm2,
             "id",
             "e",
             keep=1,
@@ -978,7 +717,6 @@ def build_semantic_index(
     from airflow_crypto_btc_spark.sources.snapshot_table import overwrite
 
     skew_warn_fraction = 0.2
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     if centroids is None:
         if quantizer is None:
             quantizer = f"seed:{centroid_filter}"
@@ -991,15 +729,13 @@ def build_semantic_index(
             "the probe must be able to tell WHICH model assigned the "
             "stored members"
         )
-    cent = centroids.withColumn("cn", F.sqrt(nrm2("ce")))
+    cent = centroids.withColumn("cn", F.sqrt(norm2_expr("ce")))
     members = (
         _nearest_centroids(
             vectors.select(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("e")
             ),
             cent,
-            dot,
-            nrm2,
             "id",
             "e",
             keep=1,
@@ -1090,17 +826,14 @@ def semantic_purge_delta(
     the |Δ|×k assignment runs once, not twice."""
     from airflow_crypto_btc_spark.operators.dedup import _cap_buckets
 
-    dot, nrm2, _dim = _vector_kernels(delta, vec_col)
     if delta_assigned is None:
-        cent = centroids.withColumn("cn", F.sqrt(nrm2("ce")))
+        cent = centroids.withColumn("cn", F.sqrt(norm2_expr("ce")))
         delta_assigned = (
             _nearest_centroids(
                 delta.select(
                     F.col(id_col).alias("id"), F.col(vec_col).alias("e")
                 ),
                 cent,
-                dot,
-                nrm2,
                 "id",
                 "e",
                 keep=1,
@@ -1143,7 +876,7 @@ def semantic_purge_delta(
     )
     cos = F.when(
         F.col("na") * F.col("nb") != 0,
-        F.round(dot("ea", "eb") / (F.col("na") * F.col("nb")), 6),
+        F.round(dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6),
     )
     dups = (
         a.join(b, ["cid"])
@@ -1238,17 +971,14 @@ def ivf_topk_from_tables(
     )
 
     _check_semantic_index_meta(centroids_table, members_table, expect_source)
-    dot, nrm2, _dim = _vector_kernels(queries, vec_col)
     cent = read_snapshot(spark, centroids_table).withColumn(
-        "cn", F.sqrt(nrm2("ce"))
+        "cn", F.sqrt(norm2_expr("ce"))
     )
     probed = _nearest_centroids(
         queries.select(
             F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
         ),
         cent,
-        dot,
-        nrm2,
         "qid",
         "qe",
         keep=n_probe,
@@ -1279,7 +1009,7 @@ def ivf_topk_from_tables(
     )
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
+        F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -1350,16 +1080,13 @@ def semantic_purge_from_tables(
     delta_assigned = None
     prune = None
     if prune_clusters:
-        dot, nrm2, _dim = _vector_kernels(delta, vec_col)
-        cent = cent_df.withColumn("cn", F.sqrt(nrm2("ce")))
+        cent = cent_df.withColumn("cn", F.sqrt(norm2_expr("ce")))
         delta_assigned = (
             _nearest_centroids(
                 delta.select(
                     F.col(id_col).alias("id"), F.col(vec_col).alias("e")
                 ),
                 cent,
-                dot,
-                nrm2,
                 "id",
                 "e",
                 keep=1,
@@ -1419,10 +1146,6 @@ def ivf_topk(
     :func:`kmeans_centroid_arrays` — to search a *trained* coarse
     quantizer; otherwise ``centroid_filter`` picks seed vectors.
     """
-    # unrolled codegen'd kernels when the width is probeable — the
-    # assignment join evaluates |vectors|·|centroids| cosines, exactly
-    # where interpreted HOF dispatch costs (value-identical either way)
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     # cent broadcasts into BOTH _nearest calls (assignment + probe), so
     # its subplan executes once per broadcast build.  For a TRAINED
     # quantizer that re-runs the final Lloyd assign→mean chain — cut
@@ -1433,15 +1156,15 @@ def ivf_topk(
     if centroids is None:
         cent = vectors.filter(centroid_filter).select(
             F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
-        ).withColumn("cn", F.sqrt(nrm2("ce")))
+        ).withColumn("cn", F.sqrt(norm2_expr("ce")))
     else:
         cent = centroids.withColumn(
-            "cn", F.sqrt(nrm2("ce"))
+            "cn", F.sqrt(norm2_expr("ce"))
         ).localCheckpoint(eager=False)
 
     def _nearest(df, id_out, vec_alias, keep, rank_col="__r"):
         return _nearest_centroids(
-            df, cent, dot, nrm2, id_out, vec_alias, keep, rank_col
+            df, cent, id_out, vec_alias, keep, rank_col
         )
 
     assigned = _nearest(
@@ -1464,7 +1187,7 @@ def ivf_topk(
 
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
+        F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -1789,11 +1512,6 @@ def pq_train_codebooks(
     # the assignment join's |vectors|·|centroids| cosine evaluations are
     # where training actually spends its time (measured ~4 s/iteration
     # of interpreted lambda dispatch at sf0.1 before this)
-    from airflow_crypto_btc_spark.functions.hashing import (
-        dot_expr_unrolled,
-        norm2_expr_unrolled,
-    )
-
     v = sliced.withColumn("vn", F.sqrt(norm2_expr_unrolled("ve", sub)))
     # per-subspace seed rule on the SAMPLE QUOTIENT: sampled ids are the
     # multiples of smod, so seeding on pmod(id, 25) would leave most
@@ -2308,21 +2026,20 @@ def ivfpq_topk(
        contract as the PQ family, so the DuckDB oracle replays the
        whole pipeline including training."""
     spark = vectors.sparkSession
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     cent = vectors.filter(centroid_filter).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
-    ).withColumn("cn", F.sqrt(nrm2("ce")))
+    ).withColumn("cn", F.sqrt(norm2_expr("ce")))
     assigned = _nearest_centroids(
         vectors.select(
             F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
         ),
-        cent, dot, nrm2, "nid", "ve", keep=1,
+        cent, "nid", "ve", keep=1,
     ).select("nid", "cid")
     probed = _nearest_centroids(
         vectors.filter(query_filter).select(
             F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
         ),
-        cent, dot, nrm2, "qid", "qe", keep=n_probe,
+        cent, "qid", "qe", keep=n_probe,
     ).select("qid", "cid")
 
     if books is None:
@@ -2422,16 +2139,15 @@ def ivfpq_save_index(
         spark, vectors, index_root, source_version, id_col, vec_col,
         m=m, sample_cap=sample_cap, corpus_rows=corpus_rows,
     )
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     cent_df = vectors.filter(centroid_filter).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
     )
-    cent = cent_df.withColumn("cn", F.sqrt(nrm2("ce")))
+    cent = cent_df.withColumn("cn", F.sqrt(norm2_expr("ce")))
     assigned = _nearest_centroids(
         vectors.select(
             F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
         ),
-        cent, dot, nrm2, "nid", "ve", keep=1,
+        cent, "nid", "ve", keep=1,
     ).select("nid", "cid")
     meta = {"source_version": source_version, "m": m}
     overwrite(
@@ -2490,15 +2206,14 @@ def ivfpq_topk_from_index(
             f"{expect_source!r} — rebuild before probing"
         )
     books = pq_load_codebooks(spark, parts["books"])
-    dot, nrm2, _dim = _vector_kernels(vectors, vec_col)
     cent = read_snapshot(spark, parts["centroids"]).withColumn(
-        "cn", F.sqrt(nrm2("ce"))
+        "cn", F.sqrt(norm2_expr("ce"))
     )
     probed = _nearest_centroids(
         vectors.filter(query_filter).select(
             F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
         ),
-        cent, dot, nrm2, "qid", "qe", keep=n_probe,
+        cent, "qid", "qe", keep=n_probe,
     ).select("qid", "cid")
     codes = read_snapshot(spark, parts["codes"])
     assigned = read_snapshot(spark, parts["lists"])
@@ -2534,12 +2249,11 @@ def centroid_drift_report(
     micro-units (half-away, the shared ``ratio_micro`` doctrine)."""
     from airflow_crypto_btc_spark.functions.hashing import ratio_micro
 
-    dot, nrm2, _dim = _vector_kernels(reference, vec_col)
     if centroids is None:
         centroids = reference.filter(centroid_filter).select(
             F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
         )
-    cent = centroids.withColumn("cn", F.sqrt(nrm2("ce")))
+    cent = centroids.withColumn("cn", F.sqrt(norm2_expr("ce")))
 
     def _counts(df: DataFrame, out: str) -> DataFrame:
         assigned = _nearest_centroids(
@@ -2547,8 +2261,6 @@ def centroid_drift_report(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("e")
             ),
             cent,
-            dot,
-            nrm2,
             "id",
             "e",
             keep=1,
@@ -2715,18 +2427,20 @@ def binary_topk(
         .filter(F.col("srnk") <= k * oversample)
         .select("qid", "nid", "hamming")
     )
-    dot, nrm2, _ = _vector_kernels(vectors, vec_col)
     qv = vectors.filter(query_filter).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
-    ).withColumn("qn", F.sqrt(nrm2("qe")))
+    ).withColumn("qn", F.sqrt(norm2_expr("qe")))
     # shortlist is |queries|·k·oversample rows — broadcast it onto the
     # vector scan so candidate floats are FETCHED, not shuffled
     fetched = vectors.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
     ).join(F.broadcast(cand), "nid")
     cos = F.when(
-        F.col("qn") * F.sqrt(nrm2("ve")) != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.sqrt(nrm2("ve"))), 6),
+        F.col("qn") * F.sqrt(norm2_expr("ve")) != 0,
+        F.round(
+            dot_expr("qe", "ve") / (F.col("qn") * F.sqrt(norm2_expr("ve"))),
+            6,
+        ),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -2797,11 +2511,10 @@ def binary_topk_sweep(
     qb = bq.filter(query_filter).select(
         F.col(id_col).alias("qid"), F.col("bits").alias("qbits")
     )
-    dot, nrm2, _ = _vector_kernels(vectors, vec_col)
     qv = (
         vectors.filter(query_filter)
         .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
-        .withColumn("qn", F.sqrt(nrm2("qe")))
+        .withColumn("qn", F.sqrt(norm2_expr("qe")))
     )
     ham_w = Window.partitionBy("qid").orderBy(F.asc("hamming"), F.asc("nid"))
     ham = (
@@ -2831,8 +2544,11 @@ def binary_topk_sweep(
     # shuffled) off the vector scan via the broadcast pair set
     pairs = cands.select("qid", "nid").distinct()
     cos = F.when(
-        F.col("qn") * F.sqrt(nrm2("ve")) != 0,
-        F.round(dot("qe", "ve") / (F.col("qn") * F.sqrt(nrm2("ve"))), 6),
+        F.col("qn") * F.sqrt(norm2_expr("ve")) != 0,
+        F.round(
+            dot_expr("qe", "ve") / (F.col("qn") * F.sqrt(norm2_expr("ve"))),
+            6,
+        ),
     )
     cos_df = (
         vectors.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("ve"))

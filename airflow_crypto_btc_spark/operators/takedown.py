@@ -657,9 +657,7 @@ def takedown_semantic(
     commits second (CAS, counts pinned in meta for replay) — between
     the two a reader sees evicted members with stale labels, the same
     conservative window as the BM25 doclen→postings order."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        _vector_kernels,
-    )
+    from airflow_crypto_btc_spark.functions.hashing import dot_expr
 
     ids = _ids_frame(doc_ids, id_col).localCheckpoint(eager=False)
     m = evict_rows(spark, members_table, ids, "id",
@@ -698,7 +696,6 @@ def takedown_semantic(
         members_table,
         version=txn_version(members_table, f"{txn_id}:sem_members"),
     )
-    dot, _nrm2, _dim = _vector_kernels(members, "e")
     a = affected.select(F.col(id_col).alias("id_dup")).join(
         members, F.col("id") == F.col("id_dup")
     ).select(
@@ -715,7 +712,7 @@ def takedown_semantic(
     )
     cos = F.when(
         F.col("na") * F.col("nb") != 0,
-        F.round(dot("ea", "eb") / (F.col("na") * F.col("nb")), 6),
+        F.round(dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6),
     )
     new_dup = (
         a.join(b, ["cid"])

@@ -248,30 +248,6 @@ def fetch_klines_http(
     raise RuntimeError(f"klines fetch failed after {attempts}") from last_err
 
 
-def extract_day_from_events(
-    spark: SparkSession,
-    sf_dir: str,
-    day: str,
-    event_type: str = "purchase",
-) -> DataFrame:
-    """Fixture-backed stand-in for the HTTP source (SURVEY §2.1 S1 note):
-    the ``events`` table's ``(ts, value)`` plays the klines ``(ts, price)``
-    role; ``event_type`` plays the symbol."""
-    from airflow_crypto_btc_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("event_type") == event_type)
-        .filter(F.to_date("ts") == F.lit(day).cast("date"))
-        .select(
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_utc"),
-            F.col("value").alias("price"),
-        )
-        .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "ts_utc"))
-        .orderBy("ts_utc")
-    )
-
-
 # ------------------------------------------------------------------ stages 1-6
 
 
@@ -418,57 +394,6 @@ def enrich_indicators(spark: SparkSession, wh: Warehouse) -> DataFrame:
     return spark.read.parquet(wh.daily_metrics)
 
 
-def enrich_indicators_incremental(
-    spark: SparkSession,
-    wh: Warehouse,
-    day: str,
-    lookback_rows: int = 30,
-) -> DataFrame:
-    """Stage 4, the O(new data) variant: the reference recomputes every
-    indicator over the whole history each run (``:254-295`` — quadratic
-    over the pipeline's lifetime).  All four indicators are trailing
-    row-frames of ≤30 rows, so the target day's values depend on at most
-    ``lookback_rows + 1`` trailing daily rows per asset: slice exactly
-    those, window over the slice, and merge ONLY the day's indicator
-    columns back (S8 update_cols semantics).
-
-    At scale this is the difference between touching 365×assets rows and
-    touching 31×assets rows per day — and the slice is partition-prunable
-    when ``daily_metrics`` is stored date-partitioned.
-    """
-    from pyspark.sql import Window
-
-    metrics = spark.read.parquet(wh.daily_metrics)
-    d = F.lit(day).cast("date")
-    # last (lookback+1) rows per asset at or before `day`: row frames are
-    # ROW-based, so slice by trailing row rank, not calendar arithmetic
-    w = Window.partitionBy("asset").orderBy(F.desc("date"))
-    ctx = (
-        metrics.filter(F.col("date") <= d)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= lookback_rows + 1)
-        .drop("__rn")
-    )
-    enriched_day = (
-        with_indicators(
-            ctx.drop(*INDICATOR_COLS),
-            date_col="date",
-            close_col="close",
-            key_cols=("asset",),
-        )
-        .filter(F.col("date") == d)
-        .select("date", "asset", *INDICATOR_COLS)
-    )
-    merged = upsert_by_key(
-        metrics,
-        enriched_day,
-        key_cols=("date", "asset"),
-        update_cols=INDICATOR_COLS,
-    )
-    overwrite_staged(merged, wh.daily_metrics)
-    return spark.read.parquet(wh.daily_metrics)
-
-
 def plot_report(
     spark: SparkSession, wh: Warehouse, day: str, window_days: int = 60
 ) -> str:
@@ -578,22 +503,15 @@ def run_day(
     asset: str = "BTC-USD",
     min_day_rows: int = 20,
     retries: int = 1,
-    incremental: bool = False,
 ) -> RunResult:
     """One logical day through all six stages — re-run safe (S5/S8/S7 merge
-    discipline), mirroring one Airflow DAG run of the reference.
-    ``incremental=True`` swaps the full-history indicator rewrite for the
-    O(new data) per-day repair (same results, see
-    tests/test_pipeline.py)."""
+    discipline), mirroring one Airflow DAG run of the reference."""
 
     def _go() -> RunResult:
         csv_path = extract(spark, wh, day, source, asset=asset)
         load_raw(spark, wh, day, asset=asset)
         compute_daily_metrics(spark, wh, day, asset=asset)
-        if incremental:
-            enrich_indicators_incremental(spark, wh, day)
-        else:
-            enrich_indicators(spark, wh)
+        enrich_indicators(spark, wh)
         report = plot_report(spark, wh, day)
         checks = quality_checks(
             spark, wh, day, report, asset=asset, min_day_rows=min_day_rows

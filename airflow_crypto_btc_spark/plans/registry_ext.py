@@ -40,7 +40,6 @@ from airflow_crypto_btc_spark.operators.multimodal import (
 )
 from airflow_crypto_btc_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_fast,
     embedding_near_dup_pairs,
     embedding_norms,
     ivf_topk,
@@ -690,25 +689,6 @@ def q_sim_lsh_recall(spark, sf_dir):
     return _ann_recall_report(exact, approx)
 
 
-def q_sim_cosine_topk_fast_recall(spark, sf_dir):
-    """The BLAS (numpy-matmul mapInPandas) cosine top-k twin, hashed
-    as a recall report against the built-in-expression exact operator:
-    both paths rank by (cosine DESC, nid ASC) over the same vectors, so
-    the neighbor SETS are equal by contract even though the float
-    scores differ in the last ulp — recall@10 and precision@10 are
-    exactly 1.0, and the oracle replays exact-vs-exact.  The fast
-    kernel still pays its full cost here (it is the timed subject);
-    tests/test_similarity.py additionally pins set equality per qid."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = cosine_topk(emb, query_filter="vec_id < 20", k=10).select(
-        "qid", "nid"
-    )
-    fast = cosine_topk_fast(
-        emb, query_filter="vec_id < 20", k=10
-    ).select("qid", "nid")
-    return _ann_recall_report(exact, fast)
-
-
 def _ann_recall_sql(approx_sql: str) -> str:
     micro = (
         "((2 * CAST(n_both AS BIGINT) * 1000000 + CAST({d} AS BIGINT))"
@@ -1190,17 +1170,6 @@ EXT_REGISTRY: dict[str, QuerySpec] = {
     ),
     "sim_lsh_recall": QuerySpec(
         q_sim_lsh_recall, _ann_recall_sql(_SQL_SIM_LSH_TOPK)
-    ),
-    # numpy-matmul twin of sim_cosine_topk: BLAS sum order differs at
-    # the last ulp so the SCORES carry no hash oracle — but the
-    # NEIGHBOR SETS must equal the exact operator's, so the entry is
-    # oracle-backed (round 13) as a recall-vs-exact report (the
-    # sim_lsh_recall technique): the oracle replays exact-vs-exact
-    # (recall/precision exactly 1.0) and any fast-kernel drift drops
-    # the Spark-side recall below 1.0 → value-hash mismatch.
-    "sim_cosine_topk_fast": QuerySpec(
-        q_sim_cosine_topk_fast_recall,
-        _ann_recall_sql(_SQL_SIM_COSINE_TOPK),
     ),
     "sim_embedding_near_dup": QuerySpec(
         q_sim_embedding_near_dup, _SQL_SIM_EMBEDDING_NEAR_DUP

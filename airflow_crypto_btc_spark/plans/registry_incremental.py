@@ -350,26 +350,22 @@ def q_dedup_semantic_quality(spark, sf_dir):
     clustering retains.  The exact baseline is all-pairs (the
     small-corpus verification shape); catalog-only accounting, not a
     headline query."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        _vector_kernels,
-        semantic_purge,
+    from airflow_crypto_btc_spark.functions.hashing import (
+        dot_expr,
+        norm2_expr,
     )
+    from airflow_crypto_btc_spark.operators.similarity import semantic_purge
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # unrolled codegen'd dot/norm kernels (value-identical to the HOF
-    # folds — left-associated adds): the |v|²/2 pair stream is exactly
-    # where interpreted-lambda dispatch dominates (r14 opt: this entry's
-    # exact baseline measured 25 s of HOF evaluation at sf0.1)
-    dot, nrm2, _dim = _vector_kernels(emb, "embedding")
     a = emb.select(
         F.col("vec_id").alias("ida"), F.col("embedding").alias("ea")
-    ).withColumn("na", F.sqrt(nrm2("ea")))
+    ).withColumn("na", F.sqrt(norm2_expr("ea")))
     b = emb.select(
         F.col("vec_id").alias("idb"), F.col("embedding").alias("eb")
-    ).withColumn("nb", F.sqrt(nrm2("eb")))
+    ).withColumn("nb", F.sqrt(norm2_expr("eb")))
     cos = F.when(
         F.col("na") * F.col("nb") != 0,
-        F.round(dot("ea", "eb") / (F.col("na") * F.col("nb")), 6),
+        F.round(dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6),
     )
     # LEFT SEMI with the threshold in the join condition: "has ANY
     # smaller-id neighbor ≥ t" is an EXISTS — the nested-loop probe

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.functions.hashing import (
     dot_expr,
-    dot_expr_unrolled,
     norm2_expr,
 )
 from airflow_crypto_btc_spark.operators.incremental import (
@@ -113,22 +112,10 @@ def embedding_index_sink(
     ``similarity.embedding_near_dup_skipped_buckets`` over the index
     table's rows."""
 
-    state: dict = {}  # vector width, probed once across the stream
-
     def _fold(batch_df, batch_id: int) -> None:
         from airflow_crypto_btc_spark.operators.dedup import _cap_buckets
-        from airflow_crypto_btc_spark.operators.similarity import _vec_dim
 
         spark = batch_df.sparkSession
-        # literal-weight bucket fast path: probe the width on the first
-        # non-empty batch and reuse it for the stream's lifetime (the
-        # bucket VALUES are identical either way — only the per-row
-        # md5-in-HOF cost disappears)
-        if "dim" not in state:
-            d = _vec_dim(batch_df, vec_col)
-            if d is not None:
-                state["dim"] = d
-        dim = state.get("dim")
         # CAS anchor: the index version the freshness anti-join and the
         # pair probe are based on (round-9 closure).  A replayed batch
         # whose index fold already landed reads the PRE-FOLD snapshot
@@ -156,9 +143,7 @@ def embedding_index_sink(
             fresh.select(
                 F.col(id_col).alias("nid"),
                 F.col(vec_col).alias("ve"),
-                hyperplane_bucket_expr(vec_col, planes, dim).alias(
-                    "bucket"
-                ),
+                hyperplane_bucket_expr(vec_col, planes).alias("bucket"),
             )
             .withColumn("vn", F.sqrt(norm2_expr("ve")))
             # numeric bucket twin — matches build_ann_index's schema so
@@ -194,19 +179,10 @@ def embedding_index_sink(
             F.col("vn").alias("nb"),
             "bucket",
         )
-        from airflow_crypto_btc_spark.operators.similarity import (
-            _UNROLL_MAX_DIM,
-        )
-
-        pair_dot = (
-            (lambda x, y: dot_expr_unrolled(x, y, dim))
-            if dim is not None and dim <= _UNROLL_MAX_DIM
-            else dot_expr
-        )  # value-identical; see similarity._UNROLL_MAX_DIM for the gate
         cos = F.when(
             F.col("na") * F.col("nb") != 0,
             F.round(
-                pair_dot("ea", "eb") / (F.col("na") * F.col("nb")), 6
+                dot_expr("ea", "eb") / (F.col("na") * F.col("nb")), 6
             ),
         )
         pairs = (
@@ -405,8 +381,6 @@ def ivfpq_arrivals_sink(
 
     from airflow_crypto_btc_spark.operators.similarity import (
         _nearest_centroids,
-        _vector_kernels,
-        annotate_vec_dim,
         pq_encode,
         pq_load_codebooks,
     )
@@ -457,26 +431,20 @@ def ivfpq_arrivals_sink(
         if "books" not in cache:
             cache["books"] = pq_load_codebooks(spark, parts["books"])
         books = cache["books"]
-        dim = len(books) * books[0].shape[1]
         # CAS anchors: the versions the anti-join (lists) and the codes
         # append are based on
         codes_v = current_snapshot(parts["codes"]).version
         lists_v = current_snapshot(parts["lists"]).version
         committed = read_snapshot_or_none(spark, parts["lists"])
         fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
-        # the round-9 width channel: the batch frame is derived (window
-        # + anti-join), so stamp the dim known from the codebooks — the
-        # assignment kernels go unrolled with zero probes
-        fresh = annotate_vec_dim(fresh, vec_col, dim=dim)
-        dot, nrm2, _d = _vector_kernels(fresh, vec_col)
         cent = read_snapshot(spark, parts["centroids"]).withColumn(
-            "cn", F.sqrt(nrm2("ce"))
+            "cn", F.sqrt(norm2_expr("ce"))
         )
         assigned = _nearest_centroids(
             fresh.select(
                 F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
             ),
-            cent, dot, nrm2, "nid", "ve", keep=1,
+            cent, "nid", "ve", keep=1,
         ).select("nid", "cid")
         codes_new = pq_encode(fresh, books, id_col, vec_col)
         # fast-fail: a second writer that already folded would have

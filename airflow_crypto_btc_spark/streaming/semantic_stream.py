@@ -35,9 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from airflow_crypto_btc_spark.functions.hashing import norm2_expr
 from airflow_crypto_btc_spark.operators.similarity import (
     _nearest_centroids,
-    _vector_kernels,
     semantic_purge_delta,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
@@ -181,15 +181,12 @@ def semantic_index_sink(
         # member rows in the persisted index shape (id, e, vn, cid):
         # recomputed via the same shared assignment helper the labeling
         # used, so the two can never disagree on a row's cluster
-        dot, nrm2, _dim = _vector_kernels(fresh, vec_col)
-        cent = state["cent"].withColumn("cn", F.sqrt(nrm2("ce")))
+        cent = state["cent"].withColumn("cn", F.sqrt(norm2_expr("ce")))
         batch_members = _nearest_centroids(
             fresh.select(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("e")
             ),
             cent,
-            dot,
-            nrm2,
             "id",
             "e",
             keep=1,

@@ -137,18 +137,24 @@ def test_every_registry_plan_avoids_row_python(spark, sf_dir):
     BatchEvalPython (row-at-a-time Python UDF).  Python is allowed only
     Arrow-vectorized (MapInPandas / FlatMapGroupsInPandas), and only in
     the ops designed around it."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from airflow_crypto_btc_spark.plans.catalog import ALL_QUERIES
 
-    offenders = []
-    for name, spec in ALL_QUERIES.items():
-        plan = (
+    def plan(spec):
+        return (
             spec.fn(spark, sf_dir)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
+
+    # the builds are independent and mostly wait on small eager jobs,
+    # so a few run at once
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        plans = dict(zip(ALL_QUERIES, pool.map(plan, ALL_QUERIES.values())))
+    assert len(plans) == len(ALL_QUERIES)
+    offenders = [n for n, p in plans.items() if "BatchEvalPython" in p]
     assert offenders == []
 
 

@@ -126,83 +126,6 @@ def test_normalize_klines_shape_and_dedup(spark):
     assert (out["asset"] == "BTC-USD").all()
 
 
-def test_incremental_indicators_match_full_recompute(spark, sf_dir, wh):
-    """Seed daily_metrics from 30 days × 5 assets of events OHLC, enrich
-    fully, scrub two days' indicators, then repair them incrementally —
-    the incremental path must reproduce the full recompute exactly."""
-    from pyspark.sql import functions as F
-
-    from airflow_crypto_btc_spark.operators.ohlc import daily_ohlc
-    from airflow_crypto_btc_spark.pipeline import (
-        INDICATOR_COLS,
-        OHLC_COLS,
-        enrich_indicators,
-        enrich_indicators_incremental,
-    )
-    from airflow_crypto_btc_spark.sources.tables import load_table
-
-    base = (
-        daily_ohlc(load_table(spark, sf_dir, "events"))
-        .withColumnRenamed("event_type", "asset")
-        .select(
-            "date",
-            "asset",
-            *OHLC_COLS,
-            *[F.lit(None).cast("double").alias(c) for c in INDICATOR_COLS],
-        )
-    )
-    import os
-
-    os.makedirs(wh.root, exist_ok=True)
-    base.write.parquet(wh.daily_metrics)
-    full = enrich_indicators(spark, wh).toPandas()
-
-    scrub_days = ["2024-01-15", "2024-01-30"]
-    scrubbed = spark.read.parquet(wh.daily_metrics).select(
-        "date",
-        "asset",
-        *OHLC_COLS,
-        *[
-            F.when(
-                F.col("date").isin(
-                    [pd.Timestamp(d).date() for d in scrub_days]
-                ),
-                F.lit(None).cast("double"),
-            )
-            .otherwise(F.col(c))
-            .alias(c)
-            for c in INDICATOR_COLS
-        ],
-    )
-    from airflow_crypto_btc_spark.pipeline import overwrite_staged
-
-    overwrite_staged(scrubbed, wh.daily_metrics)
-
-    for d in scrub_days:
-        enrich_indicators_incremental(spark, wh, d)
-
-    got = spark.read.parquet(wh.daily_metrics).toPandas()
-    key = ["asset", "date"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key).reset_index(drop=True)[full.columns.tolist()],
-        full.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_incremental_run_day_matches_full(spark, sf_dir, tmp_path):
-    """run_day(incremental=True) produces the same daily_metrics as the
-    full-rewrite path over a 3-day fold."""
-    src = lambda d: _source_for_day(spark, sf_dir, d)  # noqa: E731
-    wh_full = Warehouse(str(tmp_path / "full"))
-    wh_inc = Warehouse(str(tmp_path / "inc"))
-    for d in DAYS:
-        run_day(spark, wh_full, d, src(d), min_day_rows=10)
-        run_day(spark, wh_inc, d, src(d), min_day_rows=10, incremental=True)
-    pd.testing.assert_frame_equal(
-        _metrics_pdf(spark, wh_full), _metrics_pdf(spark, wh_inc)
-    )
-
-
 def test_multi_asset_day_folds_are_isolated(spark, sf_dir, tmp_path):
     """Two assets folded into one warehouse: per-asset extracts don't
     collide, the day partition holds both, and indicators are computed

@@ -130,36 +130,66 @@ def test_near_dup_bucket_cap_skips_hot_bucket(spark):
     }
 
 
-def test_hyperplane_bucket_literal_weights_match_hof(spark, sf_dir):
-    """The literal-weight (dim-known, codegen) bucket expression must
-    agree with the generic md5-in-HOF form on EVERY vector — bucket keys
-    are persisted in indexes, so the two forms must be one function.
-    Probed at dim ≤ _UNROLL_MAX_DIM (the only widths where the literal
-    path engages — wider inputs are gated back to the HOF form, which
-    the second assertion pins)."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        _UNROLL_MAX_DIM,
-        hyperplane_bucket_expr,
+def test_unrolled_kernels_match_hof_on_pq_subvectors(spark, sf_dir):
+    """PQ codebook training is the one caller of the unrolled dot/norm
+    twins: its sub-vector width (dim/m = 8) is fixed when the plan is
+    built.  On 8-wide slices of the fixture the twins must equal the
+    HOF folds bit for bit, so training assigns exactly as the oracle."""
+    from airflow_crypto_btc_spark.functions.hashing import (
+        dot_expr,
+        dot_expr_unrolled,
+        norm2_expr,
+        norm2_expr_unrolled,
     )
     from airflow_crypto_btc_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # 16-wide slices of the real fixture (inside the unroll gate)
-    narrow = emb.select(
-        "vec_id", F.expr("slice(embedding, 1, 16)").alias("embedding")
+    sub = 8
+    sliced = emb.select(
+        "vec_id",
+        F.expr(f"slice(embedding, 1, {sub})").alias("a"),
+        F.expr(f"slice(embedding, {sub + 1}, {sub})").alias("b"),
     )
-    for planes in (4, 8):
-        mism = narrow.select(
-            hyperplane_bucket_expr("embedding", planes).alias("hof"),
-            hyperplane_bucket_expr("embedding", planes, 16).alias("lit"),
-        ).filter("hof != lit")
-        assert mism.count() == 0
-    # beyond the gate the two calls build the SAME (HOF) expression
-    wide_dim = len(emb.select("embedding").first()[0])
-    assert wide_dim > _UNROLL_MAX_DIM
-    a = hyperplane_bucket_expr("embedding", 4, wide_dim)
-    b = hyperplane_bucket_expr("embedding", 4)
-    assert str(a) == str(b)
+    got = sliced.select(
+        dot_expr("a", "b").alias("dot"),
+        dot_expr_unrolled("a", "b", sub).alias("dot_u"),
+        norm2_expr("a").alias("n2"),
+        norm2_expr_unrolled("a", sub).alias("n2_u"),
+    )
+    assert got.count() > 0
+    assert got.filter("dot <=> dot_u AND n2 <=> n2_u").count() == got.count()
+
+
+def test_vector_operator_plans_run_no_spark_jobs(spark, sf_dir):
+    """Building a vector operator's plan executes nothing: there is one
+    kernel form, so no operator runs a job to learn the vector width."""
+    from airflow_crypto_btc_spark.operators.similarity import (
+        binary_topk,
+        cosine_topk,
+        embedding_near_dup_pairs,
+        ivf_topk,
+        lsh_topk,
+    )
+    from airflow_crypto_btc_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "vector-plan-build"
+    sc.setJobGroup(group, "vector operator plan build")
+    try:
+        for build in (
+            cosine_topk, lsh_topk, embedding_near_dup_pairs, ivf_topk,
+            binary_topk,
+        ):
+            build(emb)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        # the group does capture jobs: one action lands in it
+        emb.limit(1).collect()
+        assert len(tracker.getJobIdsForGroup(group)) >= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_norms(vectors):
@@ -197,27 +227,6 @@ def test_ivf_topk_structure_and_recall(spark, sf_dir):
         for q in exact_sets.index
     ]
     assert sum(recalls) / len(recalls) >= 0.3
-
-
-def test_cosine_topk_fast_matches_exact_operator(spark, sf_dir):
-    """The vectorized mapInPandas path returns the same neighbors as the
-    HOF-exact operator (cosines agree to 1e-6; identical tie-breaks)."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_fast,
-    )
-    from airflow_crypto_btc_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = cosine_topk(emb, k=10).toPandas()
-    fast = cosine_topk_fast(emb, k=10).toPandas()
-    key = ["qid", "rnk"]
-    e = exact.sort_values(key).reset_index(drop=True)
-    f = fast.sort_values(key).reset_index(drop=True)
-    assert len(e) == len(f)
-    assert (e["qid"] == f["qid"]).all()
-    assert (e["nid"] == f["nid"]).all()
-    assert (e["cosine"] - f["cosine"]).abs().max() <= 2e-6
 
 
 def numpy_kmeans(V, seed_ids, iterations=2):
@@ -1085,9 +1094,9 @@ def test_nearest_centroid_assignment_tie_and_null_semantics(spark):
     (cosine desc-nulls-last, cid asc) contract on its two edge cases:
     exact cosine ties break toward the smallest cid, and a zero-norm
     vector (every cosine NULL) assigns to the smallest cid."""
+    from airflow_crypto_btc_spark.functions.hashing import norm2_expr
     from airflow_crypto_btc_spark.operators.similarity import (
         _nearest_centroids,
-        _vector_kernels,
     )
 
     df = spark.createDataFrame(
@@ -1103,14 +1112,11 @@ def test_nearest_centroid_assignment_tie_and_null_semantics(spark):
         [(7, [1.0, 1.0]), (3, [1.0, 1.0]), (9, [0.0, 2.0])],
         "cid long, ce array<double>",
     )
-    dot, nrm2, _dim = _vector_kernels(df, "embedding")
     got = {
         r["id"]: r["cid"]
         for r in _nearest_centroids(
             df.selectExpr("vec_id AS id", "embedding AS e"),
-            cent.withColumn("cn", F.sqrt(nrm2("ce"))),
-            dot,
-            nrm2,
+            cent.withColumn("cn", F.sqrt(norm2_expr("ce"))),
             "id",
             "e",
             keep=1,
@@ -1440,78 +1446,6 @@ def test_rrf_topk_rank_fusion_semantics(spark):
     assert [n for n, v in sorted(got.items(), key=lambda kv: kv[1][2])] == [
         11, 10, 13, 12
     ]
-
-
-def test_vec_dim_from_schema_metadata_beats_probe_gate(spark):
-    """The round-9 width channel: `annotate_vec_dim` stamps the width
-    into column metadata, which rides the attribute through joins and
-    aggregates — so `_vec_dim` resolves on DERIVED frames where the
-    plan-shape probe gate (the node-name fallback) must refuse."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        _plan_is_cheap_scan,
-        _vec_dim,
-        annotate_vec_dim,
-    )
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i), 1.0, 2.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    # explicit dim= channel
-    stamped = annotate_vec_dim(vecs, "embedding", dim=3)
-    assert _vec_dim(stamped, "embedding") == 3
-    # probe-at-scan channel (bare local relation)
-    assert _vec_dim(annotate_vec_dim(vecs, "embedding"), "embedding") == 3
-
-    # a derived frame: self-join + dedup — the probe gate refuses it...
-    other = stamped.select(
-        F.col("vec_id").alias("vid2"), F.col("embedding").alias("e2")
-    )
-    derived = (
-        stamped.join(other, stamped["vec_id"] == F.col("vid2"))
-        .select("vec_id", "embedding")
-        .dropDuplicates(["vec_id"])
-    )
-    assert not _plan_is_cheap_scan(derived)
-    # ...but the metadata survived the derivation: no probe needed
-    assert _vec_dim(derived, "embedding") == 3
-    # unannotated twin of the same derived plan: correctly None
-    bare = (
-        vecs.join(other, vecs["vec_id"] == F.col("vid2"))
-        .select("vec_id", "embedding")
-        .dropDuplicates(["vec_id"])
-    )
-    assert _vec_dim(bare, "embedding") is None
-
-
-def test_annotated_and_bare_frames_agree_on_buckets(spark):
-    """The width channel changes WHICH kernel form runs, never the
-    values: hyperplane buckets from an annotated frame (literal-weight
-    unrolled path, dim<=16) equal the generic-HOF buckets bit-for-bit."""
-    from airflow_crypto_btc_spark.operators.similarity import (
-        annotate_vec_dim,
-        hyperplane_bucket_expr,
-    )
-
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 7) - 3, float(i % 5) - 2, 1.5, -0.5])
-         for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    generic = {
-        r["vec_id"]: r["b"]
-        for r in vecs.select(
-            "vec_id", hyperplane_bucket_expr("embedding", 6, None).alias("b")
-        ).collect()
-    }
-    stamped = annotate_vec_dim(vecs, "embedding", dim=4)
-    unrolled = {
-        r["vec_id"]: r["b"]
-        for r in stamped.select(
-            "vec_id", hyperplane_bucket_expr("embedding", 6, 4).alias("b")
-        ).collect()
-    }
-    assert generic == unrolled
 
 
 def test_ivfpq_with_big_shortlist_equals_ivf_exact(spark, sf_dir):

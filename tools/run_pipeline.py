@@ -53,9 +53,7 @@ def main() -> None:
             .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "ts_utc"))
         )
 
-    results = run_range(
-        spark, wh, days, source_for_day, min_day_rows=10, incremental=True
-    )
+    results = run_range(spark, wh, days, source_for_day, min_day_rows=10)
     for r in results:
         checks = ", ".join(
             f"{c.check}={'ok' if c.passed else 'FAIL'}" for c in r.checks
