@@ -270,7 +270,7 @@ def maintain_ohlc_rollup(
     )
     if touched:
         old_touched = read_parts(
-            spark, state_table, touched, schema_files=state_snap.files
+            spark, state_table, touched, state_snap
         ).join(delta_state.select(*keys), keys, "left_semi")
         merged = merge_ohlc_states(
             old_touched, delta_state, key_cols=key_cols

@@ -206,7 +206,7 @@ def evict_rows(
             expect_version=snap.version,
         )
         return {"rows_removed": 0, "replayed": False}
-    state = read_parts(spark, table, touched, schema_files=snap.files)
+    state = read_parts(spark, table, touched, snap)
     kept = state.join(
         F.broadcast(ids),
         state[id_col] == F.col("__td_id"),
@@ -228,8 +228,8 @@ def evict_rows(
     )
     n_removed, n_kept = int(row["hits"]), int(row["n"] - row["hits"])
     # a fully-evicted part simply vanishes — UNLESS it was the last
-    # file: the store keeps schema in part footers, so an emptied
-    # table retains one zero-row part as its schema tombstone
+    # file: the snapshot schema is the union of the LIVE parts' logged
+    # schemas, so an emptied table keeps one zero-row part to hold it
     parts, stats = (
         _write_parts(kept, table)
         if n_kept or not carried
@@ -489,18 +489,14 @@ def read_snapshot_mor(
     for a MISSED cadence, not the design point."""
     import warnings
 
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        read_snapshot_or_none,
-        snapshot_nrows,
-    )
+    from airflow_crypto_btc_spark.sources.snapshot_table import snapshot_nrows
 
     state = read_snapshot(spark, table, version=version)
     dv_snap = current_snapshot(dv_table)
-    dv = (
-        read_snapshot_or_none(spark, dv_table) if dv_snap.files else None
-    )
-    if dv is None:
+    if not dv_snap.files:
         return state
+    # the tombstones and their count below come from one DV snapshot
+    dv = read_parts(spark, dv_table, dv_snap.files, dv_snap)
     state_t = dict(state.dtypes)[id_col]
     if dict(dv.dtypes)[id_col] != state_t:
         bad = (

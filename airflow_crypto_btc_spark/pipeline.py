@@ -33,6 +33,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
     StringType,
     StructField,
@@ -59,6 +60,9 @@ from airflow_crypto_btc_spark.plans.quality import (
 
 # --------------------------------------------------------------------- schemas
 
+OHLC_COLS = ("open", "high", "low", "close")
+INDICATOR_COLS = ("ret", "ma7", "ma30", "vol30")
+
 #: Canonical fact-table schema (reference DDL ``:138-144``) + day partition col.
 RAW_PRICES_SCHEMA = StructType(
     [
@@ -66,6 +70,13 @@ RAW_PRICES_SCHEMA = StructType(
         StructField("asset", StringType()),
         StructField("price", DoubleType()),
     ]
+)
+
+#: ``daily_metrics`` (reference DDL ``:203-217``), declared so that no
+#: read of it runs a schema-inference job.
+DAILY_METRICS_SCHEMA = StructType(
+    [StructField("date", DateType()), StructField("asset", StringType())]
+    + [StructField(c, DoubleType()) for c in (*OHLC_COLS, *INDICATOR_COLS)]
 )
 
 #: Day-CSV interchange schema (reference ``:92-95``): explicit, never inferred.
@@ -92,10 +103,6 @@ KLINES_COLUMNS = (
     "taker_quote",
     "ignore",
 )
-
-OHLC_COLS = ("open", "high", "low", "close")
-INDICATOR_COLS = ("ret", "ma7", "ma30", "vol30")
-
 
 # ------------------------------------------------------------------- warehouse
 
@@ -342,6 +349,11 @@ def read_raw_day(spark: SparkSession, wh: Warehouse, day: str) -> DataFrame:
     )
 
 
+def read_daily_metrics(spark: SparkSession, wh: Warehouse) -> DataFrame:
+    """The ``daily_metrics`` table under its declared schema."""
+    return spark.read.schema(DAILY_METRICS_SCHEMA).parquet(wh.daily_metrics)
+
+
 def compute_daily_metrics(
     spark: SparkSession, wh: Warehouse, day: str, asset: str = "BTC-USD"
 ) -> DataFrame:
@@ -361,7 +373,7 @@ def compute_daily_metrics(
     )
 
     if os.path.exists(wh.daily_metrics):
-        existing = spark.read.parquet(wh.daily_metrics)
+        existing = read_daily_metrics(spark, wh)
         merged = upsert_by_key(
             existing, ohlc, key_cols=("date", "asset"), update_cols=OHLC_COLS
         )
@@ -373,7 +385,7 @@ def compute_daily_metrics(
             *[F.lit(None).cast("double").alias(c) for c in INDICATOR_COLS],
         )
     overwrite_staged(merged, wh.daily_metrics)
-    return spark.read.parquet(wh.daily_metrics)
+    return read_daily_metrics(spark, wh)
 
 
 def enrich_indicators(spark: SparkSession, wh: Warehouse) -> DataFrame:
@@ -381,7 +393,7 @@ def enrich_indicators(spark: SparkSession, wh: Warehouse) -> DataFrame:
     the full daily history and transactionally rewrite the table.  The input
     is the *aggregated* table (rows = days×assets), so "full history" is
     cheap regardless of raw-event volume; parallelism = #assets."""
-    metrics = spark.read.parquet(wh.daily_metrics)
+    metrics = read_daily_metrics(spark, wh)
     if metrics.isEmpty():  # P7, reference ``:259-261``
         raise ValueError("daily_metrics is empty")
     enriched = with_indicators(
@@ -391,7 +403,7 @@ def enrich_indicators(spark: SparkSession, wh: Warehouse) -> DataFrame:
         key_cols=("asset",),
     ).select("date", "asset", *OHLC_COLS, *INDICATOR_COLS)
     overwrite_staged(enriched, wh.daily_metrics)
-    return spark.read.parquet(wh.daily_metrics)
+    return read_daily_metrics(spark, wh)
 
 
 def plot_report(
@@ -406,7 +418,7 @@ def plot_report(
     behind the raster stay machine-readable.
     """
     os.makedirs(wh.reports_dir, exist_ok=True)
-    metrics = spark.read.parquet(wh.daily_metrics)
+    metrics = read_daily_metrics(spark, wh)
     window = trailing_days_slice(metrics, day, days=window_days)
     pdf = (
         window.select("date", "close", "ma7", "ma30")
@@ -453,7 +465,7 @@ def quality_checks(
 ) -> list[CheckResult]:
     """Stage 6 (reference ``:373-443``): Q1-Q5 as one report; raises on the
     first failure like the reference's asserts."""
-    metrics = spark.read.parquet(wh.daily_metrics)
+    metrics = read_daily_metrics(spark, wh)
     day_rows = read_raw_day(spark, wh, day).filter(F.col("asset") == asset)
     day_metrics = metrics.filter(F.col("date") == F.lit(day).cast("date"))
     results = [

@@ -1143,13 +1143,19 @@ _SQL_TEXT_TOP_TOKENS = """
 """
 
 
+#: seconds a superseded landing zone is kept after its last resolve
+_LANDING_GRACE_S = 3600
+
+
 def _landing_zone(sf_dir: str, table: str, fmt: str, land) -> str:
     """Cache a landed copy of a fixture table at most once per fixture
     VERSION: the path is keyed by the source parquet's (size, mtime)
     fingerprint — a regenerated fixture gets a fresh key, so a cached
     copy can never silently serve stale data while the oracle reads the
-    new parquet.  ``land(staging_path)`` writes into a private staging
-    dir which is atomically renamed into place; under a concurrent race
+    new parquet — and by the snapshot-table log format, so a copy
+    written in an older log shape is re-landed, never misread.
+    ``land(staging_path)`` writes into a private staging dir which is
+    atomically renamed into place; under a concurrent race
     the first rename wins and losers discard their staging, so readers
     only ever see a complete landing."""
     import os
@@ -1158,10 +1164,12 @@ def _landing_zone(sf_dir: str, table: str, fmt: str, land) -> str:
 
     import glob
 
+    from airflow_crypto_btc_spark.sources.snapshot_table import LOG_FORMAT
+
     src = os.path.join(sf_dir, f"{table}.parquet")
     stat = os.stat(src)
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    fp = f"{stat.st_size}_{stat.st_mtime_ns}"
+    fp = f"log{LOG_FORMAT}_{stat.st_size}_{stat.st_mtime_ns}"
     prefix = f"/tmp/spark_graft_{fmt}_{sf_tag}_"
     final = f"{prefix}{fp}"
     if os.path.isdir(final):
@@ -1192,12 +1200,8 @@ def _landing_zone(sf_dir: str, table: str, fmt: str, land) -> str:
     # mid-read on a landing it resolved moments ago (e.g. a long oracle
     # run against a just-regenerated fixture), and yanking files under
     # an active reader fails its queries for no correctness gain.
-    # Tunable for long runs via SPARK_GRAFT_LANDING_GRACE_S.
     import time
 
-    grace_s = float(
-        os.environ.get("SPARK_GRAFT_LANDING_GRACE_S", "3600")
-    )
     now = time.time()
     for stale in glob.glob(f"{prefix}*"):
         if stale == final or ".staging-" in stale:
@@ -1208,7 +1212,7 @@ def _landing_zone(sf_dir: str, table: str, fmt: str, land) -> str:
             shutil.rmtree(stale, ignore_errors=True)
             continue
         try:
-            recent = now - os.stat(stale).st_mtime < grace_s
+            recent = now - os.stat(stale).st_mtime < _LANDING_GRACE_S
         except OSError:
             continue  # already gone (concurrent cleanup won)
         if not recent:

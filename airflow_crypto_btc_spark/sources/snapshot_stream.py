@@ -21,6 +21,9 @@ Non-append commits in the interval:
   similarly-named ``ignoreChanges`` would instead re-emit the rewritten
   files; this source deliberately implements the skip variant).
 
+The stream's schema is the table's logged schema at load time; a part
+written before a column was added emits null for it.
+
 Driver-side row feed (`SimpleDataSourceStreamReader`) via pyarrow —
 correct at the incremental cadence this table sees (per-day appends); a
 firehose table would promote to the partition-planned stream reader with
@@ -40,6 +43,7 @@ from airflow_crypto_btc_spark.sources.snapshot_table import (
     _DATA_DIR,
     _list_versions,
     _log_path,
+    current_snapshot,
 )
 
 
@@ -91,7 +95,12 @@ class SnapshotStreamReader(SimpleDataSourceStreamReader):
             if not os.path.exists(path):
                 continue  # vacuumed beyond the retention horizon
             table = ds.dataset(path, format="parquet").to_table()
-            cols = [table[f].to_pylist() for f in self._fields]
+            cols = [
+                table[f].to_pylist()
+                if f in table.column_names
+                else [None] * table.num_rows  # predates the column
+                for f in self._fields
+            ]
             yield from zip(*cols)
 
     def read(self, start: dict):
@@ -114,13 +123,17 @@ class SnapshotStreamSource(DataSource):
     def name(cls) -> str:
         return "snapshot_stream"
 
-    def schema(self) -> str:
-        ddl = self.options.get("table_schema")
-        if not ddl:
+    def schema(self):
+        path = self.options.get("path")
+        if not path:
+            raise ValueError("snapshot_stream source requires option 'path'")
+        snap = current_snapshot(path)
+        if not snap.files:
             raise ValueError(
-                "snapshot_stream requires option 'table_schema' (DDL)"
+                f"snapshot_stream: {path} has no committed parts to take "
+                "a schema from"
             )
-        return ddl
+        return snap.schema
 
     def simpleStreamReader(self, schema) -> SnapshotStreamReader:
         return SnapshotStreamReader(schema, self.options)

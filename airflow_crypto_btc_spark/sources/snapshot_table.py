@@ -13,6 +13,10 @@ same public design Delta Lake / Iceberg use, reduced to its core:
 - ``<table>/_log/<version 8-digit>.json`` holds one commit each: a JSON
   record of ``add`` / ``remove`` file actions plus optional app-level
   transaction ids.
+- A commit that adds parts also logs their Spark schema (``schema``)
+  and per-part stats (row count, min/max), taken on the one job that
+  wrote them.  A snapshot's schema is the union of its live parts'
+  logged schemas: no read infers anything from parquet footers.
 - A commit is ONE ``O_CREAT|O_EXCL`` create of the next version file —
   atomic on POSIX and object stores with put-if-absent.  Losers of a race
   re-read the log and retry (optimistic concurrency).
@@ -34,18 +38,36 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
+
+#: commit-entry shape (2: entries that add parts log their schema);
+#: cached table copies key on it, so an older copy is rebuilt, not misread
+LOG_FORMAT = 2
+
+#: key under which staged stats carry their parts' schema to ``commit``,
+#: which logs it as the entry's ``schema`` (part names can't collide)
+_SCHEMA_KEY = "__schema"
 
 #: column types that get min/max stats in the commit log (data skipping)
 _STATS_TYPES = {
     "int", "bigint", "smallint", "tinyint", "float", "double",
     "date", "timestamp", "timestamp_ntz", "string",
 }
+
+
+class SnapshotSchemaError(RuntimeError):
+    """A snapshot's live parts have no one logged schema: a part whose
+    commit logged none (a table written before the log held schemas) or
+    a column typed differently by two parts.  Not a ``ValueError``, so
+    no caller that treats an empty table or an empty compact as benign
+    (``except ValueError``) can swallow it."""
 
 
 @dataclass
@@ -57,6 +79,38 @@ class Snapshot:
     #: free-form commit metadata (e.g. the source-corpus version an index
     #: was built from); the LATEST commit that carried meta wins
     meta: dict = field(default_factory=dict)
+    table: str = ""
+    #: live part -> the schema JSON its adding commit logged, in commit
+    #: order (the parts of one commit share one dict)
+    part_schemas: dict[str, dict] = field(default_factory=dict, repr=False)
+
+    @cached_property
+    def schema(self) -> StructType:
+        """Union of the live parts' logged schemas — what a read of this
+        snapshot surfaces.  Fields come in commit order, so a commit that
+        adds a column appends it; pre-evolution parts read it as null.
+        A same-name type conflict raises :class:`SnapshotSchemaError`,
+        and so does a live part whose
+        commit logged no schema (there is no footer-inference fallback)."""
+        missing = [f for f in self.files if f not in self.part_schemas]
+        if missing:
+            raise SnapshotSchemaError(
+                f"snapshot table {self.table}: live part {missing[0]} has "
+                "no schema in the commit log"
+            )
+        fields: dict[str, StructField] = {}
+        for logged in {id(s): s for s in self.part_schemas.values()}.values():
+            for f in StructType.fromJson(logged).fields:
+                have = fields.setdefault(
+                    f.name, StructField(f.name, f.dataType, True, f.metadata)
+                )
+                t, u = have.dataType.simpleString(), f.dataType.simpleString()
+                if t != u:
+                    raise SnapshotSchemaError(
+                        f"snapshot table {self.table}: column {f.name!r} "
+                        f"is {t} in one part and {u} in another"
+                    )
+        return StructType(list(fields.values()))
 
 
 def _log_path(table: str, version: int) -> str:
@@ -83,6 +137,7 @@ def current_snapshot(table: str, version: int | None = None) -> Snapshot:
     files: set[str] = set()
     txns: set[str] = set()
     stats: dict[str, dict] = {}
+    schemas: dict[str, dict] = {}
     meta: dict = {}
     last = -1
     for v in versions:
@@ -92,9 +147,12 @@ def current_snapshot(table: str, version: int | None = None) -> Snapshot:
             files.add(a)
             if a in entry.get("stats", {}):
                 stats[a] = entry["stats"][a]
+            if "schema" in entry:
+                schemas[a] = entry["schema"]
         for r in entry.get("remove", []):
             files.discard(r)
             stats.pop(r, None)
+            schemas.pop(r, None)
         if entry.get("txn_id"):
             txns.add(entry["txn_id"])
         if entry.get("meta"):
@@ -102,7 +160,7 @@ def current_snapshot(table: str, version: int | None = None) -> Snapshot:
         last = v
     return Snapshot(
         version=last, files=sorted(files), txn_ids=txns, stats=stats,
-        meta=meta,
+        meta=meta, table=table, part_schemas=schemas,
     )
 
 
@@ -157,36 +215,37 @@ def _json_safe(v):
     return v
 
 
-def _collect_stats(df: DataFrame) -> dict:
-    """Per-part min/max column stats plus the part's ROW COUNT (the
-    reserved ``__nrows`` key — column names can't collide, reserved
-    ``__``-prefixed engine columns are never stats-typed by accident
-    here because it is written unconditionally), computed at staging
-    time (one small aggregate job) and recorded in the commit entry —
-    the data-skipping metadata Delta/Iceberg keep per file.  The row
-    count makes "how big is this table" a METADATA question for
-    append-only tables (sum over live parts is exact), which the
-    merge-on-read serve's overdue gate needs (round-14 ADVICE).
-    JSON-safe: temporal values as ISO strings (lexicographic order ==
-    chronological order)."""
-    from pyspark.sql import functions as F
-
-    cols = [
+def _stat_cols(schema: StructType) -> list[str]:
+    """The columns that get min/max stats in the commit log."""
+    return [
         f.name
-        for f in df.schema.fields
+        for f in schema.fields
         if f.dataType.simpleString() in _STATS_TYPES
     ]
+
+
+def _stats_spec(cols: list[str]):
+    """``(aggregates, row -> stats)`` for a part's commit-log stats: the
+    min/max of ``cols`` (the data skipping Delta/Iceberg keep per file)
+    and its ROW COUNT under the reserved ``__nrows`` key, which makes a
+    table's size a METADATA question (the merge-on-read serve's overdue
+    gate needs it).  JSON-safe: temporal values as ISO strings
+    (lexicographic order == chronological order); an all-null column
+    gets no range."""
     aggs = [F.count(F.lit(1)).alias("__nrows")]
     for c in cols:
         aggs += [F.min(c).alias(f"mn__{c}"), F.max(c).alias(f"mx__{c}")]
-    row = df.agg(*aggs).collect()[0].asDict()
-    out = {
-        c: [_json_safe(row[f"mn__{c}"]), _json_safe(row[f"mx__{c}"])]
-        for c in cols
-        if row[f"mn__{c}"] is not None
-    }
-    out["__nrows"] = int(row["__nrows"])
-    return out
+
+    def to_stats(row: dict) -> dict:
+        out = {
+            c: [_json_safe(row[f"mn__{c}"]), _json_safe(row[f"mx__{c}"])]
+            for c in cols
+            if row[f"mn__{c}"] is not None
+        }
+        out["__nrows"] = int(row["__nrows"])
+        return out
+
+    return aggs, to_stats
 
 
 def snapshot_nrows(snap: Snapshot) -> int | None:
@@ -265,34 +324,9 @@ def read_snapshot(
                 for lo, hi in ranges
             )
         ]
-    paths = [os.path.join(table, _DATA_DIR, f) for f in snap.files]
-    if not files:  # nothing can match: keep the schema, return zero rows
-        # ALL paths, not one: the union schema of an evolved table cannot
-        # be derived from an arbitrary single part
-        return spark.read.option("mergeSchema", "true").parquet(
-            *paths
-        ).filter("1 = 0")
-    # mergeSchema: ADDITIVE schema evolution — a commit may append parts
-    # with new columns; the merged read surfaces the union schema with
-    # nulls for pre-evolution rows (Delta semantics).  Type changes are
-    # not supported (parquet union of incompatible types errors loudly).
-    # Old snapshots read only their own files, so time travel sees the
-    # schema as of that version.
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table, _DATA_DIR, f) for f in files]
-    )
-    if len(files) < len(snap.files):
-        # pruning must not change the SCHEMA: if every post-evolution
-        # part was skipped, the kept files' footers alone would miss the
-        # evolved columns — align to the full snapshot's union schema
-        # (footer-only read of the pruned-away parts, no data scan)
-        df = df.unionByName(
-            spark.read.option("mergeSchema", "true")
-            .parquet(*paths)
-            .filter("1 = 0"),
-            allowMissingColumns=True,
-        )
-    return df
+    # under the snapshot's logged schema: pruning (even to zero parts)
+    # never changes the columns a version surfaces
+    return read_parts(spark, table, files, snap)
 
 
 #: dtypes files_overlapping_keys can range-test; everything else falls
@@ -411,57 +445,47 @@ def read_parts(
     spark: SparkSession,
     table: str,
     files: list[str],
-    schema_files: list[str] | None = None,
+    snap: Snapshot,
 ) -> DataFrame:
-    """Scan an EXPLICIT subset of a snapshot's part files — the
+    """Scan an EXPLICIT subset of ``snap``'s part files — the
     copy-on-write rewrite path's reader (a DELETE touches only the
     files whose stats overlap the deletion set; the survivors of those
     files are rewritten, every other file carries over by reference).
-    ``schema_files`` (default: the subset) aligns the result to the
-    union schema of a wider file set, the same additive-evolution
-    guard ``read_snapshot`` applies when pruning skips the only parts
-    that carry an evolved column."""
-    if not files:
-        raise ValueError("read_parts needs at least one file")
-    df = spark.read.option("mergeSchema", "true").parquet(
+    Reads under ``snap``'s logged schema, so no job runs to plan it, a
+    part that predates an evolved column reads it as null, and an empty
+    subset is a zero-row frame."""
+    return spark.read.schema(snap.schema).parquet(
         *[os.path.join(table, _DATA_DIR, f) for f in files]
     )
-    if schema_files and set(schema_files) - set(files):
-        df = df.unionByName(
-            spark.read.option("mergeSchema", "true")
-            .parquet(
-                *[
-                    os.path.join(table, _DATA_DIR, f)
-                    for f in schema_files
-                ]
-            )
-            .filter("1 = 0"),
-            allowMissingColumns=True,
-        )
-    return df
 
 
 def read_snapshot_or_none(
     spark: SparkSession, table: str
 ) -> DataFrame | None:
     """``read_snapshot`` for bootstrap paths: ``None`` when the table
-    has no committed snapshot yet (first micro-batch of a stream); any
-    other failure propagates.  Shared by every streaming sink."""
-    try:
-        return read_snapshot(spark, table)
-    except ValueError:
+    has no live part yet (first micro-batch of a stream); any other
+    failure propagates.  Shared by every streaming sink."""
+    snap = current_snapshot(table)
+    if not snap.files:
         return None
+    return read_parts(spark, table, snap.files, snap)
 
 
 def _write_parts(df: DataFrame, table: str) -> tuple[list[str], dict]:
-    """Stage immutable data files (INVISIBLE until a commit references
-    them) plus their min/max column stats.  One part dir per staged write
-    keeps names collision-free; stats granularity is the part."""
+    """Stage one immutable part (INVISIBLE until a commit references it)
+    in ONE write job that also observes its stats; the returned stats
+    carry its schema for the commit to log.  One part dir per staged
+    write keeps names collision-free; stats granularity is the part."""
     part = f"part-{uuid.uuid4().hex}"
-    out = os.path.join(table, _DATA_DIR, part)
-    df.write.mode("error").parquet(out)
-    df_back = df.sparkSession.read.parquet(out)
-    return [part], {part: _collect_stats(df_back)}
+    aggs, to_stats = _stats_spec(_stat_cols(df.schema))
+    obs = Observation()
+    df.observe(obs, *aggs).write.mode("error").parquet(
+        os.path.join(table, _DATA_DIR, part)
+    )
+    return [part], {
+        part: to_stats(obs.get),
+        _SCHEMA_KEY: df.schema.jsonValue(),
+    }
 
 
 def _write_clustered_parts(
@@ -470,40 +494,22 @@ def _write_clustered_parts(
     """Stage every range part of a clustered compact in ONE
     ``partitionBy`` write job (each task owns exactly one ``__pid``, so
     each partition dir lands exactly one data file) plus ONE grouped
-    aggregate for all per-part min/max stats.  Replaces the previous
-    one-write-job-PER-part loop — O(target_parts) sequential driver
-    round-trips that took minutes at a few thousand files (found by the
-    round-13 takedown probe's sf1 zone build)."""
+    aggregate for all per-part stats, instead of one write job per
+    part (O(target_parts) sequential driver round-trips took minutes at
+    a few thousand files)."""
     part = f"part-{uuid.uuid4().hex}"
     out = os.path.join(table, _DATA_DIR, part)
-    clustered.drop("__z").write.partitionBy("__pid").mode(
-        "error"
-    ).parquet(out)
-    pids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(out)
-        if d.startswith("__pid=")
-    )
-    parts = [f"{part}/__pid={pid}" for pid in pids]
-    stats: dict[str, dict] = {p: {} for p in parts}
-    aggs = [F.count(F.lit(1)).alias("__nrows")]
-    for c in stat_cols:
-        aggs += [
-            F.min(c).alias(f"mn__{c}"),
-            F.max(c).alias(f"mx__{c}"),
-        ]
-    for r in clustered.groupBy("__pid").agg(*aggs).collect():
-        d = r.asDict()
-        part_stats = {
-            c: [
-                _json_safe(d[f"mn__{c}"]),
-                _json_safe(d[f"mx__{c}"]),
-            ]
-            for c in stat_cols
-            if d[f"mn__{c}"] is not None
-        }
-        part_stats["__nrows"] = int(d["__nrows"])
-        stats[f"{part}/__pid={int(d['__pid'])}"] = part_stats
+    written = clustered.drop("__z")
+    written.write.partitionBy("__pid").mode("error").parquet(out)
+    # the write lands one dir per __pid that holds rows: exactly the
+    # groups of this aggregate
+    aggs, to_stats = _stats_spec(stat_cols)
+    stats = {
+        f"{part}/__pid={int(r['__pid'])}": to_stats(r.asDict())
+        for r in clustered.groupBy("__pid").agg(*aggs).collect()
+    }
+    parts = sorted(stats)
+    stats[_SCHEMA_KEY] = written.drop("__pid").schema.jsonValue()
     return parts, stats
 
 
@@ -577,6 +583,8 @@ def commit(
     snapshot (incremental maintenance folding a delta into state) close
     their check-to-commit race: the put-if-absent log file is the atomic
     arbiter, so exactly one of two racing writers can ever win."""
+    stats = dict(stats or {})
+    schema = stats.pop(_SCHEMA_KEY, None)  # logged beside, not in, stats
     for _ in range(max_retries):
         version = (current_snapshot(table).version) + 1
         if txn_id and txn_id in current_snapshot(table).txn_ids:
@@ -592,6 +600,7 @@ def commit(
             "operation": operation,
             "add": add,
             "remove": remove,
+            **({"schema": schema} if schema else {}),
             **({"stats": stats} if stats else {}),
             **({"txn_id": txn_id} if txn_id else {}),
             **({"meta": meta} if meta else {}),
@@ -728,13 +737,7 @@ def compact(
             # row-group stats inside a part only help predicates Spark
             # pushes to the scan, which join keys are not
             parts, stats = _write_clustered_parts(
-                clustered,
-                table,
-                [
-                    f.name
-                    for f in df.schema.fields
-                    if f.dataType.simpleString() in _STATS_TYPES
-                ],
+                clustered, table, _stat_cols(df.schema)
             )
         else:
             parts, stats = _write_parts(df.coalesce(target_parts), table)
@@ -743,6 +746,7 @@ def compact(
             "operation": "compact",
             "add": parts,
             "remove": base.files,
+            "schema": stats.pop(_SCHEMA_KEY),
             "stats": stats,
         }
         if _try_commit(table, base.version + 1, entry):
@@ -869,14 +873,9 @@ def upsert(
     touched, carried = files_overlapping_all_keys(
         spark, snap, incoming, list(key_cols)
     )
-    if touched:
-        existing = read_parts(
-            spark, table, touched, schema_files=snap.files
-        )
-    else:  # pure insert batch: no file overlaps any incoming key
-        existing = read_snapshot(
-            spark, table, version=snap.version
-        ).filter("1 = 0")
+    # a pure-insert batch (no file overlaps any incoming key) reads
+    # zero parts: an empty frame under the snapshot schema
+    existing = read_parts(spark, table, touched, snap)
     merged = upsert_by_key(existing, incoming, key_cols, update_cols)
     parts, stats = _write_parts(merged, table)
     return commit(table, add=parts, remove=touched, operation="upsert",
@@ -929,7 +928,7 @@ def _fold_cdc_tombstones(
     if not touched and dels.limit(1).count() == 0:
         return  # no tombstone overlaps this batch at all
     if touched:
-        exist = read_parts(spark, tomb, touched, schema_files=snap.files)
+        exist = read_parts(spark, tomb, touched, snap)
         survivors = exist.join(F.broadcast(up_keys), keys, "left_anti")
         merged = (
             survivors.select(*keys, "__seq")
@@ -1001,8 +1000,7 @@ def expire_cdc_tombstones(
     add: list[str] = []
     stats: dict = {}
     if straddle:
-        rows = read_parts(spark, tomb, straddle,
-                          schema_files=snap.files)
+        rows = read_parts(spark, tomb, straddle, snap)
         survivors = rows.filter(F.col("__seq") >= F.lit(below_seq))
         n_before = rows.count()
         n_after = survivors.count()
@@ -1119,14 +1117,7 @@ def apply_changes(
     wm_touched, wm_carried = files_overlapping_all_keys(
         spark, snap, batch_keys, keys
     )
-    if wm_touched:
-        wm_src = read_parts(
-            spark, table, wm_touched, schema_files=snap.files
-        )
-    else:
-        wm_src = read_snapshot(
-            spark, table, version=snap.version
-        ).filter("1 = 0")
+    wm_src = read_parts(spark, table, wm_touched, snap)
     # the table's __seq dtype (pinned by the first CDC fold) governs;
     # mixed-width sequence dtypes across batches would otherwise break
     # the parquet schema merge
@@ -1149,10 +1140,7 @@ def apply_changes(
         )
         if t_touched:
             tomb_wm = (
-                read_parts(
-                    spark, tomb, t_touched,
-                    schema_files=tomb_snap.files,
-                )
+                read_parts(spark, tomb, t_touched, tomb_snap)
                 .select(*keys, F.col("__seq").alias("__wm_tomb"))
                 .join(F.broadcast(batch_keys), keys, "left_semi")
             )
@@ -1226,14 +1214,7 @@ def apply_changes(
         # paying the per-key-column range probe twice on the hot path
         # (round-14 self-review; stale batches are the rare case)
         touched, carried = wm_touched, wm_carried
-    if touched:
-        existing = read_parts(
-            spark, table, touched, schema_files=snap.files
-        )
-    else:
-        existing = read_snapshot(
-            spark, table, version=snap.version
-        ).filter("1 = 0")
+    existing = read_parts(spark, table, touched, snap)
     if "__seq" not in existing.columns:
         existing = existing.withColumn(
             "__seq", F.lit(None).cast(seq_type)
@@ -1306,19 +1287,12 @@ def snapshot_changes(
         added.extend(entry.get("add", []))
     rewriting = any(op not in ("append", None) for op in ops)
     if not rewriting:
-        live_added = [f for f in added if f in set(snap_to.files)]
-        if not live_added:
-            base = read_snapshot(spark, table, snap_to.version)
-            return base.withColumn(
-                "_change_type", F.lit("insert")
-            ).filter("1 = 0")
-        # mergeSchema mirrors read_snapshot: an appended part may carry
-        # evolved columns and the feed must surface them (a single-footer
-        # schema would silently drop them, listing-order-dependent)
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table, _DATA_DIR, f) for f in live_added]
-        )
-        return df.withColumn("_change_type", F.lit("insert"))
+        # the added parts under the target version's schema: evolved
+        # columns surface, and a span with no live additions is empty
+        live = set(snap_to.files)
+        return read_parts(
+            spark, table, [f for f in added if f in live], snap_to
+        ).withColumn("_change_type", F.lit("insert"))
     if not key_cols:
         raise ValueError(
             "span contains a rewrite commit; key_cols required for a "
@@ -1326,15 +1300,11 @@ def snapshot_changes(
         )
     new = read_snapshot(spark, table, snap_to.version)
     # a from_version before the first commit (or one whose snapshot holds
-    # no files) means the old side is EMPTY, not an error: the full-history
-    # feed of a rewrite-containing span is every current row as an insert
-    if from_version < 0 or not current_snapshot(table, from_version).files:
-        # a fresh frame, not new.filter(false): the diff below joins old
-        # against new, and two lineages of one plan trip the ambiguous-
-        # self-join analyzer
-        old = spark.createDataFrame([], new.schema)
-    else:
-        old = read_snapshot(spark, table, from_version)
+    # no files) reads zero parts: the old side is EMPTY, not an error, so
+    # the full-history feed of a rewrite span is every current row as an
+    # insert
+    snap_from = current_snapshot(table, from_version)
+    old = read_parts(spark, table, snap_from.files, snap_from)
     # Multiset diff via per-row-identity counts: group each side by the
     # FULL row (map-side combined — one shuffle of distinct rows per
     # side), full-outer join the count tables null-safely, and re-emit

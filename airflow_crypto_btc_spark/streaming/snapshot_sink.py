@@ -94,7 +94,7 @@ def rollup_maintenance_sink(
         )
         if touched:
             old_touched = read_parts(
-                spark, state_table, touched, schema_files=snap.files
+                spark, state_table, touched, snap
             ).join(delta_state.select(*keys), keys, "left_semi")
             merged = merge_ohlc_states(
                 old_touched, delta_state, key_cols=key_cols

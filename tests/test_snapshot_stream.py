@@ -28,7 +28,6 @@ def _drain(spark, table, sink, ckpt, ignore_changes=False):
     stream = (
         spark.readStream.format("snapshot_stream")
         .option("path", table)
-        .option("table_schema", SCHEMA)
         .option("ignore_changes", str(ignore_changes).lower())
         .load()
     )
@@ -86,3 +85,35 @@ def test_stream_rejects_rewrites_unless_ignored(spark, tmp_path):
     got = {str(r["date"]) for r in
            spark.read.parquet(str(tmp_path / "sink2")).collect()}
     assert "2024-01-02" in got
+
+
+def test_stream_over_evolved_table_nulls_missing_columns(spark, tmp_path):
+    """The stream takes its schema from the commit log: after an append
+    adds a column, parts written before it stream that column as null
+    (no caller-declared schema, no KeyError on the older part)."""
+    register(spark)
+    table = str(tmp_path / "tbl")
+    sink = str(tmp_path / "sink")
+    append(spark, _df(spark, 1, 1.0), table)
+    append(
+        spark,
+        spark.createDataFrame(
+            [(dt.date(2024, 1, 2), 2.0, 7)], "date date, close double, w int"
+        ),
+        table,
+    )
+    _drain(spark, table, sink, str(tmp_path / "ckpt"))
+    got = sorted(
+        (str(r["date"]), r["close"], r["w"])
+        for r in spark.read.parquet(sink).collect()
+    )
+    assert got == [("2024-01-01", 1.0, None), ("2024-01-02", 2.0, 7)]
+
+
+def test_stream_over_table_without_commits_names_it(spark, tmp_path):
+    register(spark)
+    table = str(tmp_path / "never_written")
+    with pytest.raises(Exception, match="never_written"):
+        spark.readStream.format("snapshot_stream").option(
+            "path", table
+        ).load()

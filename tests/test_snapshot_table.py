@@ -566,8 +566,8 @@ def test_schema_evolution_additive(spark, tmp_path):
 
 def test_change_feed_carries_evolved_columns(spark, tmp_path):
     """Append-only change feed across a schema evolution must surface
-    the evolved column (mergeSchema on the added files), not silently
-    drop it based on whichever footer wins."""
+    the evolved column (the logged schema of the target version), not
+    silently drop it based on whichever footer wins."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
         append,
         snapshot_changes,
@@ -1151,7 +1151,7 @@ def test_expire_cdc_tombstones_is_metadata_only_when_clustered(
     after = current_snapshot(tomb)
     carried = set(before.files) & set(after.files)
     assert len(carried) == 1  # the 21..30 file moved zero bytes
-    live = read_parts(spark, tomb, after.files).collect()
+    live = read_parts(spark, tomb, after.files, after).collect()
     assert sorted(r["__seq"] for r in live) == list(range(15, 31))
 
     # replay: no-op
@@ -1415,3 +1415,219 @@ def test_apply_changes_sequence_col_named_seq_keeps_watermark(
         for r in read_snapshot(spark, tbl).select("k", "v").collect()
     }
     assert rows[3] == 333  # seq-5 change gated by the stored seq-7
+
+
+def _jobs_in(spark, group, fn):
+    """(fn's result, number of Spark jobs it ran) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _evolved_table(spark, tbl):
+    """v0: (k, v); v1 adds a column ``w`` in the middle of the frame."""
+    v0 = append(
+        spark, spark.range(1, 3).selectExpr("id AS k", "'a' AS v"), tbl
+    )
+    append(
+        spark,
+        spark.range(10, 12).selectExpr(
+            "id AS k", "id * 1.5 AS w", "'b' AS v"
+        ),
+        tbl,
+    )
+    return v0
+
+
+def test_append_runs_one_job_and_snapshot_reads_plan_none(spark, tmp_path):
+    """The commit log holds each part's schema and stats: an append of
+    an unshuffled frame is ONE write job (stats observed on it, no
+    read-back), and planning a snapshot read — plain, pruned, pruned to
+    zero parts, an explicit part subset, an append-span change feed —
+    runs no job at all (no footer inference)."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        read_parts,
+        snapshot_changes,
+    )
+
+    tbl = str(tmp_path / "jobs")
+    frame = spark.range(1, 5).selectExpr("id AS k", "id * 2e0 AS x")
+    v0, n = _jobs_in(spark, "snap-append", lambda: append(spark, frame, tbl))
+    assert n == 1
+    append(spark, spark.range(10, 12).selectExpr("id AS k", "5e-1 AS x"), tbl)
+    snap = current_snapshot(tbl)
+    plans = {
+        "plain": lambda: read_snapshot(spark, tbl),
+        "pruned": lambda: read_snapshot(spark, tbl, prune=("k", 10, 11)),
+        "zero-kept": lambda: read_snapshot(spark, tbl, prune=("k", 50, 60)),
+        "parts": lambda: read_parts(spark, tbl, snap.files[:1], snap),
+        "changes": lambda: snapshot_changes(spark, tbl, from_version=v0),
+    }
+    for name, plan in plans.items():
+        df, n = _jobs_in(spark, f"snap-plan-{name}", plan)
+        assert n == 0, name
+        assert df.columns[:2] == ["k", "x"], name
+    assert read_snapshot(spark, tbl, prune=("k", 50, 60)).count() == 0
+    assert snapshot_changes(spark, tbl, from_version=v0).count() == 2
+
+
+def test_logged_schema_matches_footer_merge(spark, tmp_path):
+    """Reads take their schema from the commit log.  It must equal what
+    the footer merge over the live parts surfaces (the reference kept
+    here) on plain, evolved, pruned-past-the-evolved-part, zero-kept and
+    time-travel reads, with fields in commit order."""
+    tbl = str(tmp_path / "parity")
+
+    def footer_merge(version=None):
+        snap = current_snapshot(tbl, version)
+        return spark.read.option("mergeSchema", True).parquet(
+            *[os.path.join(tbl, "data", f) for f in snap.files]
+        ).schema
+
+    def names_types(schema):
+        return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+    v0 = _evolved_table(spark, tbl)
+    cases = {
+        "plain@v0": (read_snapshot(spark, tbl, v0), v0),
+        "evolved": (read_snapshot(spark, tbl), None),
+        "pruned-past-evolved": (
+            read_snapshot(spark, tbl, prune=("k", 1, 2)), None
+        ),
+        "zero-kept": (read_snapshot(spark, tbl, prune=("k", 50, 60)), None),
+        "time-travel": (read_snapshot(spark, tbl, version=v0), v0),
+    }
+    for name, (df, version) in cases.items():
+        assert names_types(df.schema) == names_types(
+            footer_merge(version)
+        ), name
+    assert read_snapshot(spark, tbl).columns == ["k", "v", "w"]
+    pruned = read_snapshot(spark, tbl, prune=("k", 1, 2)).collect()
+    assert sorted((r["k"], r["w"]) for r in pruned) == [(1, None), (2, None)]
+
+
+def _drop_logged_schema(table, version=0):
+    """Rewrite one commit as older code logged it: no ``schema``."""
+    import json
+
+    from airflow_crypto_btc_spark.sources.snapshot_table import _log_path
+
+    path = _log_path(table, version)
+    with open(path) as fh:
+        entry = json.load(fh)
+    entry.pop("schema")
+    with open(path, "w") as fh:
+        json.dump(entry, fh)
+
+
+def test_logged_schema_conflict_and_missing_schema_raise(spark, tmp_path):
+    """A same-name type conflict across live parts raises (as the
+    footer-merge read did), and so does a live part whose commit logged
+    no schema — there is no inference fallback."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        SnapshotSchemaError,
+    )
+
+    clash = str(tmp_path / "clash")
+    append(spark, spark.range(2).selectExpr("id AS k"), clash)
+    append(spark, spark.range(2).selectExpr("CAST(id AS string) AS k"), clash)
+    with pytest.raises(SnapshotSchemaError, match="clash.*'k'"):
+        read_snapshot(spark, clash)
+
+    legacy = str(tmp_path / "legacy")
+    append(spark, spark.range(2).selectExpr("id AS k"), legacy)
+    _drop_logged_schema(legacy)
+    assert current_snapshot(legacy).version == 0  # metadata still reads
+    with pytest.raises(SnapshotSchemaError, match="legacy.*no schema"):
+        read_snapshot(spark, legacy)
+
+
+def test_schemaless_table_raises_through_bootstrap_paths(spark, tmp_path):
+    """The paths that treat a missing table or an empty compact as
+    benign must not mistake a table whose log holds no schema for one:
+    the sinks' bootstrap read, the sinks' ``except ValueError`` around
+    ``compact``, and the takedown merge-on-read serve (a DV table read
+    as absent would serve every taken-down id)."""
+    from airflow_crypto_btc_spark.operators import takedown as td
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        SnapshotSchemaError,
+        compact,
+        read_snapshot_or_none,
+    )
+
+    assert read_snapshot_or_none(spark, str(tmp_path / "none")) is None
+    state, dv = str(tmp_path / "state"), str(tmp_path / "dv")
+    append(spark, spark.range(4).selectExpr("id AS doc_id"), state)
+    append(spark, spark.range(2).selectExpr("id AS doc_id"), dv)
+    assert sorted(
+        r.doc_id for r in td.read_snapshot_mor(spark, state, dv, "doc_id")
+        .collect()
+    ) == [2, 3]
+    _drop_logged_schema(dv)
+    with pytest.raises(SnapshotSchemaError, match="dv.*no schema"):
+        read_snapshot_or_none(spark, dv)
+    with pytest.raises(SnapshotSchemaError, match="dv.*no schema"):
+        compact(spark, dv)
+    with pytest.raises(SnapshotSchemaError, match="dv.*no schema"):
+        td.read_snapshot_mor(spark, state, dv, "doc_id")
+
+
+def test_observed_stats_match_read_back_aggregate(spark, tmp_path):
+    """The stats a staged part logs are observed on its write job; they
+    must equal the aggregate over the part read back (the reference
+    kept here) for NaN, null-only columns, temporal types, strings and
+    an empty frame."""
+    import datetime as dt
+    import json
+
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        _json_safe,
+        _stat_cols,
+    )
+
+    def read_back_stats(path):
+        back = spark.read.parquet(path)
+        cols = _stat_cols(back.schema)
+        aggs = [F.count(F.lit(1)).alias("__nrows")]
+        for c in cols:
+            aggs += [F.min(c).alias(f"mn__{c}"), F.max(c).alias(f"mx__{c}")]
+        row = back.agg(*aggs).collect()[0].asDict()
+        out = {
+            c: [_json_safe(row[f"mn__{c}"]), _json_safe(row[f"mx__{c}"])]
+            for c in cols
+            if row[f"mn__{c}"] is not None
+        }
+        out["__nrows"] = int(row["__nrows"])
+        return out
+
+    rows = [
+        (1, 1.5, None, dt.date(2024, 1, 2),
+         dt.datetime(2024, 1, 2, 3, 4, 5), dt.datetime(2024, 1, 2, 3, 4, 5),
+         "b"),
+        (3, float("nan"), None, dt.date(2023, 12, 31),
+         dt.datetime(2023, 12, 31, 23, 59, 59),
+         dt.datetime(2023, 12, 31, 23, 59, 59), "a"),
+        (2, -0.5, None, None, None, None, None),
+    ]
+    schema = (
+        "i int, x double, nul string, d date, ts timestamp, "
+        "tn timestamp_ntz, s string"
+    )
+    full = spark.createDataFrame(rows, schema)
+    got = {}
+    for name, df in {"full": full, "empty": full.filter("1 = 0")}.items():
+        tbl = str(tmp_path / f"stats_{name}")
+        parts, stats = _write_parts(df, tbl)
+        got[name] = stats[parts[0]]
+        want = read_back_stats(os.path.join(tbl, "data", parts[0]))
+        # JSON text compares NaN to NaN
+        assert json.dumps(got[name], sort_keys=True) == json.dumps(
+            want, sort_keys=True
+        ), name
+    assert "nul" not in got["full"] and got["full"]["__nrows"] == 3
+    assert got["empty"] == {"__nrows": 0}

@@ -13,6 +13,7 @@ With no query names every catalog entry runs; an unknown name is an error.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -67,7 +68,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this tool sits in, wherever it is run from
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
     import __spark_entry__ as e
     from airflow_crypto_btc_spark.session import get_spark
 

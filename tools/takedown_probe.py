@@ -135,7 +135,7 @@ def probe(sf_dir: str) -> list[dict]:
                     files_rewritten += len(removed)
                     if added:
                         rows_rewritten += st.read_parts(
-                            spark, t, added
+                            spark, t, added, st.current_snapshot(t)
                         ).count()
                 out.append({
                     "sf_dir": os.path.basename(sf_dir.rstrip("/")),
