@@ -37,12 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class ConcurrentMaintenanceError(RuntimeError):
-    """Another maintenance run advanced the state table's high-water mark
-    while this one was reading — the single-writer contract was violated.
-    The run aborted before committing; retrying is safe."""
-
-
 def ohlc_state(
     df: DataFrame,
     ts_col: str = "ts",
@@ -208,9 +202,9 @@ def maintain_ohlc_rollup(
     commit is a COMPARE-AND-SWAP pinned to the state-table version this
     run READ (``expect_version``, arbitrated by the commit log's
     put-if-absent), so two runs that observed different base heads can
-    never both fold: the loser's commit raises and surfaces as
-    ``ConcurrentMaintenanceError``, to be retried from the read.  The
-    early high-water-mark re-check remains as a cheap fast-fail; the
+    never both fold: the loser's commit raises ``CommitConflictError``,
+    to be retried from the read.  The early high-water-mark re-check
+    (same error) remains as a cheap fast-fail; the
     CAS, not the check, is the correctness guarantee (round-7's
     documented check-to-commit TOCTOU window is thereby closed).
     """
@@ -243,7 +237,7 @@ def maintain_ohlc_rollup(
     def _guard() -> None:
         now = rollup_high_water_mark(state_table)
         if now != consumed:
-            raise ConcurrentMaintenanceError(
+            raise CommitConflictError(
                 f"high-water mark moved {consumed} -> {now} during "
                 f"maintenance of {state_table}; aborting (single-writer "
                 "contract violated) — retry the run"
@@ -252,13 +246,10 @@ def maintain_ohlc_rollup(
     state_snap = current_snapshot(state_table, version=state_v)
     if not state_snap.files:  # state table absent/empty — bootstrap run
         _guard()
-        try:
-            append(
-                spark, delta_state, state_table, txn_id=txn,
-                expect_version=state_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        append(
+            spark, delta_state, state_table, txn_id=txn,
+            expect_version=state_v,
+        )
         return head
     # only groups the delta touches participate in the merge, and the
     # prior-state READ narrows to the files whose key ranges overlap
@@ -278,11 +269,8 @@ def maintain_ohlc_rollup(
     else:  # every delta key is brand-new: pure insert
         merged = delta_state
     _guard()  # cheap fast-fail; the CAS below is the guarantee
-    try:
-        upsert(
-            spark, merged, state_table, key_cols=keys, txn_id=txn,
-            expect_version=state_v,
-        )
-    except CommitConflictError as exc:
-        raise ConcurrentMaintenanceError(str(exc)) from exc
+    upsert(
+        spark, merged, state_table, key_cols=keys, txn_id=txn,
+        expect_version=state_v,
+    )
     return head

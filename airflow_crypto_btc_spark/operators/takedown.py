@@ -230,10 +230,10 @@ def evict_rows(
     # a fully-evicted part simply vanishes — UNLESS it was the last
     # file: the snapshot schema is the union of the LIVE parts' logged
     # schemas, so an emptied table keeps one zero-row part to hold it
-    parts, stats = (
+    parts, stats, schema = (
         _write_parts(kept, table)
         if n_kept or not carried
-        else ([], {})
+        else ([], {}, None)
     )
     meta["rows_removed"] = n_removed
     commit(
@@ -243,6 +243,7 @@ def evict_rows(
         operation="takedown",
         txn_id=txn_id,
         stats=stats,
+        schema=schema,
         meta=meta,
         expect_version=snap.version,
     )
@@ -390,7 +391,7 @@ def takedown_gram_index(
     kept = merged.filter("df > 0").select("h", "df")
     grams_touched = merged.filter("_d > 0").count()
     grams_deleted = merged.filter("_d > 0 AND df <= 0").count()
-    parts, stats = _write_parts(kept, gram_table)
+    parts, stats, schema = _write_parts(kept, gram_table)
     meta = dict(snap.meta)
     meta.update(
         {
@@ -406,6 +407,7 @@ def takedown_gram_index(
         operation="takedown_decrement",
         txn_id=f"{txn_id}:gram",
         stats=stats,
+        schema=schema,
         meta=meta,
         expect_version=snap.version,
     )
@@ -735,7 +737,7 @@ def takedown_semantic(
         survivors[id_col] == F.col("__aff"),
         "left_anti",
     ).select(id_col, "cid", "dup_of", "keep").unionByName(relabeled)
-    parts, stats = _write_parts(new_labels, labels_table)
+    parts, stats, schema = _write_parts(new_labels, labels_table)
     meta = dict(snap.meta)
     meta.update(
         {
@@ -751,6 +753,7 @@ def takedown_semantic(
         operation="takedown_relabel",
         txn_id=lt,
         stats=stats,
+        schema=schema,
         meta=meta,
         expect_version=snap.version,
     )
@@ -918,7 +921,7 @@ def takedown_split(
     pe2 = evict_rows(spark, pairs_table, doc_ids=ids, id_col="id_b",
                      txn_id=f"{txn_id}:pairs_b")
     if folded_v is None:
-        parts, stats = _write_parts(rebased, splits_table)
+        parts, stats, schema = _write_parts(rebased, splits_table)
         commit(
             splits_table,
             add=parts,
@@ -926,6 +929,7 @@ def takedown_split(
             operation="takedown_rebase",
             txn_id=splits_txn,
             stats=stats,
+            schema=schema,
             meta={
                 "assign_removed": n_assign_removed,
                 "pairs_version": pinned_pairs_v,

@@ -51,10 +51,6 @@ _DATA_DIR = "data"
 #: cached table copies key on it, so an older copy is rebuilt, not misread
 LOG_FORMAT = 2
 
-#: key under which staged stats carry their parts' schema to ``commit``,
-#: which logs it as the entry's ``schema`` (part names can't collide)
-_SCHEMA_KEY = "__schema"
-
 #: column types that get min/max stats in the commit log (data skipping)
 _STATS_TYPES = {
     "int", "bigint", "smallint", "tinyint", "float", "double",
@@ -464,33 +460,56 @@ def read_snapshot_or_none(
 ) -> DataFrame | None:
     """``read_snapshot`` for bootstrap paths: ``None`` when the table
     has no live part yet (first micro-batch of a stream); any other
-    failure propagates.  Shared by every streaming sink."""
+    failure propagates."""
     snap = current_snapshot(table)
     if not snap.files:
         return None
     return read_parts(spark, table, snap.files, snap)
 
 
-def _write_parts(df: DataFrame, table: str) -> tuple[list[str], dict]:
+def fold_base(
+    spark: SparkSession, table: str, txn_id: str
+) -> tuple[int, DataFrame | None]:
+    """``(version, frame)``: ``table`` as the streaming fold committing
+    under ``txn_id`` must see it (README, "sink contract"); the frame is
+    ``None`` when that version has no live part.
+
+    Normally this is the current version, read pinned AT it, so the
+    version is the fold's compare-and-swap anchor and the read can hold
+    no commit the anchor does not.  If ``txn_id`` already landed (a
+    replay after a crash past the fold's commit), it is the version just
+    before that commit (time travel): the live table holds the batch's
+    own rows, which would empty its fresh set and change everything
+    computed from it.  The replayed commit then skips by txn id, so its
+    anchor is never tested."""
+    snap = current_snapshot(table)
+    if txn_id in snap.txn_ids:
+        snap = current_snapshot(table, txn_version(table, txn_id) - 1)
+    if not snap.files:
+        return snap.version, None
+    return snap.version, read_parts(spark, table, snap.files, snap)
+
+
+def _write_parts(
+    df: DataFrame, table: str
+) -> tuple[list[str], dict, dict]:
     """Stage one immutable part (INVISIBLE until a commit references it)
-    in ONE write job that also observes its stats; the returned stats
-    carry its schema for the commit to log.  One part dir per staged
-    write keeps names collision-free; stats granularity is the part."""
+    in ONE write job that also observes its stats.  Returns ``(parts,
+    stats, schema)``; the commit logs the schema beside the stats.  One
+    part dir per staged write keeps names collision-free; stats
+    granularity is the part."""
     part = f"part-{uuid.uuid4().hex}"
     aggs, to_stats = _stats_spec(_stat_cols(df.schema))
     obs = Observation()
     df.observe(obs, *aggs).write.mode("error").parquet(
         os.path.join(table, _DATA_DIR, part)
     )
-    return [part], {
-        part: to_stats(obs.get),
-        _SCHEMA_KEY: df.schema.jsonValue(),
-    }
+    return [part], {part: to_stats(obs.get)}, df.schema.jsonValue()
 
 
 def _write_clustered_parts(
     clustered: DataFrame, table: str, stat_cols: list[str]
-) -> tuple[list[str], dict]:
+) -> tuple[list[str], dict, dict]:
     """Stage every range part of a clustered compact in ONE
     ``partitionBy`` write job (each task owns exactly one ``__pid``, so
     each partition dir lands exactly one data file) plus ONE grouped
@@ -508,9 +527,7 @@ def _write_clustered_parts(
         f"{part}/__pid={int(r['__pid'])}": to_stats(r.asDict())
         for r in clustered.groupBy("__pid").agg(*aggs).collect()
     }
-    parts = sorted(stats)
-    stats[_SCHEMA_KEY] = written.drop("__pid").schema.jsonValue()
-    return parts, stats
+    return sorted(stats), stats, written.drop("__pid").schema.jsonValue()
 
 
 def _try_commit(table: str, version: int, entry: dict) -> bool:
@@ -569,6 +586,7 @@ def commit(
     stats: dict | None = None,
     meta: dict | None = None,
     expect_version: int | None = None,
+    schema: dict | None = None,
 ) -> int:
     """Optimistic-concurrency commit loop: losers re-read the log and retry
     at the next version.  Append-shaped commits are always safe to retry;
@@ -582,9 +600,10 @@ def commit(
     how read-compute-commit cycles whose correctness depends on the READ
     snapshot (incremental maintenance folding a delta into state) close
     their check-to-commit race: the put-if-absent log file is the atomic
-    arbiter, so exactly one of two racing writers can ever win."""
-    stats = dict(stats or {})
-    schema = stats.pop(_SCHEMA_KEY, None)  # logged beside, not in, stats
+    arbiter, so exactly one of two racing writers can ever win.
+
+    ``schema`` is the added parts' schema JSON (the third value of
+    :func:`_write_parts`), logged beside their stats."""
     for _ in range(max_retries):
         version = (current_snapshot(table).version) + 1
         if txn_id and txn_id in current_snapshot(table).txn_ids:
@@ -625,10 +644,10 @@ def append(
     ``expect_version`` makes the commit a CAS (see :func:`commit`)."""
     if txn_id and txn_id in current_snapshot(table).txn_ids:
         return -1
-    parts, stats = _write_parts(df, table)
+    parts, stats, schema = _write_parts(df, table)
     return commit(table, add=parts, remove=[], operation="append",
                   txn_id=txn_id, stats=stats, meta=meta,
-                  expect_version=expect_version)
+                  expect_version=expect_version, schema=schema)
 
 
 def overwrite(
@@ -646,9 +665,10 @@ def overwrite(
     OR) anchored on the version it read can never silently drop a racing
     writer's update."""
     old = current_snapshot(table).files
-    parts, stats = _write_parts(df, table)
+    parts, stats, schema = _write_parts(df, table)
     return commit(table, add=parts, remove=old, operation="overwrite",
-                  stats=stats, meta=meta, expect_version=expect_version)
+                  stats=stats, meta=meta, expect_version=expect_version,
+                  schema=schema)
 
 
 def _zorder_column(df: DataFrame, cols: list[str], bits: int = 16):
@@ -736,17 +756,19 @@ def compact(
             # layouts unprunable at the commit-log level — the parquet
             # row-group stats inside a part only help predicates Spark
             # pushes to the scan, which join keys are not
-            parts, stats = _write_clustered_parts(
+            parts, stats, schema = _write_clustered_parts(
                 clustered, table, _stat_cols(df.schema)
             )
         else:
-            parts, stats = _write_parts(df.coalesce(target_parts), table)
+            parts, stats, schema = _write_parts(
+                df.coalesce(target_parts), table
+            )
         entry = {
             "version": base.version + 1,
             "operation": "compact",
             "add": parts,
             "remove": base.files,
-            "schema": stats.pop(_SCHEMA_KEY),
+            "schema": schema,
             "stats": stats,
         }
         if _try_commit(table, base.version + 1, entry):
@@ -877,10 +899,10 @@ def upsert(
     # zero parts: an empty frame under the snapshot schema
     existing = read_parts(spark, table, touched, snap)
     merged = upsert_by_key(existing, incoming, key_cols, update_cols)
-    parts, stats = _write_parts(merged, table)
+    parts, stats, schema = _write_parts(merged, table)
     return commit(table, add=parts, remove=touched, operation="upsert",
                   txn_id=txn_id, stats=stats,
-                  expect_version=expect_version, meta=meta)
+                  expect_version=expect_version, meta=meta, schema=schema)
 
 
 def cdc_tombstones_table(table: str) -> str:
@@ -919,9 +941,10 @@ def _fold_cdc_tombstones(
     if not snap.files:
         if dels.limit(1).count() == 0:
             return  # no tombstone table and nothing to tombstone
-        parts, stats = _write_parts(new_dels, tomb)
+        parts, stats, schema = _write_parts(new_dels, tomb)
         commit(tomb, add=parts, remove=[], operation="cdc_tombstones",
-               txn_id=txn_id, stats=stats, expect_version=snap.version)
+               txn_id=txn_id, stats=stats, expect_version=snap.version,
+               schema=schema)
         return
     probe = dels.select(*keys).unionByName(up_keys)
     touched, _ = files_overlapping_all_keys(spark, snap, probe, keys)
@@ -939,9 +962,12 @@ def _fold_cdc_tombstones(
     else:
         merged = new_dels
     n = merged.count()
-    parts, stats = (_write_parts(merged, tomb) if n else ([], {}))
+    parts, stats, schema = (
+        _write_parts(merged, tomb) if n else ([], {}, None)
+    )
     commit(tomb, add=parts, remove=touched, operation="cdc_tombstones",
-           txn_id=txn_id, stats=stats, expect_version=snap.version)
+           txn_id=txn_id, stats=stats, expect_version=snap.version,
+           schema=schema)
 
 
 def expire_cdc_tombstones(
@@ -999,6 +1025,7 @@ def expire_cdc_tombstones(
     )
     add: list[str] = []
     stats: dict = {}
+    schema = None
     if straddle:
         rows = read_parts(spark, tomb, straddle, snap)
         survivors = rows.filter(F.col("__seq") >= F.lit(below_seq))
@@ -1006,7 +1033,7 @@ def expire_cdc_tombstones(
         n_after = survivors.count()
         expired += n_before - n_after
         if n_after or not carry:
-            add, stats = _write_parts(survivors, tomb)
+            add, stats, schema = _write_parts(survivors, tomb)
     commit(
         tomb,
         add=add,
@@ -1015,6 +1042,7 @@ def expire_cdc_tombstones(
         txn_id=txn_id,
         stats=stats,
         expect_version=snap.version,
+        schema=schema,
     )
     return expired
 
@@ -1226,10 +1254,10 @@ def apply_changes(
     # a batch that deletes every row of the touched files (and inserts
     # nothing) must keep a schema tombstone if no file would remain
     n_merged = merged.count()
-    parts, stats = (
+    parts, stats, schema = (
         _write_parts(merged, table)
         if n_merged or not carried
-        else ([], {})
+        else ([], {}, None)
     )
     return commit(
         table,
@@ -1238,6 +1266,7 @@ def apply_changes(
         operation="apply_changes",
         txn_id=txn_id,
         stats=stats,
+        schema=schema,
         expect_version=(
             snap.version if expect_version is None else expect_version
         ),

@@ -15,14 +15,9 @@ Per micro-batch:
    pairs with exact cosine ≥ threshold and at least one batch endpoint
    (the batch side is one join INPUT, so cost is |batch| ×
    bucket-mates, never |index|²);
-4. commit the INDEX rows first — a compare-and-swap anchored on the
-   index version the anti-join and the pair probe read (round-9: a
-   racing second writer loses the put-if-absent arbitration with zero
-   side effects) — then the pairs.  A crash between the appends
-   replays the batch against the PRE-FOLD index snapshot (time
-   travel via the index txn's version), so the pair set recomputes
-   identically even though the live index now holds the batch's own
-   rows; re-delivered ids in later batches anti-join away.
+4. commit the INDEX rows first (the anchored fold of the README's
+   sink contract: a replay reads the pre-fold index, so the pair set
+   recomputes identically), then the pairs.
 
 Scale shape: the index table is the serving artifact (vectors + norms +
 bucket), appended per batch with the bucket column's min/max recorded in
@@ -41,47 +36,26 @@ from airflow_crypto_btc_spark.functions.hashing import (
     dot_expr,
     norm2_expr,
 )
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.similarity import (
     hyperplane_bucket_expr,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
-    read_snapshot_or_none,
-    vacuum,
+    fold_base,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
-def _fresh_rows(batch_df, id_col: str, vec_col: str, committed, seen_id_col: str):
-    """Shared per-batch front end of the vector sinks: deterministic
-    within-batch dedup (min md5 of the stringified vector per id — a
-    crash replay picks the same representative) followed by the
-    insert-only anti-join against the committed table's ids.  One
-    definition, two sinks: replay semantics must never diverge between
-    the ANN index stream and the PQ codes stream."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(
-        F.md5(F.concat_ws(",", F.transform(
-            F.col(vec_col), lambda x: x.cast("string")
-        )))
-    )
-    fresh = (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn")
-    )
-    if committed is not None:
-        fresh = fresh.join(
-            committed.select(F.col(seen_id_col).alias("_seen")),
-            fresh[id_col] == F.col("_seen"),
-            "left_anti",
-        )
-    return fresh
+def vec_order(vec_col: str):
+    """The vector sinks' within-batch dedup order: md5 of the
+    stringified vector.  One definition, so replay semantics never
+    diverge between the ANN index, PQ codes and semantic streams."""
+    return F.md5(F.concat_ws(",", F.transform(
+        F.col(vec_col), lambda x: x.cast("string")
+    )))
 
 
 def embedding_index_sink(
@@ -116,29 +90,11 @@ def embedding_index_sink(
         from airflow_crypto_btc_spark.operators.dedup import _cap_buckets
 
         spark = batch_df.sparkSession
-        # CAS anchor: the index version the freshness anti-join and the
-        # pair probe are based on (round-9 closure).  A replayed batch
-        # whose index fold already landed reads the PRE-FOLD snapshot
-        # (time travel) — the live index now holds the batch's own rows,
-        # which would empty the fresh set and drop the batch's pairs.
-        from airflow_crypto_btc_spark.sources.snapshot_table import (
-            current_snapshot,
-            read_snapshot,
-            txn_version,
-        )
-
         index_txn = f"{query_name}:{batch_id}:index"
-        index_v = current_snapshot(index_table).version
-        folded_v = txn_version(index_table, index_txn)
-        if folded_v is not None:
-            committed = (
-                read_snapshot(spark, index_table, version=folded_v - 1)
-                if folded_v > 0
-                else None
-            )
-        else:
-            committed = read_snapshot_or_none(spark, index_table)
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
+        index_v, committed = fold_base(spark, index_table, index_txn)
+        fresh = fresh_rows(
+            batch_df, id_col, vec_order(vec_col), committed, "nid"
+        )
         batch_rows = (
             fresh.select(
                 F.col(id_col).alias("nid"),
@@ -202,49 +158,23 @@ def embedding_index_sink(
             )
             .distinct()
         )
-        # index FIRST — the CAS-serialized fold (round-9 order flip; a
-        # racing second writer loses the put-if-absent arbitration with
-        # zero side effects) — then pairs, whose content is a pure
-        # function of (batch, pre-fold index) and therefore replays
-        # identically via the time-travel branch above
-        if folded_v is None:
-            try:
-                append(
-                    spark, batch_rows, index_table,
-                    txn_id=index_txn,
-                    expect_version=index_v,
-                )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
+        # index FIRST (the CAS-serialized fold), then pairs, whose
+        # content is a pure function of (batch, pre-fold index)
+        append(
+            spark, batch_rows, index_table,
+            txn_id=index_txn,
+            expect_version=index_v,
+        )
         append(
             spark, pairs, pairs_table,
             txn_id=f"{query_name}:{batch_id}:pairs",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (index_table, pairs_table):
-                # the index rewrite bnum-CLUSTERS so the compacted parts
-                # stay range-aligned and probe pruning keeps skipping
-                # files as the stream grows (skip for a pre-bnum
-                # generation — nulls cannot z-order).  Snapshot may be
-                # None (e.g. an all-quarantined batch never appended):
-                # skip the table rather than dereference None.
-                snap = read_snapshot_or_none(spark, table)
-                if snap is None:
-                    continue
-                cluster = (
-                    ["bnum"]
-                    if table == index_table and "bnum" in snap.columns
-                    else None
-                )
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        cluster_by=cluster,
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        # the index rewrite bnum-CLUSTERS so compacted parts stay
+        # range-aligned and probe pruning keeps skipping files
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {index_table: ["bnum"], pairs_table: None},
+        )
 
     return _fold
 
@@ -273,8 +203,6 @@ def pq_codes_sink(
     ids anti-join away against the committed codes, and the single
     append per batch is txn-id idempotent."""
     import os
-
-    from pyspark.sql import Window
 
     from airflow_crypto_btc_spark.operators.similarity import (
         pq_encode,
@@ -312,28 +240,23 @@ def pq_codes_sink(
         if "books" not in books_cache:
             books_cache["books"] = pq_load_codebooks(spark, books_t)
         books = books_cache["books"]
-        # CAS anchor: the codes version the dedup anti-join is based on
-        # (round-9 closure, same as every other maintainer)
-        codes_v = current_snapshot(codes_t).version
-        committed = read_snapshot_or_none(spark, codes_t)
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
-        try:
-            append(
-                spark,
-                pq_encode(fresh, books, id_col, vec_col),
-                codes_t,
-                txn_id=f"{query_name}:{batch_id}",
-                meta=meta,
-                expect_version=codes_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(spark, codes_t, target_parts=compact_target_parts)
-            except ValueError:
-                return
-            vacuum(codes_t)
+        txn = f"{query_name}:{batch_id}"
+        codes_v, committed = fold_base(spark, codes_t, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, vec_order(vec_col), committed, "nid"
+        )
+        append(
+            spark,
+            pq_encode(fresh, books, id_col, vec_col),
+            codes_t,
+            txn_id=txn,
+            meta=meta,
+            expect_version=codes_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {codes_t: None},
+        )
 
     return _fold
 
@@ -369,7 +292,7 @@ def ivfpq_arrivals_sink(
     append lands identical rows.  Concurrency: each append is a CAS
     anchored on the version its read was based on (racing folds lose
     the put-if-absent arbitration with zero side effects —
-    ``ConcurrentMaintenanceError``); the cross-table window between the
+    ``CommitConflictError``); the cross-table window between the
     lists read and the codes commit is narrowed by an ohlc-style
     version guard and remains a single-writer-contract violation,
     surfaced rather than silent.
@@ -385,6 +308,7 @@ def ivfpq_arrivals_sink(
         pq_load_codebooks,
     )
     from airflow_crypto_btc_spark.sources.snapshot_table import (
+        CommitConflictError,
         current_snapshot,
         read_snapshot,
     )
@@ -431,12 +355,14 @@ def ivfpq_arrivals_sink(
         if "books" not in cache:
             cache["books"] = pq_load_codebooks(spark, parts["books"])
         books = cache["books"]
-        # CAS anchors: the versions the anti-join (lists) and the codes
-        # append are based on
+        # CAS anchors: the versions the codes append and the anti-join
+        # (lists, the final commit) are based on
         codes_v = current_snapshot(parts["codes"]).version
-        lists_v = current_snapshot(parts["lists"]).version
-        committed = read_snapshot_or_none(spark, parts["lists"])
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
+        lists_txn = f"{query_name}:{batch_id}:lists"
+        lists_v, committed = fold_base(spark, parts["lists"], lists_txn)
+        fresh = fresh_rows(
+            batch_df, id_col, vec_order(vec_col), committed, "nid"
+        )
         cent = read_snapshot(spark, parts["centroids"]).withColumn(
             "cn", F.sqrt(norm2_expr("ce"))
         )
@@ -449,31 +375,26 @@ def ivfpq_arrivals_sink(
         codes_new = pq_encode(fresh, books, id_col, vec_col)
         # fast-fail: a second writer that already folded would have
         # appended lists; the CAS below is the same-table guarantee
-        if current_snapshot(parts["lists"]).version != lists_v:
-            raise ConcurrentMaintenanceError(
+        now = current_snapshot(parts["lists"])
+        if lists_txn not in now.txn_ids and now.version != lists_v:
+            raise CommitConflictError(
                 f"lists table moved past v{lists_v} during IVF-PQ "
                 "maintenance — a second writer is sharing this index; "
                 "retry the batch"
             )
-        try:
-            append(
-                spark, codes_new, parts["codes"],
-                txn_id=f"{query_name}:{batch_id}:codes",
-                meta=meta, expect_version=codes_v,
-            )
-            append(
-                spark, assigned, parts["lists"],
-                txn_id=f"{query_name}:{batch_id}:lists",
-                meta=meta, expect_version=lists_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for t in (parts["codes"], parts["lists"]):
-                try:
-                    compact(spark, t, target_parts=compact_target_parts)
-                except ValueError:
-                    continue
-                vacuum(t)
+        append(
+            spark, codes_new, parts["codes"],
+            txn_id=f"{query_name}:{batch_id}:codes",
+            meta=meta, expect_version=codes_v,
+        )
+        append(
+            spark, assigned, parts["lists"],
+            txn_id=lists_txn,
+            meta=meta, expect_version=lists_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {parts["codes"]: None, parts["lists"]: None},
+        )
 
     return _fold

@@ -25,24 +25,21 @@ execution model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.curation import (
     card_facts,
     card_from_facts,
 )
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
-    current_snapshot,
+    fold_base,
     read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -59,43 +56,22 @@ def card_facts_sink(
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # CAS anchor: the facts version the dedup anti-join is based on
-        # (same closure as maintain_ohlc_rollup — the commit lands only
-        # if no other writer advanced the table between our read and our
-        # commit, so a racing fold can never double-ingest a doc id)
-        facts_v = current_snapshot(facts_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        txn = f"{query_name}:{batch_id}"
+        facts_v, committed = fold_base(spark, facts_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        committed = read_snapshot_or_none(spark, facts_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        try:
-            append(
-                spark,
-                card_facts(fresh, text_col, id_col),
-                facts_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=facts_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, facts_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(facts_table)
+        append(
+            spark,
+            card_facts(fresh, text_col, id_col),
+            facts_table,
+            txn_id=txn,
+            expect_version=facts_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {facts_table: None},
+        )
 
     return _fold
 

@@ -12,23 +12,18 @@ each micro-batch of documents
 3. probes the committed index ∪ the batch rows for pairs with at least
    one batch endpoint, then commits bands, sets, and pairs in that
    order under txn ids ``<query>:<batch_id>:bands`` / ``:sets`` /
-   ``:pairs`` — the BANDS append is a compare-and-swap anchored on the
-   version the freshness anti-join read (round-9: a racing second
-   writer loses the put-if-absent arbitration with zero side effects),
-   and pairs still commit after sets, so they never durably reference
-   an id the sets table lacks.
+   ``:pairs`` — the BANDS append is the anchored fold of the README's
+   sink contract, and pairs still commit after sets, so they never
+   durably reference an id the sets table lacks.
 
 Every near-dup pair lands exactly once — in the micro-batch of its
-LATER endpoint.  Crash safety: a replayed batch that finds its bands
-txn already committed reads both index tables at their PRE-FOLD
-versions (snapshot time travel), so the fresh set and the pairs
-recompute identically even though the live tables now hold the batch's
-own rows; each append then skips (txn already logged) or lands its
-original content.  An at-least-once source re-delivering a document in
-a later batch finds it already indexed and contributes nothing.
+LATER endpoint.  A replayed batch reads both index tables at their
+pre-fold versions, so its pairs recompute identically.  An
+at-least-once source re-delivering a document in a later batch finds
+it already indexed and contributes nothing.
 
-**Mid-crash invariants for independent consumers** (the round-9
-bands-first commit order traded one invariant for the CAS fold):
+**Mid-crash invariants for independent consumers** (the bands-first
+commit order traded one invariant for the CAS fold):
 
 - ``pairs`` ⊆ ``sets`` ALWAYS: pairs commit after sets, so a pair row
   never durably references an id the sets table lacks.
@@ -50,25 +45,20 @@ Structured-Streaming execution model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.dedup import (
     minhash_lsh_pairs_from_index,
     minhash_prep,
 )
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
-    read_snapshot,
-    read_snapshot_or_none,
-    txn_version,
-    vacuum,
+    fold_base,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -115,50 +105,21 @@ def near_dup_index_sink(
         # hash per id), so a crash replay picks the same representative
         # the committed pairs were computed from — dropDuplicates'
         # arbitrary pick could disagree across attempts.
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        # Freshness is keyed off the LAST-committed index table (bands):
-        # ids already indexed — upstream re-delivery from an
-        # at-least-once source — are dropped before anything else, so
-        # index rows are never duplicated and their pairs never
-        # re-emitted.  Keying off the final commit makes every crash
-        # window replay-safe (see ordering note below).
-        incoming_digests = fresh.select(
+        order = F.md5(F.col(text_col))
+        incoming_digests = fresh_rows(
+            batch_df, id_col, order, None, None
+        ).select(
             F.col(id_col).alias("id"),
             F.md5(F.col(text_col)).alias("digest"),
         )
-        # CAS anchor: the bands version the freshness anti-join is based
-        # on (round-9 closure).  A replayed batch whose bands fold
-        # already landed reads BOTH index tables at their PRE-FOLD
-        # versions (time travel) — the live tables now hold the batch's
-        # own rows, which would empty the fresh set and change pairs.
+        # Both index tables as the bands fold sees them: the anchored
+        # current versions, or their PRE-FOLD versions on a replay (the
+        # bands commit is the fold; see the README's sink contract).
         bands_txn = f"{query_name}:{batch_id}:bands"
-        bands_v = current_snapshot(bands_table).version
-        folded_v = txn_version(bands_table, bands_txn)
-        if folded_v is not None:
-            committed_bands = (
-                read_snapshot(spark, bands_table, version=folded_v - 1)
-                if folded_v > 0
-                else None
-            )
-            sets_v_txn = txn_version(
-                sets_table, f"{query_name}:{batch_id}:sets"
-            )
-            if sets_v_txn is None:
-                committed_sets = read_snapshot_or_none(spark, sets_table)
-            elif sets_v_txn > 0:
-                committed_sets = read_snapshot(
-                    spark, sets_table, version=sets_v_txn - 1
-                )
-            else:
-                committed_sets = None
-        else:
-            committed_bands = read_snapshot_or_none(spark, bands_table)
-            committed_sets = read_snapshot_or_none(spark, sets_table)
+        bands_v, committed_bands = fold_base(spark, bands_table, bands_txn)
+        _, committed_sets = fold_base(
+            spark, sets_table, f"{query_name}:{batch_id}:sets"
+        )
         conflicts = None
         if committed_bands is not None:
             # a re-delivered id whose content CHANGED upstream is about
@@ -188,11 +149,12 @@ def near_dup_index_sink(
                         "digest_indexed",
                     )
                 )
-            fresh = fresh.join(
-                committed_bands.select(F.col("id").alias("_indexed_id")),
-                fresh[id_col] == F.col("_indexed_id"),
-                "left_anti",
-            )
+        # Freshness is keyed off the LAST-committed index table (bands):
+        # ids already indexed — upstream re-delivery from an
+        # at-least-once source — are dropped before anything else, so
+        # index rows are never duplicated and their pairs never
+        # re-emitted.
+        fresh = fresh_rows(batch_df, id_col, order, committed_bands, "id")
         prep = minhash_prep(
             fresh, id_col, text_col, k_shingle, num_hashes, bands
         ).localCheckpoint(eager=False)  # one Arrow scan feeds everything
@@ -245,34 +207,21 @@ def near_dup_index_sink(
             jaccard_threshold,
             max_bucket_size,
         )
-        # Commit order bands → sets → pairs (round-9 flip): the BANDS
-        # append is the CAS-serialized fold — a racing second writer
-        # loses the put-if-absent arbitration with ZERO side effects —
-        # and pairs still commit after sets, so they never durably
-        # reference an id absent from the sets table.  (The flip DOES
-        # weaken the bands-side invariant: between the bands and sets
-        # commits a crash window exists where bands rows reference ids
-        # the sets table lacks — consumer contract in the module
-        # docstring: semi-join sets before trusting bands rows.)
-        # Crash anywhere:
-        # the replay branch above reads the pre-fold snapshots, so every
-        # downstream frame recomputes identically and each append skips
-        # or lands exactly once via its txn id.
+        # Commit order bands → sets → pairs: the BANDS append is the
+        # CAS-serialized fold, and pairs still commit after sets, so
+        # they never durably reference an id absent from the sets table
+        # (the bands-side crash window is in the module docstring).
         sets_cas_v = current_snapshot(sets_table).version
-        try:
-            if folded_v is None:
-                append(
-                    spark, batch_bands, bands_table,
-                    txn_id=bands_txn,
-                    expect_version=bands_v,
-                )
-            append(
-                spark, batch_sets, sets_table,
-                txn_id=f"{query_name}:{batch_id}:sets",
-                expect_version=sets_cas_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        append(
+            spark, batch_bands, bands_table,
+            txn_id=bands_txn,
+            expect_version=bands_v,
+        )
+        append(
+            spark, batch_sets, sets_table,
+            txn_id=f"{query_name}:{batch_id}:sets",
+            expect_version=sets_cas_v,
+        )
         append(
             spark, pairs, pairs_table,
             txn_id=f"{query_name}:{batch_id}:pairs",
@@ -283,30 +232,16 @@ def near_dup_index_sink(
                 spark, conflicts, conflicts_table,
                 txn_id=f"{query_name}:{batch_id}:conflicts",
             )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            maintained = [sets_table, pairs_table, bands_table]
-            if conflicts_table is not None:
-                maintained.append(conflicts_table)
-            for table in maintained:
-                # the bands rewrite bkn-CLUSTERS so compacted parts stay
-                # range-aligned and probe file-pruning keeps skipping as
-                # the stream grows (skip for a pre-bkn generation —
-                # nulls cannot z-order; None-guard: a table appended
-                # this batch can still be log-empty on replay shapes)
-                cluster = None
-                if table == bands_table:
-                    snap = read_snapshot_or_none(spark, table)
-                    if snap is not None and "bkn" in snap.columns:
-                        cluster = ["bkn"]
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        cluster_by=cluster,
-                    )
-                except ValueError:
-                    continue  # table still empty (e.g. no pairs yet)
-                vacuum(table)
+        # the bands rewrite bkn-CLUSTERS so compacted parts stay
+        # range-aligned and probe file-pruning keeps skipping
+        maintained = {
+            sets_table: None, pairs_table: None, bands_table: ["bkn"],
+        }
+        if conflicts_table is not None:
+            maintained[conflicts_table] = None
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts, maintained
+        )
 
     return _fold
 

@@ -10,12 +10,10 @@ Per micro-batch of candidate documents:
    are definitely new and skip the join; the possibly-seen remainder
    anti-joins the committed digests table (exact verification — bloom
    false positives die here, so the novel set is EXACT);
-3. commit, in order: the DIGESTS first — a compare-and-swap anchored on
-   the digests version the anti-join read (the round-9 closure: two
-   racing folds that verified against the same digests snapshot can
-   never both land; the loser aborts with ZERO side effects) — then the
-   novel rows, then the bitmap row overwritten (also CAS-anchored) with
-   the OR of the old bitmap and the batch's novel hashes.
+3. commit, in order: the DIGESTS first (the anchored fold of the
+   README's sink contract), then the novel rows, then the bitmap row
+   overwritten (also CAS-anchored) with the OR of the old bitmap and the
+   batch's novel hashes.
 
 Digests-first is safe because replay no longer re-runs the anti-join:
 a replayed batch that finds its digests txn already committed
@@ -42,22 +40,21 @@ the per-batch digests read never decays into a small-files scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
+    fold_base,
     overwrite,
     read_snapshot_or_none,
     snapshot_changes,
     txn_version,
     vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -92,16 +89,12 @@ def novelty_sink(
         prepped = _digest_cols(batch_df, text_col).withColumn(
             "digest", _digest_expr(text_col)
         )
-        w = Window.partitionBy("digest").orderBy(F.col(id_col))
         batch = (
-            prepped.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
+            fresh_rows(prepped, "digest", F.col(id_col), None, None)
             .select(F.col(id_col).alias("id"), "digest", "_h1", "_h2")
             .localCheckpoint(eager=False)
         )
-        # CAS anchors: the versions the digest anti-join and the bitmap
-        # read-modify-overwrite are based on
-        digests_v = current_snapshot(digests_table).version
+        # CAS anchor of the bitmap read-modify-overwrite
         bloom_v = current_snapshot(bloom_table).version
         digests_txn = f"{query_name}:{batch_id}:digests"
         bloom_state = read_snapshot_or_none(spark, bloom_table)
@@ -141,17 +134,20 @@ def novelty_sink(
             if folded_v is not None:
                 # crash-replay after the fold landed: recompute the
                 # novel set from the fold's own CHANGE FEED (exactly
-                # the digests it added), never from the live anti-join
-                # — which would now see the batch's own digests and
-                # lose the bloom-false-positive rows forever
+                # the digests it added), never from an anti-join, which
+                # would lose the bloom-false-positive rows forever.
+                # The digests append below then skips by txn id.
+                digests_v = folded_v - 1
                 added = snapshot_changes(
-                    spark, digests_table, folded_v - 1, folded_v
+                    spark, digests_table, digests_v, folded_v
                 ).select("digest")
                 novel = batch.join(
                     added, "digest", "left_semi"
                 ).localCheckpoint(eager=False)
             else:
-                committed = read_snapshot_or_none(spark, digests_table)
+                digests_v, committed = fold_base(
+                    spark, digests_table, digests_txn
+                )
                 if committed is None:
                     verified = suspects
                 else:
@@ -163,14 +159,11 @@ def novelty_sink(
                 )
             # digests FIRST (the CAS-serialized fold — see module
             # docstring), then the output rows, then the bitmap
-            try:
-                append(
-                    spark, novel.select("digest"), digests_table,
-                    txn_id=digests_txn,
-                    expect_version=digests_v,
-                )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
+            append(
+                spark, novel.select("digest"), digests_table,
+                txn_id=digests_txn,
+                expect_version=digests_v,
+            )
             append(
                 spark, novel.select("id", "digest"), novel_table,
                 txn_id=f"{query_name}:{batch_id}:novel",
@@ -185,18 +178,15 @@ def novelty_sink(
                 delta_bm = delta_bm | np.frombuffer(
                     bitmap_b, dtype=np.uint8
                 )
-            try:
-                overwrite(
-                    spark,
-                    spark.createDataFrame(
-                        [(bytearray(delta_bm.tobytes()),)], "bm binary"
-                    ),
-                    bloom_table,
-                    meta={"n_bits": n_bits, "k": k},
-                    expect_version=bloom_v,
-                )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
+            overwrite(
+                spark,
+                spark.createDataFrame(
+                    [(bytearray(delta_bm.tobytes()),)], "bm binary"
+                ),
+                bloom_table,
+                meta={"n_bits": n_bits, "k": k},
+                expect_version=bloom_v,
+            )
             # every overwrite de-references the previous bitmap part but
             # leaves it on disk; without this an N-batch run accumulates
             # N dead copies of the (fixed-size) state
@@ -208,14 +198,9 @@ def novelty_sink(
                 # append); on the failure path the batch is replayed
                 # from scratch — either way the blocks are dead here
                 bitmap_bc.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (digests_table, novel_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {digests_table: None, novel_table: None},
+        )
 
     return _fold

@@ -29,24 +29,21 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.probe import (
     quality_probe_scores,
     weights_from_model_rows,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
+    fold_base,
     read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -91,24 +88,12 @@ def probe_gate_sink(
                 "restart the sink against the new generation (scores "
                 "from different weight generations are not comparable)"
             )
-        # CAS anchor: the decisions version the dedup anti-join is based
-        # on (round-9 closure, same as every other maintainer)
-        decisions_v = current_snapshot(decisions_table).version
-        w = Window.partitionBy(id_col).orderBy(
-            F.md5(F.to_json(F.struct(vec_col)))
+        txn = f"{query_name}:{batch_id}"
+        decisions_v, committed = fold_base(spark, decisions_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.to_json(F.struct(vec_col))),
+            committed, id_col,
         )
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        committed = read_snapshot_or_none(spark, decisions_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         weights = weights_from_model_rows(
             read_snapshot(spark, model_table).select("pos", "w_micro")
         )
@@ -128,22 +113,14 @@ def probe_gate_sink(
                 "passed"
             ),
         )
-        try:
-            append(
-                spark, scores, decisions_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=decisions_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, decisions_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(decisions_table)
+        append(
+            spark, scores, decisions_table,
+            txn_id=txn,
+            expect_version=decisions_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {decisions_table: None},
+        )
 
     return _fold

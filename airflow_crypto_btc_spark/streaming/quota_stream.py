@@ -29,10 +29,9 @@ join, never a shuffle of arrivals):
 
 Commit order counts → decisions → ids.  The COUNTS commit is the
 serialization point: it is a compare-and-swap anchored on the counts
-version the priors were read from (``expect_version`` — the
-``maintain_ohlc_rollup`` closure), so two racing gates that based their
-admissions on the same prior counts can never both fold — the loser
-aborts with ZERO side effects.  The counts commit also records the
+version the priors were read from (README, "sink contract"), so two
+racing gates that based their admissions on the same prior counts can
+never both fold — the loser aborts with ZERO side effects.  The counts commit also records the
 batch's per-domain PRIOR counts in its metadata: a crash-replay that
 finds the counts txn already committed recomputes its decisions from
 that pinned record (``txn_meta``) instead of from the live counts the
@@ -46,8 +45,8 @@ counts commit and its ids commit could re-decide a doc id; closing
 that needs cross-table atomicity the log-per-table design does not
 have.  An ids-version fast-fail guard immediately before the counts
 commit narrows the window to the commit call itself; two gates sharing
-tables remains a single-writer-contract violation, now surfaced as
-``ConcurrentMaintenanceError`` instead of silent corruption.
+tables remains a single-writer-contract violation, surfaced as
+``CommitConflictError`` instead of silent corruption.
 
 The reference has no streaming surface; this extends the curation
 family (SURVEY §2 extension) to the Structured-Streaming model.
@@ -58,18 +57,18 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     CommitConflictError,
     append,
-    compact,
     current_snapshot,
-    read_snapshot_or_none,
+    fold_base,
     txn_meta,
     upsert,
     vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -110,20 +109,12 @@ def domain_quota_sink(
         spark = batch_df.sparkSession
         counts_txn = f"{query_name}:{batch_id}:counts"
 
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(domain_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        ids_v, seen = fold_base(
+            spark, ids_table, f"{query_name}:{batch_id}:ids"
         )
-        ids_v = current_snapshot(ids_table).version
-        seen = read_snapshot_or_none(spark, ids_table)
-        if seen is not None:
-            fresh = fresh.join(
-                seen.select(F.col("id").alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(domain_col)), seen, "id"
+        )
         # NULL domains group as ONE domain under an internal coalesced
         # key (same doctrine as operators/curation.domain_quota): a null
         # key would match nothing in the counts join and its rank would
@@ -140,8 +131,7 @@ def domain_quota_sink(
         )  # feeds decisions, counts, and ids
 
         # CAS anchor: the counts version the priors are read from
-        counts_v = current_snapshot(counts_table).version
-        counts = read_snapshot_or_none(spark, counts_table)
+        counts_v, counts = fold_base(spark, counts_table, counts_txn)
         replayed = txn_meta(counts_table, counts_txn)
         if replayed is not None:
             # crash-replay after the fold landed: recompute decisions
@@ -212,29 +202,26 @@ def domain_quota_sink(
             # appended ids; the counts CAS below is the guarantee, this
             # narrows the cross-table (ids-read) window to the commit
             if current_snapshot(ids_table).version != ids_v:
-                raise ConcurrentMaintenanceError(
+                raise CommitConflictError(
                     f"ids table moved v{ids_v} -> "
                     f"v{current_snapshot(ids_table).version} during "
                     "quota gating — a second writer is sharing these "
                     "tables; retry the batch"
                 )
-            try:
-                if counts is None:  # bootstrap: first write creates it
-                    append(
-                        spark, new_counts, counts_table,
-                        txn_id=counts_txn,
-                        meta={"priors": priors, "batch": batch_id},
-                        expect_version=counts_v,
-                    )
-                else:
-                    upsert(
-                        spark, new_counts, counts_table, ["domain_key"],
-                        txn_id=counts_txn,
-                        expect_version=counts_v,
-                        meta={"priors": priors, "batch": batch_id},
-                    )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
+            if counts is None:  # bootstrap: first write creates it
+                append(
+                    spark, new_counts, counts_table,
+                    txn_id=counts_txn,
+                    meta={"priors": priors, "batch": batch_id},
+                    expect_version=counts_v,
+                )
+            else:
+                upsert(
+                    spark, new_counts, counts_table, ["domain_key"],
+                    txn_id=counts_txn,
+                    expect_version=counts_v,
+                    meta={"priors": priors, "batch": batch_id},
+                )
         append(
             spark, decided.drop("_dom", "_prior"), decisions_table,
             txn_id=f"{query_name}:{batch_id}:decisions",
@@ -245,15 +232,10 @@ def domain_quota_sink(
             ids_table,
             txn_id=f"{query_name}:{batch_id}:ids",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (decisions_table, ids_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {decisions_table: None, ids_table: None},
+        ):
             vacuum(counts_table)  # upserts are rewrites: drop old gens
 
     return _gate

@@ -33,22 +33,16 @@ file-prune as the stream grows).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.search import doc_lengths, postings
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
-    current_snapshot,
-    read_snapshot,
-    read_snapshot_or_none,
-    txn_version,
-    vacuum,
+    fold_base,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -68,37 +62,11 @@ def bm25_index_sink(
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
         dlen_txn = f"{query_name}:{batch_id}:doclen"
-        folded_v = txn_version(doclen_table, dlen_txn)
-        # CAS anchor FIRST, then the registry read pinned AT the anchor
-        # version: reading live state and anchoring afterwards leaves a
-        # window where a racing writer's commit lands between the two —
-        # the anti-join misses its rows but the CAS still passes
-        # (round-11 self-review; dedup_stream reads in this order too)
-        cas_v = current_snapshot(doclen_table).version
-        if folded_v is not None:
-            registry = (
-                read_snapshot(spark, doclen_table, version=folded_v - 1)
-                if folded_v > 0
-                else None
-            )
-        elif cas_v >= 0:
-            registry = read_snapshot(spark, doclen_table, version=cas_v)
-        else:
-            registry = None
-        if registry is not None:
-            fresh = fresh.join(
-                registry.select(F.col("doc_id").alias("_indexed_id")),
-                fresh[id_col] == F.col("_indexed_id"),
-                "left_anti",
-            )
-        fresh = fresh.localCheckpoint(
+        cas_v, registry = fold_base(spark, doclen_table, dlen_txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), registry, "doc_id"
+        ).localCheckpoint(
             eager=False
         )  # one freshness anti-join feeds both appends
         batch_dlen = doc_lengths(fresh, id_col, text_col)
@@ -108,39 +76,22 @@ def bm25_index_sink(
             "tkn",
             F.xxhash64("token"),
         )
-        try:
-            if folded_v is None:
-                append(
-                    spark,
-                    batch_dlen,
-                    doclen_table,
-                    txn_id=dlen_txn,
-                    expect_version=cas_v,
-                )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        append(
+            spark,
+            batch_dlen,
+            doclen_table,
+            txn_id=dlen_txn,
+            expect_version=cas_v,
+        )
         append(
             spark,
             batch_post,
             postings_table,
             txn_id=f"{query_name}:{batch_id}:postings",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table, cluster in (
-                (doclen_table, None),
-                (postings_table, ["tkn"]),
-            ):
-                snap = read_snapshot_or_none(spark, table)
-                if snap is None:
-                    continue
-                if cluster and not set(cluster) <= set(snap.columns):
-                    cluster = None  # pre-tkn generation unions as nulls
-                compact(
-                    spark,
-                    table,
-                    target_parts=compact_target_parts,
-                    cluster_by=cluster,
-                )
-                vacuum(table)
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {doclen_table: None, postings_table: ["tkn"]},
+        )
 
     return _fold

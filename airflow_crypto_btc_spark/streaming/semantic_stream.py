@@ -41,18 +41,15 @@ from airflow_crypto_btc_spark.operators.similarity import (
     semantic_purge_delta,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
+    fold_base,
     read_snapshot,
-    read_snapshot_or_none,
-    txn_version,
-    vacuum,
 )
-from airflow_crypto_btc_spark.streaming.ann_stream import (
-    ConcurrentMaintenanceError,
-    _fresh_rows,
+from airflow_crypto_btc_spark.streaming.ann_stream import vec_order
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -116,36 +113,20 @@ def semantic_index_sink(
         if "cent" not in state:
             state["cent"] = read_snapshot(spark, centroids_table)
         members_txn = f"{query_name}:{batch_id}:members"
-        # CAS anchor: the members version the labeling's delta read is
-        # based on (round-9 closure).  A replayed batch whose members
-        # fold already landed recomputes against the PRE-FOLD snapshot
-        # (time travel), never the live table — which would contain the
-        # batch's own members and change every labeling.
-        members_v = current_snapshot(members_table).version
-        folded_v = txn_version(members_table, members_txn)
-        if folded_v is not None:
-            committed = (
-                read_snapshot(spark, members_table, version=folded_v - 1)
-                if folded_v > 0
-                else None
-            )
-            meta_at = folded_v - 1
-        else:
-            committed = read_snapshot_or_none(spark, members_table)
-            meta_at = None
+        members_v, committed = fold_base(spark, members_table, members_txn)
         # the fresh chain (deterministic dedup + anti-join) feeds the
         # high-water check, the labeling, the member rows, and the
         # batch-max aggregate — cut it once instead of recomputing the
         # window per consumer
-        fresh = _fresh_rows(
-            batch_df, id_col, vec_col, committed, "id"
+        fresh = fresh_rows(
+            batch_df, id_col, vec_order(vec_col), committed, "id"
         ).localCheckpoint(eager=False)
         # High-water-mark check: one metadata scalar vs one batch-sized
         # aggregation — never a scan of the members table.  The mark
         # rides the members commit meta (max of all appended batches).
         prev_max = (
             None if committed is None
-            else current_snapshot(members_table, meta_at).meta.get(
+            else current_snapshot(members_table, members_v).meta.get(
                 "max_id"
             )
         )
@@ -199,29 +180,17 @@ def semantic_index_sink(
             else batch_max if prev_max is None
             else max(prev_max, int(batch_max))
         )
-        # members FIRST — the CAS-serialized fold (round-9 order flip:
-        # with time-travel replay recomputing the labeling against the
-        # pre-fold snapshot, fold-first costs nothing and a racing
-        # second writer loses the put-if-absent arbitration with ZERO
-        # side effects); quarantine + labels follow, each a pure
-        # function of (batch, pre-fold snapshot), so a crash anywhere
-        # replays to identical content with the earlier commits
-        # skipping via their txn ids
-        if folded_v is None:
-            try:
-                append(
-                    spark, batch_members, members_table,
-                    txn_id=members_txn,
-                    expect_version=members_v,
-                    meta={
-                        **cent_snap.meta,
-                        "max_id": (
-                            None if new_max is None else int(new_max)
-                        ),
-                    },
-                )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
+        # members FIRST (the CAS-serialized fold); quarantine + labels
+        # follow, each a pure function of (batch, pre-fold snapshot)
+        append(
+            spark, batch_members, members_table,
+            txn_id=members_txn,
+            expect_version=members_v,
+            meta={
+                **cent_snap.meta,
+                "max_id": None if new_max is None else int(new_max),
+            },
+        )
         if late_rows is not None:
             append(
                 spark, late_rows, quarantine_table,
@@ -231,22 +200,11 @@ def semantic_index_sink(
             spark, labeling, labels_table,
             txn_id=f"{query_name}:{batch_id}:labels",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (members_table, labels_table):
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        # cid-cluster the members rewrite: the compacted
-                        # parts stay range-aligned so IVF probe pruning
-                        # (ivf_topk_from_tables) keeps skipping files as
-                        # the stream grows
-                        cluster_by=(
-                            ["cid"] if table == members_table else None
-                        ),
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        # cid-cluster the members rewrite so IVF probe pruning
+        # (ivf_topk_from_tables) keeps skipping files as the stream grows
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {members_table: ["cid"], labels_table: None},
+        )
 
     return _fold

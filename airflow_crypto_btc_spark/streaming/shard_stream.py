@@ -28,20 +28,17 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
+    fold_base,
     read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -85,23 +82,13 @@ def shard_assignments_sink(
                 "restart the sink against the new generation (documents "
                 "assigned under different plans would split the corpus)"
             )
-        # CAS anchor: the assignments version the dedup anti-join is
-        # based on — a racing fold can never double-assign an id (the
-        # map-version assert above stays as the cross-table fast-fail)
-        assignments_v = current_snapshot(assignments_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        # the map-version assert above is the cross-table fast-fail;
+        # the anchored append below is the same-table guarantee
+        txn = f"{query_name}:{batch_id}"
+        assignments_v, committed = fold_base(spark, assignments_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        committed = read_snapshot_or_none(spark, assignments_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         mapping = read_snapshot(spark, map_table).select(
             "micro_shard", "shard"
         )
@@ -119,22 +106,14 @@ def shard_assignments_sink(
             .join(F.broadcast(mapping), "micro_shard")
             .select(id_col, "n_tokens", "micro_shard", "shard")
         )
-        try:
-            append(
-                spark, assigned, assignments_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=assignments_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, assignments_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(assignments_table)
+        append(
+            spark, assigned, assignments_table,
+            txn_id=txn,
+            expect_version=assignments_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {assignments_table: None},
+        )
 
     return _fold

@@ -16,19 +16,88 @@ commit log with idempotent ``txn_id`` commits.  Marrying them via
 Readers concurrently see only whole committed versions — never a torn
 micro-batch — because visibility is the atomic log append, not the data
 file write.
+
+The maintainer sinks (``streaming/*_stream.py``) share the rest of the
+contract (README, "sink contract"): ``snapshot_table.fold_base`` is the
+anchored or pre-fold read, :func:`fresh_rows` the insert-only front end,
+and :func:`maintain` the cadence compaction.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
+    compact,
     current_snapshot,
     files_overlapping_all_keys,
     read_parts,
     upsert,
+    vacuum,
 )
+
+
+def fresh_rows(
+    batch_df: DataFrame,
+    id_col: str,
+    order: Column,
+    committed: DataFrame | None,
+    seen_col: str | None,
+) -> DataFrame:
+    """One row per ``id_col`` value of the batch — the first by
+    ``order``, a deterministic content expression, so a replay keeps the
+    representative the committed outputs were computed from — minus the
+    ids ``committed`` already holds in ``seen_col`` (the insert-only
+    anti-join; ``committed=None`` skips it).  ``committed`` is the
+    sink's ``fold_base`` frame."""
+    w = Window.partitionBy(id_col).orderBy(order)
+    fresh = (
+        batch_df.withColumn("_rn", F.row_number().over(w))
+        .filter("_rn = 1")
+        .drop("_rn")
+    )
+    if committed is not None:
+        fresh = fresh.join(
+            committed.select(F.col(seen_col).alias("_seen")),
+            fresh[id_col] == F.col("_seen"),
+            "left_anti",
+        )
+    return fresh
+
+
+def maintain(
+    spark: SparkSession,
+    batch_id: int,
+    every: int | None,
+    target_parts: int,
+    tables: Mapping[str, Sequence[str] | None],
+) -> bool:
+    """Cadence maintenance: after every ``every``-th batch (``None``:
+    never) compact each of ``tables`` — table -> Z-order columns or
+    ``None`` — into ``target_parts`` parts, then vacuum it.  A table
+    with no live part yet is skipped, and cluster columns its logged
+    schema lacks (an older generation) are left out of the Z-order; any
+    other failure propagates.  Compaction is a data-preserving rewrite,
+    so a replay that compacts again is wasteful, never wrong.  Returns
+    whether the cadence fired."""
+    if not every or (batch_id + 1) % every:
+        return False
+    for table, cluster in tables.items():
+        snap = current_snapshot(table)
+        if not snap.files:
+            continue
+        have = set(snap.schema.fieldNames())
+        cluster = [c for c in cluster or () if c in have]
+        compact(
+            spark, table, target_parts=target_parts,
+            cluster_by=cluster or None,
+        )
+        vacuum(table)
+    return True
 
 
 def snapshot_append_sink(table: str, query_name: str):

@@ -50,21 +50,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.dedup import near_dup_clusters
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
+    fold_base,
     read_snapshot,
-    read_snapshot_or_none,
     snapshot_changes,
     txn_meta,
-    txn_version,
-    vacuum,
 )
+from airflow_crypto_btc_spark.streaming.snapshot_sink import maintain
 
 
 def _bucket_expr(col: str, buckets: int) -> str:
@@ -128,37 +122,21 @@ def leakage_split_sink(
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         splits_txn = f"{query_name}:{batch_id}:splits"
-        folded_v = txn_version(splits_table, splits_txn)
-        if folded_v is not None:
-            # replay: pre-fold state + the pinned pairs span make every
-            # downstream frame recompute identically
-            state = (
-                read_snapshot(spark, splits_table, version=folded_v - 1)
-                if folded_v > 0
-                else None
-            )
-            pinned = txn_meta(splits_table, splits_txn) or {}
+        cas_v, state = fold_base(spark, splits_table, splits_txn)
+        pinned = txn_meta(splits_table, splits_txn)
+        if pinned is not None:
+            # replay: the pre-fold state + the pairs span pinned in the
+            # fold's commit make every downstream frame recompute
+            # identically
             pairs_from = int(pinned.get("pairs_from", -1))
             pairs_to = int(pinned.get("pairs_to", -1))
         else:
-            # ONE snapshot read is both the CAS anchor and the state
-            # pin: reading live state and anchoring in a second call
-            # leaves a window where a racing writer's commit lands
-            # between the two — the diff would miss its rows but the
-            # CAS still pass (round-11 self-review)
-            snap = current_snapshot(splits_table)
-            state = (
-                read_snapshot(spark, splits_table, version=snap.version)
-                if snap.version >= 0
-                else None
+            pairs_from = int(
+                current_snapshot(splits_table, cas_v).meta.get(
+                    "pairs_to", -1
+                )
             )
-            pairs_from = int(snap.meta.get("pairs_to", -1))
             pairs_to = current_snapshot(pairs_table).version
-        cas_v = (
-            snap.version
-            if folded_v is None
-            else current_snapshot(splits_table).version
-        )
 
         # --- pairs delta since the last fold (append-only fast path;
         # a compaction in the span diffs to empty through the key-cols
@@ -285,30 +263,23 @@ def leakage_split_sink(
 
         # --- commit: splits first (the CAS-serialized fold, meta pins
         # the pairs span for replays), then the audit feed
-        try:
-            if folded_v is None:
-                append(
-                    spark,
-                    new_rows,
-                    splits_table,
-                    txn_id=splits_txn,
-                    expect_version=cas_v,
-                    meta={"pairs_from": pairs_from, "pairs_to": pairs_to},
-                )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        append(
+            spark,
+            new_rows,
+            splits_table,
+            txn_id=splits_txn,
+            expect_version=cas_v,
+            meta={"pairs_from": pairs_from, "pairs_to": pairs_to},
+        )
         append(
             spark,
             moves,
             moves_table,
             txn_id=f"{query_name}:{batch_id}:moves",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (splits_table, moves_table):
-                if read_snapshot_or_none(spark, table) is not None:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                    vacuum(table)
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {splits_table: None, moves_table: None},
+        )
 
     return _fold

@@ -20,20 +20,14 @@ Crash contract: the cascade's steps are individually txn-keyed
 (``{query_name}:{batch_id}:<artifact>``), so an engine replay of a
 half-applied batch completes the remaining artifacts and skips the
 landed ones; a racing ingest maintainer surfaces as
-``ConcurrentMaintenanceError`` (CAS loss), and Structured Streaming
-retries the batch from a fresh read.
+``CommitConflictError`` (CAS loss), and Structured Streaming retries the
+batch from a fresh read.
 """
 
 from __future__ import annotations
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.takedown import cascade_takedown
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
-)
+from airflow_crypto_btc_spark.sources.snapshot_table import append
 
 
 def takedown_sink(
@@ -64,20 +58,17 @@ def takedown_sink(
         gram = None
         if gram_table is not None and text_col in batch_df.columns:
             gram = (gram_table, batch_df.select(id_col, text_col))
-        try:
-            report = cascade_takedown(
-                spark,
-                ids,
-                txn_id=txn,
-                bm25=bm25,
-                lsh=lsh,
-                ann_members=ann_members,
-                split=split,
-                pq_codes=pq_codes,
-                gram=gram,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        report = cascade_takedown(
+            spark,
+            ids,
+            txn_id=txn,
+            bm25=bm25,
+            lsh=lsh,
+            ann_members=ann_members,
+            split=split,
+            pq_codes=pq_codes,
+            gram=gram,
+        )
         if gram_table is not None and gram is None:
             # the decrement needs the departing documents' text; a
             # batch without it must not LOOK decremented — surface an
@@ -144,19 +135,16 @@ def deferred_takedown_sink(
         if batch_df.limit(1).count() == 0:
             return  # idle tick: no tombstones, no apply
         txn = f"{query_name}:{batch_id}"
-        try:
-            takedown_deferred(
-                spark,
-                batch_df.select(id_col),
-                dv_table,
-                id_col,
-                txn_id=txn,
+        takedown_deferred(
+            spark,
+            batch_df.select(id_col),
+            dv_table,
+            id_col,
+            txn_id=txn,
+        )
+        if apply_every and (batch_id + 1) % apply_every == 0:
+            apply_deletion_vectors(
+                spark, dv_table, targets, txn_id=f"{txn}:opt"
             )
-            if apply_every and (batch_id + 1) % apply_every == 0:
-                apply_deletion_vectors(
-                    spark, dv_table, targets, txn_id=f"{txn}:opt"
-                )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
 
     return _fold

@@ -26,23 +26,21 @@ The reference has no streaming surface; this extends its text family
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.text import (
     unigram_logprob_from_model,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
-    read_snapshot_or_none,
+    fold_base,
     upsert,
     vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -83,23 +81,13 @@ def quality_scores_sink(
                 "restart the sink against the new generation (scores "
                 "from different model generations are not comparable)"
             )
-        # CAS anchor: the scores version the dedup anti-join is based on
-        # (the model-version assert above stays as the cross-table
-        # fast-fail; the CAS is the same-table guarantee)
-        scores_v = current_snapshot(scores_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        # the model-version assert above is the cross-table fast-fail;
+        # the anchored append below is the same-table guarantee
+        txn = f"{query_name}:{batch_id}"
+        scores_v, committed = fold_base(spark, scores_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        committed = read_snapshot_or_none(spark, scores_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         scores = unigram_logprob_from_model(
             spark,
             fresh.select(F.col(id_col).alias("doc_id"), text_col),
@@ -113,23 +101,15 @@ def quality_scores_sink(
                     F.col("mean_logprob") >= min_logprob, F.lit(False)
                 ),
             )
-        try:
-            append(
-                spark, scores, scores_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=scores_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, scores_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(scores_table)
+        append(
+            spark, scores, scores_table,
+            txn_id=txn,
+            expect_version=scores_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {scores_table: None},
+        )
 
     return _fold
 
@@ -207,20 +187,13 @@ def gram_index_sink(
                 f"gram index k changed under a running stream "
                 f"({k} -> {live_k}) — scores would mix gram widths"
             )
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        # freshness keys off the FINAL commit (ids)
+        _, seen = fold_base(
+            spark, ids_table, f"{query_name}:{batch_id}:ids"
         )
-        seen = read_snapshot_or_none(spark, ids_table)
-        if seen is not None:
-            fresh = fresh.join(
-                seen.select(F.col("id").alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        fresh = fresh.select(
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), seen, "id"
+        ).select(
             F.col(id_col).alias("doc_id"), text_col
         ).localCheckpoint(eager=False)  # scores + gram delta + ids
         scores = dup_coverage_from_index(
@@ -241,7 +214,7 @@ def gram_index_sink(
             .groupBy("h")
             .agg(F.count("*").alias("ddf"))
         )
-        committed = read_snapshot(spark, gram_table)
+        committed = read_snapshot(spark, gram_table, version=gram_v)
         inc = delta_df.join(
             committed.select("h", F.col("df").alias("_old")), "h", "left"
         ).select(
@@ -250,27 +223,19 @@ def gram_index_sink(
             .cast("long")
             .alias("df"),
         )
-        try:
-            upsert(
-                spark, inc, gram_table, ["h"],
-                txn_id=f"{query_name}:{batch_id}:grams",
-                expect_version=gram_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
+        upsert(
+            spark, inc, gram_table, ["h"],
+            txn_id=f"{query_name}:{batch_id}:grams",
+            expect_version=gram_v,
+        )
         append(
             spark, fresh.select(F.col("doc_id").alias("id")), ids_table,
             txn_id=f"{query_name}:{batch_id}:ids",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (scores_table, ids_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {scores_table: None, ids_table: None},
+        ):
             vacuum(gram_table)  # upserts are rewrites: drop old gens
 
     return _fold
@@ -325,20 +290,11 @@ def bigram_scores_sink(
                 "restart the sink against the new generation (scores "
                 "from different model generations are not comparable)"
             )
-        scores_v = current_snapshot(scores_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        txn = f"{query_name}:{batch_id}"
+        scores_v, committed = fold_base(spark, scores_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        committed = read_snapshot_or_none(spark, scores_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         scores = bigram_logprob_from_model(
             spark,
             fresh.select(F.col(id_col).alias("doc_id"), text_col),
@@ -353,22 +309,14 @@ def bigram_scores_sink(
                     F.col("mean_logprob") >= min_logprob, F.lit(False)
                 ),
             )
-        try:
-            append(
-                spark, scores, scores_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=scores_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, scores_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(scores_table)
+        append(
+            spark, scores, scores_table,
+            txn_id=txn,
+            expect_version=scores_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {scores_table: None},
+        )
 
     return _fold

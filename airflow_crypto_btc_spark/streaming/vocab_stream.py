@@ -16,20 +16,18 @@ projection (document rows never shuffle), txn-id idempotent append.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.vocab import encode_from_vocab
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+    fold_base,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    fresh_rows,
+    maintain,
 )
 
 
@@ -63,44 +61,23 @@ def encoded_sink(
                 "the sink against the new generation (id spaces from "
                 "different vocab generations must never mix)"
             )
-        # CAS anchor: the encoded-table version the dedup anti-join is
-        # based on — a racing encode fold can never double-append an id
-        # (the vocab-version assert above stays as the cross-table
-        # fast-fail; the CAS is the same-table guarantee)
-        encoded_v = current_snapshot(encoded_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        # the vocab-version assert above is the cross-table fast-fail;
+        # the anchored append below is the same-table guarantee
+        txn = f"{query_name}:{batch_id}"
+        encoded_v, committed = fold_base(spark, encoded_table, txn)
+        fresh = fresh_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        committed = read_snapshot_or_none(spark, encoded_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        try:
-            append(
-                spark,
-                encode_from_vocab(
-                    spark, fresh, vocab_table, id_col, text_col
-                ),
-                encoded_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=encoded_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, encoded_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(encoded_table)
+        append(
+            spark,
+            encode_from_vocab(spark, fresh, vocab_table, id_col, text_col),
+            encoded_table,
+            txn_id=txn,
+            expect_version=encoded_v,
+        )
+        maintain(
+            spark, batch_id, compact_every, compact_target_parts,
+            {encoded_table: None},
+        )
 
     return _fold

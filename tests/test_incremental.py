@@ -265,7 +265,7 @@ def test_maintenance_span_pinned_against_racing_append(spark, tmp_path, monkeypa
 def test_maintenance_guard_rejects_concurrent_writer(spark, tmp_path, monkeypatch):
     """Defence-in-depth check: if another run advances the high-water mark
     between this run's read and its commit, the commit is rejected with
-    ConcurrentMaintenanceError instead of double-folding the overlap."""
+    CommitConflictError instead of double-folding the overlap."""
     import pytest
 
     from airflow_crypto_btc_spark.operators import incremental as inc
@@ -287,7 +287,7 @@ def test_maintenance_guard_rejects_concurrent_writer(spark, tmp_path, monkeypatc
         return real_hwm(table) + 1  # a racer advanced it since
 
     monkeypatch.setattr(inc, "rollup_high_water_mark", shifting)
-    with pytest.raises(inc.ConcurrentMaintenanceError):
+    with pytest.raises(st.CommitConflictError):
         inc.maintain_ohlc_rollup(spark, base, state)
 
 
@@ -342,7 +342,7 @@ def test_maintenance_cas_closes_check_to_commit_window(
         return out
 
     monkeypatch.setattr(inc, "merge_ohlc_states", racing_merge)
-    with pytest.raises(inc.ConcurrentMaintenanceError):
+    with pytest.raises(st.CommitConflictError):
         inc.maintain_ohlc_rollup(spark, base, state)
     monkeypatch.setattr(inc, "merge_ohlc_states", real_merge)
 

@@ -86,8 +86,9 @@ def test_commit_race_retries_to_next_version(spark, day_slices, tmp_path):
     os.makedirs(os.path.join(tbl, "_log"), exist_ok=True)
     with open(os.path.join(tbl, "_log", "00000001.json"), "w") as fh:
         fh.write('{"version": 1, "operation": "noop", "add": [], "remove": []}')
-    parts, stats = _write_parts(d1, tbl)
-    v = commit(tbl, add=parts, remove=[], operation="append", stats=stats)
+    parts, stats, schema = _write_parts(d1, tbl)
+    v = commit(tbl, add=parts, remove=[], operation="append", stats=stats,
+               schema=schema)
     assert v == 2
     assert read_snapshot(spark, tbl).count() == 2 * d1.count()
 
@@ -169,11 +170,11 @@ def test_compact_aborts_and_retries_on_concurrent_append(
     fired = {}
 
     def racing_write(df, table):
-        parts = real_write(df, table)
+        staged = real_write(df, table)
         if "done" not in fired:  # inject one concurrent append mid-compact
             fired["done"] = True
             st.append(spark, late, table)
-        return parts
+        return staged
 
     monkeypatch.setattr(st, "_write_parts", racing_write)
     st.compact(spark, tbl)
@@ -604,11 +605,11 @@ def test_clustered_compact_retries_on_concurrent_append(
     fired = {}
 
     def racing_write(clustered, table, stat_cols):
-        parts = real_write(clustered, table, stat_cols)
+        staged = real_write(clustered, table, stat_cols)
         if "done" not in fired:  # race lands while the stage is live
             fired["done"] = True
             st.append(spark, late, table)
-        return parts
+        return staged
 
     monkeypatch.setattr(st, "_write_clustered_parts", racing_write)
     st.compact(spark, tbl, target_parts=3, cluster_by=["user_id"])
@@ -1622,7 +1623,7 @@ def test_observed_stats_match_read_back_aggregate(spark, tmp_path):
     got = {}
     for name, df in {"full": full, "empty": full.filter("1 = 0")}.items():
         tbl = str(tmp_path / f"stats_{name}")
-        parts, stats = _write_parts(df, tbl)
+        parts, stats, _ = _write_parts(df, tbl)
         got[name] = stats[parts[0]]
         want = read_back_stats(os.path.join(tbl, "data", parts[0]))
         # JSON text compares NaN to NaN

@@ -347,9 +347,6 @@ def test_streaming_ivfpq_frozen_model_refusals_and_racer(
     """A centroid re-seed mid-stream is refused (mixed inverted lists);
     a racer committing to the codes table between the sink's read and
     its append loses the CAS with zero side effects."""
-    from airflow_crypto_btc_spark.operators.incremental import (
-        ConcurrentMaintenanceError,
-    )
     from airflow_crypto_btc_spark.operators.similarity import (
         ivfpq_save_index,
     )
@@ -377,14 +374,14 @@ def test_streaming_ivfpq_frozen_model_refusals_and_racer(
     with pytest.raises(ValueError, match="centroids changed"):
         sink(batch, 0)
     # fresh sink against the current generation; racer on codes —
-    # injected via the module-level anti-join read (resolved at call
+    # injected right after the lists fold_base read (resolved at call
     # time, AFTER the sink captured its CAS anchors)
     sink = ann_stream.ivfpq_arrivals_sink(root, "q", expect_source="v1")
     fired = {"done": False}
-    real_read = ann_stream.read_snapshot_or_none
+    real_read = ann_stream.fold_base
 
-    def racing(spark_, table):
-        out = real_read(spark_, table)
+    def racing(spark_, table, txn_id):
+        out = real_read(spark_, table, txn_id)
         if not fired["done"]:
             fired["done"] = True
             st.append(
@@ -394,10 +391,10 @@ def test_streaming_ivfpq_frozen_model_refusals_and_racer(
             )
         return out
 
-    monkeypatch.setattr(ann_stream, "read_snapshot_or_none", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    monkeypatch.setattr(ann_stream, "fold_base", racing)
+    with pytest.raises(st.CommitConflictError):
         sink(batch, 0)
-    monkeypatch.setattr(ann_stream, "read_snapshot_or_none", real_read)
+    monkeypatch.setattr(ann_stream, "fold_base", real_read)
     # loser landed nothing new beyond the reference build + the racer's
     # empty commit
     assert all(

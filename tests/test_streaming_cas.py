@@ -11,7 +11,7 @@ meta, novelty's change feed, semantic/dedup/ANN snapshot time travel).
 Each test injects a racer commit between the sink's state read and its
 commit — the exact interleaving a high-water-mark or version re-check
 alone cannot see — and asserts (a) the sink raises
-ConcurrentMaintenanceError instead of silently double-folding, and (b) a
+CommitConflictError instead of silently double-folding, and (b) a
 retry from the read converges to the exact batch-twin result.  The
 updated crash tests in each sink's own suite cover the replay halves.
 """
@@ -20,10 +20,8 @@ from __future__ import annotations
 
 import pytest
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources import snapshot_table as st
+from airflow_crypto_btc_spark.sources.snapshot_table import CommitConflictError
 
 
 def _racer_once(spark, table):
@@ -61,7 +59,7 @@ def test_card_sink_cas_rejects_mid_fold_racer(spark, tmp_path, monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(card_stream, "card_facts", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(docs.filter("doc_id >= 4"), 1)
     monkeypatch.setattr(card_stream, "card_facts", real)
 
@@ -99,7 +97,7 @@ def test_vocab_sink_cas_rejects_mid_fold_racer(spark, tmp_path, monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(vocab_stream, "encode_from_vocab", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(arrivals.filter("doc_id = 11"), 1)
     monkeypatch.setattr(vocab_stream, "encode_from_vocab", real)
 
@@ -134,7 +132,7 @@ def test_shard_sink_cas_rejects_mid_fold_racer(spark, tmp_path, monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(shard_stream, "read_snapshot", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(reference.filter("doc_id >= 20"), 1)
     monkeypatch.setattr(shard_stream, "read_snapshot", real)
 
@@ -174,7 +172,7 @@ def test_scores_sink_cas_rejects_mid_fold_racer(
         return real(*a, **k)
 
     monkeypatch.setattr(text_stream, "unigram_logprob_from_model", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(arrivals.filter("doc_id = 101"), 1)
     monkeypatch.setattr(text_stream, "unigram_logprob_from_model", real)
 
@@ -214,7 +212,7 @@ def test_gram_sink_cas_rejects_mid_fold_racer(spark, tmp_path, monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(text_ops, "dup_coverage_from_index", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(batch, 0)
     monkeypatch.setattr(text_ops, "dup_coverage_from_index", real)
 
@@ -259,7 +257,7 @@ def test_quota_counts_cas_rejects_mid_fold_racer(
         return real(*a, **k)
 
     monkeypatch.setattr(quota_stream, "upsert", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    with pytest.raises(CommitConflictError):
         sink(docs.filter("doc_id >= 6"), 1)
     monkeypatch.setattr(quota_stream, "upsert", real)
 
@@ -365,10 +363,10 @@ def test_novelty_digests_cas_rejects_mid_fold_racer(
     sink(spark.createDataFrame([(1, "first doc body")], schema), 0)
 
     fired = {"done": False}
-    real = ns.read_snapshot_or_none
+    real = ns.fold_base
 
-    def racing(spark_, table):
-        out = real(spark_, table)
+    def racing(spark_, table, txn_id):
+        out = real(spark_, table, txn_id)  # the sink's anchored read
         if table == d_tbl and not fired["done"]:
             fired["done"] = True
             st.append(
@@ -376,10 +374,10 @@ def test_novelty_digests_cas_rejects_mid_fold_racer(
             )
         return out
 
-    monkeypatch.setattr(ns, "read_snapshot_or_none", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    monkeypatch.setattr(ns, "fold_base", racing)
+    with pytest.raises(CommitConflictError):
         sink(spark.createDataFrame([(2, "second doc body")], schema), 1)
-    monkeypatch.setattr(ns, "read_snapshot_or_none", real)
+    monkeypatch.setattr(ns, "fold_base", real)
 
     # loser landed nothing (novel would have been the SECOND commit)
     assert len(st.read_snapshot(spark, n_tbl).collect()) == 1
@@ -411,10 +409,10 @@ def test_embedding_index_cas_rejects_mid_fold_racer(
     sink(vecs.filter("vec_id < 6"), 0)
 
     fired = {"done": False}
-    real = ans.read_snapshot_or_none
+    real = ans.fold_base
 
-    def racing(spark_, table):
-        out = real(spark_, table)
+    def racing(spark_, table, txn_id):
+        out = real(spark_, table, txn_id)  # the sink's anchored read
         if table == i_tbl and not fired["done"]:
             fired["done"] = True
             st.append(
@@ -422,10 +420,10 @@ def test_embedding_index_cas_rejects_mid_fold_racer(
             )
         return out
 
-    monkeypatch.setattr(ans, "read_snapshot_or_none", racing)
-    with pytest.raises(ConcurrentMaintenanceError):
+    monkeypatch.setattr(ans, "fold_base", racing)
+    with pytest.raises(CommitConflictError):
         sink(vecs.filter("vec_id >= 6"), 1)
-    monkeypatch.setattr(ans, "read_snapshot_or_none", real)
+    monkeypatch.setattr(ans, "fold_base", real)
 
     assert len(st.read_snapshot(spark, i_tbl).collect()) == 6
     sink(vecs.filter("vec_id >= 6"), 1)  # retry converges

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.asof import sessionize
 from airflow_crypto_btc_spark.sources.tables import load_table
-from airflow_crypto_btc_spark.streaming.ohlc_stream import EVENT_STREAM_SCHEMA
-from airflow_crypto_btc_spark.streaming.sessions import streaming_sessionize
+from airflow_crypto_btc_spark.streaming.ohlc_stream import (
+    EVENT_STREAM_SCHEMA,
+    streaming_sessionize,
+)
 
 
 def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -49,7 +51,7 @@ def test_streaming_sessions_match_batch(spark, sf_dir, tmp_path):
     )
     sink = str(tmp_path / "sink")
     q = (
-        streaming_sessionize(stream)
+        streaming_sessionize(stream, watermark="10 minutes")
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
