@@ -330,9 +330,15 @@ def read_raw_range(
     This is the 100 TB path the day-granular layout exists for (SURVEY
     §4.3): a year-long backfill query over a petabyte table costs only the
     days it touches.  ``read_raw_day`` stays the single-partition fast
-    path for the per-day pipeline fold.
+    path for the per-day pipeline fold.  The data columns are declared, so
+    planning runs no schema-inference job; ``date`` is still discovered from
+    the directory names.
     """
-    df = spark.read.option("basePath", wh.raw_prices).parquet(wh.raw_prices)
+    df = (
+        spark.read.schema(RAW_PRICES_SCHEMA)
+        .option("basePath", wh.raw_prices)
+        .parquet(wh.raw_prices)
+    )
     return df.filter(
         (F.col("date") >= F.lit(lo_day).cast("date"))
         & (F.col("date") <= F.lit(hi_day).cast("date"))

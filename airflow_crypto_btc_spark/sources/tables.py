@@ -6,13 +6,25 @@ projection/filter over a stored table.  In Spark the projection and filter are
 expressed on the lazy DataFrame and Catalyst pushes them into the parquet
 scan (PushedFilters / ReadSchema), so callers should NOT pre-materialize —
 just ``load_table(...)`` and compose.
+
+A table's schema comes from one parquet footer, read in-process before the
+scan is planned, so loading a table (or registering every fixture as a
+view) runs no Spark job.
 """
 
 from __future__ import annotations
 
+import errno
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    LongType,
+    StructType,
+    TimestampType,
+    _parse_datatype_json_string,
+)
 
 TABLE_NAMES = (
     "region",
@@ -50,15 +62,58 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _first_data_file(path: str) -> str:
+    """``path`` itself, or the first data file under the directory ``path``
+    in name order, skipping ``_``/``.`` files (``_SUCCESS``, ``.crc``) as
+    Spark's file listing does."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(root, data[0])
+    raise FileNotFoundError(errno.ENOENT, "no parquet data file", path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's parquet inference gives ``path``, read from one
+    footer in-process.  Spark's own converter under the session's SQLConf
+    applies ``nanosAsLong``, NTZ inference and the Spark row metadata
+    exactly as inference does, without inference's Spark job."""
+    jvm = spark._jvm
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = jvm.org.apache.parquet
+    state = spark._jsparkSession.sessionState()
+    jpath = jvm.org.apache.hadoop.fs.Path(_first_data_file(path))
+    footer = spark_parquet.ParquetFooterReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromPath(
+            jpath, state.newHadoopConf()
+        ),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(jpath, footer),
+        spark_parquet.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return _parse_datatype_json_string(schema.json())
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan of one fixture table, timestamps normalized to
-    TIMESTAMP_NTZ (value-preserving under the UTC session timezone) so Spark
-    results schema-align with the DuckDB oracle's naive timestamps."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampType
-
+    TIMESTAMP_NTZ.  The scan's schema is read from the parquet footer, so no
+    Spark job runs."""
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    return _normalize_timestamps(
+        spark.read.schema(_footer_schema(spark, path)).parquet(path), name
+    )
+
+
+def _normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Every timestamp column of table ``name`` as TIMESTAMP_NTZ
+    (value-preserving under the UTC session timezone) so Spark results
+    schema-align with the DuckDB oracle's naive timestamps."""
     for c in _NANOS_TS_COLS.get(name, ()):
         if isinstance(df.schema[c].dataType, LongType):
             df = df.withColumn(
@@ -107,6 +162,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the spark.sql path
     (the reference mixes imperative pandas and declarative SQL — SURVEY §3
-    entry point 2; the engine exposes both)."""
+    entry point 2; the engine exposes both).  Runs no Spark job."""
     for t in TABLE_NAMES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -222,7 +222,7 @@ def test_read_raw_range_prunes_partitions_at_planning_time(
 ):
     """The hive-layout table must expose `date` as a partition column and
     push the day range into PartitionFilters — 1 of 3 day-directories
-    never enters the scan."""
+    never enters the scan — and planning the scan runs no Spark job."""
     from airflow_crypto_btc_spark.pipeline import (
         read_raw_day,
         read_raw_range,
@@ -237,8 +237,22 @@ def test_read_raw_range_prunes_partitions_at_planning_time(
     )
     assert len(DAYS) >= 3
     lo, hi = DAYS[0], DAYS[1]
-    df = read_raw_range(spark, wh, lo, hi)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    sc = spark.sparkContext
+    group = "raw-range-plan"
+    sc.setJobGroup(group, "read_raw_range planning")
+    try:
+        df = read_raw_range(spark, wh, lo, hi)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the group does capture jobs: one action lands in it
+        df.limit(1).collect()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert df.schema.simpleString() == (
+        "struct<ts_utc:string,asset:string,price:double,date:date>"
+    )
     assert "PartitionFilters" in plan
     expect = sum(
         read_raw_day(spark, wh, d).count() for d in (lo, hi)

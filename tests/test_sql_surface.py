@@ -11,7 +11,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.plans.registry_sql import SQL_REGISTRY
-from airflow_crypto_btc_spark.sources.tables import load_table
+from airflow_crypto_btc_spark.sources.tables import load_table, register_views
 
 
 def _run(spark, sf_dir, name):
@@ -27,6 +27,63 @@ def test_recursive_return_index_is_cumulative_product(spark, sf_dir):
             g["ret_index"], ratios.cumprod().round(6), rtol=1e-6
         )
         assert g["ret_index"].iloc[0] == 1.0
+
+
+# The oracle text as both engines ran it verbatim before the Spark side
+# materialized ``b``: the oracle must not drift with that change.
+_SHARED_RETURN_INDEX_SQL = """
+    WITH RECURSIVE b AS (
+      SELECT event_type, date, close,
+        row_number() OVER (PARTITION BY event_type ORDER BY date) AS rn
+      FROM (
+        SELECT event_type, CAST(ts AS DATE) AS date,
+               max_by(value, ts) AS close
+        FROM events
+        GROUP BY event_type, CAST(ts AS DATE)
+      )
+    ),
+    rec AS (
+      SELECT event_type, date, close, rn, CAST(1.0 AS DOUBLE) AS ret_index
+      FROM b WHERE rn = 1
+      UNION ALL
+      SELECT b.event_type, b.date, b.close, b.rn,
+        r.ret_index * (b.close / r.close)
+      FROM b JOIN rec r
+        ON b.event_type = r.event_type AND b.rn = r.rn + 1
+    )
+    SELECT event_type, date, close, round(ret_index, 6) AS ret_index
+    FROM rec
+"""
+
+
+def test_recursive_return_index_materialized_base_matches_inline(
+    spark, sf_dir
+):
+    """The entry runs its oracle text's recursion over ``b`` checkpointed
+    once: the same rows as the text run inline, in fewer jobs, and no
+    temp view left behind."""
+    spec = SQL_REGISTRY["sql_recursive_return_index"]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            rows = sorted(map(tuple, build().collect()))
+            return rows, len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    register_views(spark, sf_dir)
+    views = sorted(t.name for t in spark.catalog.listTables())
+    want, inline_jobs = run("recursive-inline", lambda: spark.sql(spec.sql))
+    got, entry_jobs = run("recursive-entry", lambda: spec.fn(spark, sf_dir))
+    assert got == want
+    assert len(got) > 0
+    assert entry_jobs < inline_jobs
+    assert sorted(t.name for t in spark.catalog.listTables()) == views
+    assert spec.sql == _SHARED_RETURN_INDEX_SQL
 
 
 def test_grouping_sets_totals_consistent(spark, sf_dir):
