@@ -19,6 +19,12 @@ re-expressed Spark-first (SURVEY §2.12, §7 step 8):
   partition — reads prune to it, and the merge swap rewrites only it.  The
   indicator pass runs over the *aggregated* daily table (365 rows/asset/yr),
   never the raw events, so its cost is independent of raw volume.
+- A day is about 24 rows, so its cost is the number of Spark jobs it runs.
+  Per stage, counted by job group, a new day (``daily_metrics`` already
+  there) runs extract 4, load_raw 2, compute_daily_metrics 4,
+  enrich_indicators 2, plot_report 1, quality_checks 4 (17); a re-run of
+  the day runs 0/3/4/2/1/4 (14).  No stage runs a pre-pass job for its
+  empty guard; ``tests/test_pipeline.py`` pins these counts.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
@@ -53,9 +59,8 @@ from airflow_crypto_btc_spark.operators.ohlc import daily_ohlc
 from airflow_crypto_btc_spark.plans.quality import (
     CheckResult,
     check_artifact_nonempty,
-    check_indicator_completeness,
+    check_day_metrics,
     check_min_rows,
-    check_not_null,
 )
 
 # --------------------------------------------------------------------- schemas
@@ -157,12 +162,27 @@ def _swap_into_place(staging: str, final: str) -> None:
         shutil.rmtree(tomb)
 
 
-def overwrite_staged(df: DataFrame, final_path: str) -> None:
+def overwrite_staged(
+    df: DataFrame, final_path: str, rows: Observation, empty_error: str
+) -> None:
     """S7 for a path that ``df``'s plan may itself be reading: stage the new
     snapshot to a sibling dir, then rename-swap.  ``mode("overwrite")``
-    directly would delete the input files before the job reads them."""
+    directly would delete the input files before the job reads them.
+
+    P7 empty guard without a pre-pass job: ``rows`` observes a ``rows``
+    count in ``df``'s plan and is read after the staged write.  When the
+    count is 0, or the write fails, the staging dir is deleted and nothing
+    is swapped.  The observation must not sit inside a shuffle map stage:
+    when such a stage comes out empty, AQE replaces it with an empty
+    relation, observation and all, and ``rows`` then holds no row."""
     staging = final_path + ".staging-" + uuid.uuid4().hex[:8]
-    df.write.mode("overwrite").parquet(staging)
+    try:
+        df.write.mode("overwrite").parquet(staging)
+        if not rows.get["rows"]:
+            raise ValueError(empty_error)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     _swap_into_place(staging, final_path)
 
 
@@ -176,26 +196,38 @@ def normalize_klines(
 ) -> DataFrame:
     """Klines page → canonical ``(ts_utc, asset, price)`` batch.
 
-    Mirrors reference ``:76-94``: explicit 12-col schema (S2), epoch-ms →
-    UTC timestamp (F1), ISO-8601 Z string form (F2), string→double cast
-    (F3), keep-first dedup on ts (D1), sort by ts (O1).  All JVM-side
-    expressions — no Python UDFs.
+    Mirrors reference ``:76-94``: the page becomes an Arrow table of the 12
+    named string columns plus its row position ``pos`` (S2), read by the JVM
+    with no Python worker.  Then epoch-ms → UTC timestamp (F1), ISO-8601 Z
+    string form (F2), string→double cast (F3), keep-first dedup on ts by
+    page position (D1, ``drop_duplicates`` keep='first'), sort by ts (O1).
+    All JVM-side expressions — no Python UDFs.
     """
-    schema = StructType(
-        [StructField(c, StringType()) for c in KLINES_COLUMNS]
-    )
-    raw = spark.createDataFrame(
-        [[str(v) for v in r] for r in rows], schema=schema
+    import pyarrow as pa
+
+    for r in rows:
+        if len(r) != len(KLINES_COLUMNS):
+            raise ValueError(
+                f"klines rows must have {len(KLINES_COLUMNS)} fields: {r!r}"
+            )
+    page = pa.table(
+        {
+            c: pa.array([str(r[i]) for r in rows], pa.string())
+            for i, c in enumerate(KLINES_COLUMNS)
+        }
+        | {"pos": pa.array(range(len(rows)), pa.int64())}
     )
     batch = (
-        raw.select(
+        spark.createDataFrame(page)
+        .select(
             F.date_format(
                 F.timestamp_millis(F.col("open_time").cast("long")),
                 "yyyy-MM-dd'T'HH:mm:ss'Z'",
             ).alias("ts_utc"),
             F.col("close").cast("double").alias("price"),
+            "pos",
         )
-        .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "ts_utc"))
+        .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "pos"))
         .withColumn("asset", F.lit(asset))
         .select("ts_utc", "asset", "price")
         .orderBy("ts_utc")
@@ -285,17 +317,21 @@ def load_raw(
 ) -> DataFrame:
     """Stage 2 (reference ``:106-161``): CSV → ``raw_prices`` with
     INSERT-OR-IGNORE semantics (S5).  Only the day's partition is read and
-    rewritten — the anti-join never touches other days."""
+    rewritten — the anti-join never touches other days.  Both branches
+    stage the partition and swap it in (S7)."""
     csv = (
         spark.read.option("header", True)
         .schema(DAY_CSV_SCHEMA)
         .csv(wh.day_csv(day, asset))
     )
-    if csv.isEmpty():  # P7 empty guard, reference ``:126-127``
-        raise ValueError(f"empty day CSV for {day}")
-    incoming = csv.withColumn("asset", F.lit(asset)).select(
-        "ts_utc", "asset", "price"
-    )
+    # P7 empty guard, reference ``:126-127``: keep-first rows per key are
+    # counted above the dedup's shuffle (see overwrite_staged)
+    rows = Observation()
+    incoming = dedup_keep_first(
+        csv.select("ts_utc", F.lit(asset).alias("asset"), "price"),
+        ("ts_utc", "asset"),
+        "ts_utc",
+    ).observe(rows, F.count(F.lit(1)).alias("rows"))
 
     part = wh.day_partition(day)
     if os.path.exists(part):
@@ -304,17 +340,11 @@ def load_raw(
             existing,
             incoming,
             key_cols=("ts_utc", "asset"),
-            order_col="ts_utc",
             broadcast_incoming=True,
         )
-        staging = part + ".staging-" + uuid.uuid4().hex[:8]
-        merged.write.mode("overwrite").parquet(staging)
-        _swap_into_place(staging, part)
     else:
-        os.makedirs(wh.raw_prices, exist_ok=True)
-        dedup_keep_first(
-            incoming, ("ts_utc", "asset"), "ts_utc"
-        ).write.mode("overwrite").parquet(part)
+        merged = incoming
+    overwrite_staged(merged, part, rows, f"empty day CSV for {day}")
     return read_raw_day(spark, wh, day)
 
 
@@ -367,21 +397,23 @@ def compute_daily_metrics(
     min_by/max_by) → keyed upsert into ``daily_metrics`` (S8: OHLC columns
     last-writer-wins, indicator columns untouched)."""
     day_rows = read_raw_day(spark, wh, day).filter(F.col("asset") == asset)
-    if day_rows.isEmpty():  # P7, reference ``:191-193``
-        raise ValueError(f"no rows for {asset} on {day}")
-
     ohlc = (
         daily_ohlc(
             day_rows, ts_col="ts_utc", price_col="price", key_cols=("asset",)
         )
         .withColumn("date", F.lit(day).cast("date"))
-        .select("date", "asset", *OHLC_COLS)
+        .select("date", "asset", *OHLC_COLS, "n_obs")
     )
 
     if os.path.exists(wh.daily_metrics):
-        existing = read_daily_metrics(spark, wh)
+        existing = read_daily_metrics(spark, wh).withColumn(
+            "n_obs", F.lit(None).cast("long")
+        )
         merged = upsert_by_key(
-            existing, ohlc, key_cols=("date", "asset"), update_cols=OHLC_COLS
+            existing,
+            ohlc,
+            key_cols=("date", "asset"),
+            update_cols=(*OHLC_COLS, "n_obs"),
         )
     else:
         merged = ohlc.select(
@@ -389,8 +421,20 @@ def compute_daily_metrics(
             "asset",
             *OHLC_COLS,
             *[F.lit(None).cast("double").alias(c) for c in INDICATOR_COLS],
+            "n_obs",
         )
-    overwrite_staged(merged, wh.daily_metrics)
+    # P7, reference ``:191-193``: the day's OHLC row carries its non-null
+    # n_obs through the upsert's shuffle and is counted above it (see
+    # overwrite_staged)
+    rows = Observation()
+    overwrite_staged(
+        merged.observe(rows, F.count("n_obs").alias("rows")).select(
+            *DAILY_METRICS_SCHEMA.names
+        ),
+        wh.daily_metrics,
+        rows,
+        f"no rows for {asset} on {day}",
+    )
     return read_daily_metrics(spark, wh)
 
 
@@ -399,16 +443,21 @@ def enrich_indicators(spark: SparkSession, wh: Warehouse) -> DataFrame:
     the full daily history and transactionally rewrite the table.  The input
     is the *aggregated* table (rows = days×assets), so "full history" is
     cheap regardless of raw-event volume; parallelism = #assets."""
-    metrics = read_daily_metrics(spark, wh)
-    if metrics.isEmpty():  # P7, reference ``:259-261``
-        raise ValueError("daily_metrics is empty")
     enriched = with_indicators(
-        metrics.drop(*INDICATOR_COLS),
+        read_daily_metrics(spark, wh).drop(*INDICATOR_COLS),
         date_col="date",
         close_col="close",
         key_cols=("asset",),
     ).select("date", "asset", *OHLC_COLS, *INDICATOR_COLS)
-    overwrite_staged(enriched, wh.daily_metrics)
+    # P7, reference ``:259-261``: counted above the indicator windows'
+    # shuffle, which keep every row (see overwrite_staged)
+    rows = Observation()
+    overwrite_staged(
+        enriched.observe(rows, F.count(F.lit(1)).alias("rows")),
+        wh.daily_metrics,
+        rows,
+        "daily_metrics is empty",
+    )
     return read_daily_metrics(spark, wh)
 
 
@@ -426,10 +475,11 @@ def plot_report(
     os.makedirs(wh.reports_dir, exist_ok=True)
     metrics = read_daily_metrics(spark, wh)
     window = trailing_days_slice(metrics, day, days=window_days)
+    # ≤ window_days rows: sorted on the driver, not by a Spark range sort
     pdf = (
         window.select("date", "close", "ma7", "ma30")
-        .orderBy("date")
         .toPandas()
+        .sort_values("date", ignore_index=True)
     )
     if pdf.empty:  # P7, reference ``:331-332, :344-345``
         raise ValueError(f"no report window data ending {day}")
@@ -473,12 +523,14 @@ def quality_checks(
     first failure like the reference's asserts."""
     metrics = read_daily_metrics(spark, wh)
     day_rows = read_raw_day(spark, wh, day).filter(F.col("asset") == asset)
-    day_metrics = metrics.filter(F.col("date") == F.lit(day).cast("date"))
+    ohlc_not_null, indicator_completeness = check_day_metrics(  # Q3, Q4
+        metrics, day, OHLC_COLS
+    )
     results = [
         check_artifact_nonempty(wh.day_csv(day, asset), "day_csv"),  # Q1
         check_min_rows(day_rows, min_day_rows, "day_rowcount"),  # Q2
-        check_not_null(day_metrics, list(OHLC_COLS), "ohlc_not_null"),  # Q3
-        check_indicator_completeness(metrics, day),  # Q4
+        ohlc_not_null,
+        indicator_completeness,
         check_artifact_nonempty(report_path, "report"),  # Q5
     ]
     for r in results:

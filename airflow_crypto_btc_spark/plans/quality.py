@@ -10,13 +10,14 @@ point lookups prune to one partition when state is date-partitioned).
 | rule | reference | engine |
 | Q1/Q5 artifact exists & non-empty   | :394-395, :439-441 | path check |
 | Q2 day row-count ≥ threshold        | :398-411           | filtered count |
-| Q3 OHLC non-null for the day        | :413-424           | null checks |
-| Q4 indicator completeness gate      | :426-435           | conditional |
+| Q3 OHLC non-null for the day        | :413-424           | one aggregate |
+| Q4 indicator completeness gate      | :426-435           | (same), gated |
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -75,43 +76,55 @@ def check_min_rows(
     return CheckResult(name, n >= min_rows, f"rows>={n}", f"rows>={min_rows}")
 
 
-def check_not_null(
-    df: DataFrame, cols: list[str], name: str = "not_null"
-) -> CheckResult:
-    """Q3: no nulls in ``cols`` within ``df`` — one aggregate pass."""
-    aggs = [F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols]
-    row = df.agg(*aggs).collect()[0]
-    bad = {c: row[c] for c in cols if (row[c] or 0) > 0}
-    return CheckResult(
-        name, not bad, f"null_counts={bad or 0}", "no nulls"
-    )
-
-
-def check_indicator_completeness(
+def check_day_metrics(
     metrics: DataFrame,
     day: str,
+    ohlc_cols: Sequence[str],
     history_min: int = 30,
-    cols: tuple[str, ...] = ("ma30", "vol30"),
-    date_col: str = "date",
-) -> CheckResult:
-    """Q4 (reference ``:426-435``): only once total history ≥ ``history_min``
-    rows must the long-window indicators for ``day`` be non-null."""
-    total = metrics.count()
+    indicator_cols: Sequence[str] = ("ma30", "vol30"),
+) -> tuple[CheckResult, CheckResult]:
+    """Q3 and Q4 of ``day`` from one aggregate over the ``metrics`` table
+    (``date`` column plus ``ohlc_cols`` and ``indicator_cols``).
+
+    - Q3 ``ohlc_not_null`` (reference ``:413-424``): no nulls in
+      ``ohlc_cols`` among the day's rows.
+    - Q4 ``indicator_completeness`` (reference ``:426-435``): only once the
+      table holds ≥ ``history_min`` rows must the day's row be present with
+      non-null ``indicator_cols``.
+    """
+    on_day = F.col("date") == F.lit(day).cast("date")
+    row = metrics.agg(
+        F.count(F.lit(1)).alias("__total"),
+        F.count_if(on_day).alias("__day_rows"),
+        *[
+            F.count_if(on_day & F.col(c).isNull()).alias(c)
+            for c in (*ohlc_cols, *indicator_cols)
+        ],
+    ).collect()[0]
+
+    bad_ohlc = {c: row[c] for c in ohlc_cols if row[c] > 0}
+    q3 = CheckResult(
+        "ohlc_not_null",
+        not bad_ohlc,
+        f"null_counts={bad_ohlc or 0}",
+        "no nulls",
+    )
+
+    total, present = row["__total"], row["__day_rows"] > 0
     if total < history_min:
-        return CheckResult(
+        return q3, CheckResult(
             "indicator_completeness",
             True,
             f"history={total}<{history_min} (gate inactive)",
             "gate inactive or indicators non-null",
         )
-    row = metrics.filter(F.col(date_col) == F.lit(day).cast("date")).collect()
-    bad = [c for c in (row[0].asDict() if row else {}) if c in cols and row[0][c] is None]
-    ok = bool(row) and not bad
-    return CheckResult(
+    bad = [c for c in indicator_cols if row[c] > 0]
+    return q3, CheckResult(
         "indicator_completeness",
-        ok,
-        f"history={total}, day_row={'present' if row else 'MISSING'}, null={bad}",
-        f"{cols} non-null once history>={history_min}",
+        present and not bad,
+        f"history={total}, day_row={'present' if present else 'MISSING'}, "
+        f"null={bad}",
+        f"{tuple(indicator_cols)} non-null once history>={history_min}",
     )
 
 

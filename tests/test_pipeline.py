@@ -125,6 +125,187 @@ def test_normalize_klines_shape_and_dedup(spark):
     assert out["price"].iloc[0] == 42050.5
     assert (out["asset"] == "BTC-USD").all()
 
+    # D1 keeps the first copy in PAGE order, whatever its price or place
+    # in time; the batch comes out ts-sorted (O1)
+    def k(hour, close):
+        t = 1704067200000 + hour * 3_600_000
+        return [t, "1", "1", "1", close, "1", t + 3_599_999, 0, 0, 0, 0, 0]
+
+    page = [k(5, "50.5"), k(2, "20.0"), k(3, "30.0"), k(2, "21.0"),
+            k(0, "0.5"), k(2, "19.0")]
+    got = normalize_klines(spark, page).collect()
+    assert [r["ts_utc"] for r in got] == [
+        "2024-01-01T00:00:00Z", "2024-01-01T02:00:00Z",
+        "2024-01-01T03:00:00Z", "2024-01-01T05:00:00Z",
+    ]
+    assert [r["price"] for r in got] == [0.5, 20.0, 30.0, 50.5]
+
+    with pytest.raises(ValueError):  # a page row is always 12 fields
+        normalize_klines(spark, [page[0][:6]])
+
+
+def _write_day_csv(wh, day, lines, asset="BTC-USD"):
+    os.makedirs(wh.data_dir, exist_ok=True)
+    with open(wh.day_csv(day, asset), "w") as fh:
+        fh.write("ts_utc,price\n" + "".join(f"{ln}\n" for ln in lines))
+
+
+def _files(path):
+    """Every file under ``path`` with its size and mtime (absent: {})."""
+    return {
+        os.path.relpath(os.path.join(r, f), path): (
+            os.stat(os.path.join(r, f)).st_size,
+            os.stat(os.path.join(r, f)).st_mtime_ns,
+        )
+        for r, _, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def _rows(spark, path):
+    return sorted(spark.read.parquet(path).collect())
+
+
+def _staging_dirs(wh):
+    return [r for r, _, _ in os.walk(wh.root) if ".staging-" in r]
+
+
+def test_load_raw_empty_csv_guard_swaps_nothing(spark, wh):
+    """P7 (reference ``:126-127``): a header-only day CSV raises before
+    any swap — an existing day partition keeps its files and rows, a new
+    one is never created, and no staging dir is left behind."""
+    from airflow_crypto_btc_spark.pipeline import load_raw
+
+    day, new_day = DAYS[0], DAYS[1]
+    _write_day_csv(wh, day, ["2024-01-01T00:00:00Z,1.5",
+                             "2024-01-01T01:00:00Z,2.5"])
+    load_raw(spark, wh, day)
+    part = wh.day_partition(day)
+    files, rows = _files(part), _rows(spark, part)
+    assert len(rows) == 2
+
+    _write_day_csv(wh, day, [])  # re-run of an existing partition
+    with pytest.raises(ValueError, match=f"empty day CSV for {day}"):
+        load_raw(spark, wh, day)
+    assert _files(part) == files and _rows(spark, part) == rows
+
+    _write_day_csv(wh, new_day, [])  # a day with no partition yet
+    with pytest.raises(ValueError, match=f"empty day CSV for {new_day}"):
+        load_raw(spark, wh, new_day)
+    assert not os.path.exists(wh.day_partition(new_day))
+    assert _staging_dirs(wh) == []
+
+
+def test_compute_daily_metrics_no_asset_rows_guard_swaps_nothing(spark, wh):
+    """P7 (reference ``:191-193``): a day partition holding rows only for
+    another asset raises "no rows for" before any swap, whether or not
+    ``daily_metrics`` exists yet."""
+    from airflow_crypto_btc_spark.pipeline import (
+        compute_daily_metrics,
+        load_raw,
+    )
+
+    day = DAYS[0]
+    _write_day_csv(wh, day, ["2024-01-01T00:00:00Z,1.5"], asset="OTHER")
+    load_raw(spark, wh, day, asset="OTHER")
+
+    with pytest.raises(ValueError, match=f"no rows for BTC-USD on {day}"):
+        compute_daily_metrics(spark, wh, day)
+    assert not os.path.exists(wh.daily_metrics)
+
+    compute_daily_metrics(spark, wh, day, asset="OTHER")
+    files, rows = _files(wh.daily_metrics), _rows(spark, wh.daily_metrics)
+    assert len(rows) == 1
+    with pytest.raises(ValueError, match=f"no rows for BTC-USD on {day}"):
+        compute_daily_metrics(spark, wh, day)
+    assert _files(wh.daily_metrics) == files
+    assert _rows(spark, wh.daily_metrics) == rows
+    assert _staging_dirs(wh) == []
+
+
+def test_enrich_indicators_empty_table_guard_swaps_nothing(spark, wh):
+    """P7 (reference ``:259-261``): an empty ``daily_metrics`` raises
+    before any swap and keeps its files."""
+    from airflow_crypto_btc_spark.pipeline import (
+        DAILY_METRICS_SCHEMA,
+        enrich_indicators,
+    )
+
+    spark.createDataFrame([], DAILY_METRICS_SCHEMA).write.parquet(
+        wh.daily_metrics
+    )
+    files = _files(wh.daily_metrics)
+    assert files and _rows(spark, wh.daily_metrics) == []
+    with pytest.raises(ValueError, match="daily_metrics is empty"):
+        enrich_indicators(spark, wh)
+    assert _files(wh.daily_metrics) == files
+    assert _staging_dirs(wh) == []
+
+
+def _klines_page(day):
+    """24 hourly candles of ``day`` in Binance's 12-column page shape."""
+    t0 = int(pd.Timestamp(day, tz="UTC").timestamp() * 1000)
+    return [
+        [t0 + h * 3_600_000, "1", "1", "1", f"{100 + h}.5", "1",
+         t0 + (h + 1) * 3_600_000 - 1, 0, 0, 0, 0, 0]
+        for h in range(24)
+    ]
+
+
+#: Spark jobs per stage of one ``run_day``: a new day (a fresh day
+#: partition, ``daily_metrics`` already there) and a re-run of it.  A
+#: day is about 24 rows, so its cost is its job count.
+NEW_DAY_JOBS = {"extract": 4, "load_raw": 2, "compute_daily_metrics": 4,
+                "enrich_indicators": 2, "plot_report": 1, "quality_checks": 4}
+RERUN_JOBS = {**NEW_DAY_JOBS, "extract": 0, "load_raw": 3}
+
+
+def test_run_day_job_budget_per_stage(spark, wh, monkeypatch):
+    """Each stage's Spark jobs, counted by job group, stay within the
+    budget above (17 for a new day, 14 for a re-run), and the klines page
+    is read by the JVM: its plan holds no Python RDD."""
+    import uuid
+
+    from airflow_crypto_btc_spark import pipeline
+
+    sc = spark.sparkContext
+    groups: dict[str, str] = {}
+
+    def grouped(stage, fn):
+        def run(*args, **kwargs):
+            groups[stage] = f"budget-{stage}-{uuid.uuid4().hex[:8]}"
+            sc.setJobGroup(groups[stage], stage)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        return run
+
+    for stage in NEW_DAY_JOBS:
+        monkeypatch.setattr(
+            pipeline, stage, grouped(stage, getattr(pipeline, stage))
+        )
+
+    def jobs_per_stage(day):
+        run_day(spark, wh, day, normalize_klines(spark, _klines_page(day)))
+        return {st: list(sc.statusTracker().getJobIdsForGroup(g))
+                for st, g in groups.items()}
+
+    jobs_per_stage(DAYS[0])  # history: daily_metrics exists from here on
+    new = {st: len(ids) for st, ids in jobs_per_stage(DAYS[1]).items()}
+    rerun = {st: len(ids) for st, ids in jobs_per_stage(DAYS[1]).items()}
+    # the groups capture jobs: every stage of a new day runs at least one
+    assert all(n >= 1 for n in new.values()), new
+    assert new["plot_report"] == rerun["plot_report"] == 1
+    assert all(new[st] <= NEW_DAY_JOBS[st] for st in NEW_DAY_JOBS), new
+    assert all(rerun[st] <= RERUN_JOBS[st] for st in RERUN_JOBS), rerun
+    assert sum(new.values()) <= 17 and sum(rerun.values()) <= 14
+
+    page = normalize_klines(spark, _klines_page(DAYS[2]))
+    lineage = page._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+
 
 def test_multi_asset_day_folds_are_isolated(spark, sf_dir, tmp_path):
     """Two assets folded into one warehouse: per-asset extracts don't

@@ -4,13 +4,14 @@ firing side of every rule."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 from airflow_crypto_btc_spark.plans.quality import (
     check_artifact_nonempty,
-    check_indicator_completeness,
+    check_day_metrics,
     check_min_rows,
-    check_not_null,
 )
 
 
@@ -42,47 +43,51 @@ def test_min_rows(spark):
 
 def test_not_null(spark):
     ok = spark.createDataFrame(
-        [(1.0, 2.0)], "open double, close double"
+        [(dt.date(2024, 1, 1), 1.0, 2.0), (dt.date(2024, 1, 2), None, None)],
+        "date date, open double, close double",
     )
-    assert check_not_null(ok, ["open", "close"]).passed
+    q3, _ = check_day_metrics(ok, "2024-01-01", ["open", "close"], 30, [])
+    assert q3.passed  # only the day's rows count
     bad = spark.createDataFrame(
-        [(1.0, None)], "open double, close double"
+        [(dt.date(2024, 1, 1), 1.0, None), (dt.date(2024, 1, 1), 1.0, 2.0)],
+        "date date, open double, close double",
     )
-    res = check_not_null(bad, ["open", "close"])
-    assert not res.passed and "close" in res.observed
+    q3, _ = check_day_metrics(bad, "2024-01-01", ["open", "close"], 30, [])
+    assert not q3.passed and q3.check == "ohlc_not_null"
+    assert q3.observed == "null_counts={'close': 1}"
+    with pytest.raises(AssertionError, match="ohlc_not_null"):
+        q3.raise_if_failed()
 
 
 def test_indicator_completeness_gate(spark):
-    import datetime as dt
+    def q4(rows, day):
+        df = spark.createDataFrame(
+            rows, "date date, close double, ma30 double, vol30 double"
+        )
+        return check_day_metrics(df, day, ["close"])[1]
 
     rows = [
-        (dt.date(2023, 1, 1) + dt.timedelta(days=i), 1.0, 1.0)
+        (dt.date(2023, 1, 1) + dt.timedelta(days=i), 1.0, 1.0, 1.0)
         for i in range(29)
     ]
-    short = spark.createDataFrame(
-        rows, "date date, ma30 double, vol30 double"
-    )
     # history < 30 → gate inactive even with nulls
-    short_nulls = spark.createDataFrame(
-        [(d, None, None) for d, *_ in rows],
-        "date date, ma30 double, vol30 double",
-    )
-    assert check_indicator_completeness(short_nulls, "2023-01-29").passed
+    short_nulls = [(d, c, None, None) for d, c, *_ in rows]
+    res = q4(short_nulls, "2023-01-29")
+    assert res.passed and "gate inactive" in res.observed
 
     rows31 = [
-        (dt.date(2023, 1, 1) + dt.timedelta(days=i), 1.0, 1.0)
+        (dt.date(2023, 1, 1) + dt.timedelta(days=i), 1.0, 1.0, 1.0)
         for i in range(31)
     ]
-    full = spark.createDataFrame(
-        rows31, "date date, ma30 double, vol30 double"
-    )
-    assert check_indicator_completeness(full, "2023-01-31").passed
+    assert q4(rows31, "2023-01-31").passed
 
-    rows_bad = rows31[:-1] + [(dt.date(2023, 1, 31), None, 1.0)]
-    broken = spark.createDataFrame(
-        rows_bad, "date date, ma30 double, vol30 double"
-    )
-    assert not check_indicator_completeness(broken, "2023-01-31").passed
+    rows_bad = rows31[:-1] + [(dt.date(2023, 1, 31), 1.0, None, 1.0)]
+    res = q4(rows_bad, "2023-01-31")
+    assert not res.passed and res.check == "indicator_completeness"
+    assert res.observed == "history=31, day_row=present, null=['ma30']"
+    # once the gate is active a missing day row fails it too
+    res = q4(rows31, "2023-02-01")
+    assert not res.passed and "day_row=MISSING" in res.observed
 
 
 def test_expectation_suite_passes_on_fixture(spark, sf_dir):
@@ -105,8 +110,6 @@ def test_expectation_suite_passes_on_fixture(spark, sf_dir):
 def test_expectation_suite_catches_violations(spark, tmp_path):
     """A corrupted slice (dup ids, null ts, bad type) must flip the
     matching rules to failed."""
-    import datetime as dt
-
     from pyspark.sql import functions as F
 
     from airflow_crypto_btc_spark.plans.registry_ext2 import (
