@@ -371,29 +371,22 @@ def novel_documents_sharded(
     one shard bitmap + one Arrow batch no matter how large the total
     filter capacity grows, and no bitmap is ever broadcast or collected.
     An incoming shard with no bloom row means no corpus content hashed
-    there — definitely new, zero bits tested.  ``expect_source`` pins
-    the state to the corpus generation being probed (same freshness
-    contract as the ANN/PQ indexes); the layout (shards, width, k) comes
-    from commit meta so probe positions always match build positions."""
+    there — definitely new, zero bits tested.  The state is pinned
+    (README, "Frozen inputs"); the layout (shards, width, k) comes from
+    the pinned commit's meta, so probe positions always match the
+    bitmaps read."""
     import numpy as np
     import pandas as pd
 
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(bloom_table).meta
-    if expect_source is not None:
-        src = meta.get("source_version")
-        if src != expect_source:
-            raise ValueError(
-                f"stale sharded bloom: built from {src!r}, caller "
-                f"expects {expect_source!r} — rebuild before probing"
-            )
-    shards = int(meta["shards"])
-    n_bits = int(meta["n_bits_per_shard"])
-    k = int(meta["k"])
+    [snap] = pin("sharded bloom", bloom_table, expect_source=expect_source)
+    shards = int(snap.meta["shards"])
+    n_bits = int(snap.meta["n_bits_per_shard"])
+    k = int(snap.meta["k"])
     id_type = dict(incoming.dtypes)[id_col]
     inc = (
         _digest_cols(incoming, text_col)
@@ -406,7 +399,7 @@ def novel_documents_sharded(
         )
         .localCheckpoint(eager=False)  # one digest pass feeds all uses
     )
-    blooms = read_snapshot(spark, bloom_table)
+    blooms = read_parts(spark, bloom_table, snap.files, snap)
 
     def _test(inc_pdf, bloom_pdf):
         if inc_pdf.empty:

@@ -561,24 +561,25 @@ def shards_from_map(
     shard)``) with the assignment FROZEN at map-build time: one
     broadcast join on a bounded map, no census aggregation, no window —
     the exchange-light scan a sharding re-run or ingest gate pays.
-    Refuses a stale map (``source_version`` mismatch) from commit
-    metadata before reading any data file."""
+    The map is pinned (README, "Frozen inputs")."""
+    return _assign_from_map(
+        spark, docs, table, id_col, text_col, expect_source
+    )[0]
+
+
+def _assign_from_map(
+    spark, docs, table, id_col, text_col, expect_source
+) -> tuple[DataFrame, DataFrame]:
+    """(:func:`shards_from_map`'s assignment, the map rows it joined):
+    both from one pinned commit of the map."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(table).meta
-    if expect_source is not None:
-        got = meta.get("source_version")
-        if got != expect_source:
-            raise ValueError(
-                f"stale shard map in {table!r}: source_version={got!r},"
-                f" expected {expect_source!r} — rebuild with"
-                f" build_shard_map before assigning"
-            )
-    m = int(meta["shards"]) * int(meta["oversample"])
-    mapping = read_snapshot(spark, table).select("micro_shard", "shard")
+    [snap] = pin("shard map", table, expect_source=expect_source)
+    m = int(snap.meta["shards"]) * int(snap.meta["oversample"])
+    mapping = read_parts(spark, table, snap.files, snap)
     with_n = docs.select(
         F.col(id_col),
         F.expr(
@@ -587,9 +588,10 @@ def shards_from_map(
         ).alias("micro_shard"),
         F.size(tokens_expr(text_col)).cast("long").alias("n_tokens"),
     )
-    return with_n.join(F.broadcast(mapping), "micro_shard").select(
-        id_col, "n_tokens", "micro_shard", "shard"
-    )
+    assigned = with_n.join(
+        F.broadcast(mapping.select("micro_shard", "shard")), "micro_shard"
+    ).select(id_col, "n_tokens", "micro_shard", "shard")
+    return assigned, mapping
 
 
 def shard_drift_report(
@@ -611,13 +613,9 @@ def shard_drift_report(
     is broadcast twice (assignment join, design shares) and never
     shuffled."""
     from airflow_crypto_btc_spark.functions.hashing import ratio_micro
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        read_snapshot,
-    )
 
-    assigned = shards_from_map(
-        spark, docs, map_table,
-        id_col=id_col, text_col=text_col, expect_source=expect_source,
+    assigned, mapping = _assign_from_map(
+        spark, docs, map_table, id_col, text_col, expect_source
     )
     observed = assigned.groupBy("shard").agg(
         F.sum("n_tokens").alias("obs_tokens")
@@ -626,8 +624,7 @@ def shard_drift_report(
         F.sum("obs_tokens").alias("obs_corpus")
     )
     design = (
-        read_snapshot(spark, map_table)
-        .groupBy("shard")
+        mapping.groupBy("shard")
         .agg(F.sum("tok_total").alias("design_tokens"))
     )
     des_tot = design.groupBy().agg(

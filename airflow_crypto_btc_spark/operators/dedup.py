@@ -549,15 +549,11 @@ def minhash_lsh_pairs_from_index_tables(
     expect_source: str | None = None,
     delta_banded: DataFrame | None = None,
 ) -> DataFrame:
-    """Table-path front end of :func:`minhash_lsh_pairs_from_index` with
-    FRESHNESS PINNING: before reading a row, the two index tables'
-    recorded ``source_version`` commit metadata must agree with each
-    other — a sets table from corpus v2 probed against a bands table
-    from v1 would emit pairs verified on the wrong shingle sets — and,
-    when ``expect_source`` is given, with the version the caller is
-    deduplicating against (mismatch = stale index, rebuild before
-    probing).  Raises ``ValueError`` on either mismatch; the check reads
-    only the commit log, no data files.
+    """Table-path front end of :func:`minhash_lsh_pairs_from_index`
+    over the two pinned index tables (README, "Frozen inputs"; they
+    must agree on ``source_version`` — a sets table from corpus v2
+    probed against a bands table from v1 would emit pairs verified on
+    the wrong shingle sets).
 
     ``delta_banded``: the delta's (id, band_idx, band_key) rows
     recomputed from raw text (:func:`minhash_band_rows` — bit-identical
@@ -570,22 +566,14 @@ def minhash_lsh_pairs_from_index_tables(
     pre-bkn index generations carry no bkn stats and are conservatively
     unpruned."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
+        pin,
+        read_parts,
         read_snapshot,
     )
 
-    s_src = current_snapshot(sets_table).meta.get("source_version")
-    b_src = current_snapshot(bands_table).meta.get("source_version")
-    if s_src != b_src:
-        raise ValueError(
-            f"index tables disagree on source_version: sets={s_src!r} "
-            f"bands={b_src!r} — mixed-version index, rebuild it"
-        )
-    if expect_source is not None and s_src != expect_source:
-        raise ValueError(
-            f"stale index: built from {s_src!r}, caller expects "
-            f"{expect_source!r} — rebuild before probing"
-        )
+    sets_snap, bands_snap = pin(
+        "index", sets_table, bands_table, expect_source=expect_source
+    )
     prune = None
     if delta_banded is not None:
         keys = sorted(
@@ -598,8 +586,10 @@ def minhash_lsh_pairs_from_index_tables(
         )  # bounded by |delta| × bands — never index-sized
         prune = ("bkn", [(k, k) for k in keys])
     return minhash_lsh_pairs_from_index(
-        read_snapshot(spark, sets_table),
-        read_snapshot(spark, bands_table, prune=prune),
+        read_parts(spark, sets_table, sets_snap.files, sets_snap),
+        read_snapshot(
+            spark, bands_table, version=bands_snap.version, prune=prune
+        ),
         delta_ids,
         jaccard_threshold,
         max_bucket_size,

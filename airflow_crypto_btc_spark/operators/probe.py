@@ -286,30 +286,23 @@ def quality_probe_scores_from_model(
     """Score against the PERSISTED probe — same output contract as
     training-then-scoring inline, identical values on the model's own
     corpus (bit-exact: the whole pipeline is integer arithmetic), and
-    frozen thereafter.  Refuses a stale model (``source_version``
-    mismatch) from commit metadata before reading any data file."""
+    frozen thereafter: the model is pinned (README, "Frozen inputs")."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(table).meta
-    if expect_source is not None:
-        got = meta.get("source_version")
-        if got != expect_source:
-            raise ValueError(
-                f"stale probe model in {table!r}: source_version={got!r},"
-                f" expected {expect_source!r} — rebuild with"
-                f" build_probe_model before serving"
-            )
-    model = read_snapshot(spark, table).select("pos", "w_micro")
+    [snap] = pin("probe model", table, expect_source=expect_source)
+    model = read_parts(spark, table, snap.files, snap).select(
+        "pos", "w_micro"
+    )
     return quality_probe_scores(
         vectors,
         weights_from_model_rows(model),
         id_col=id_col,
         vec_col=vec_col,
         label_col=label_col,
-        positive_min=int(meta.get("positive_min", 5)),
+        positive_min=int(snap.meta.get("positive_min", 5)),
     )
 
 

@@ -223,8 +223,7 @@ def build_bm25_index(
 ) -> None:
     """Persist the inverted index as two snapshot tables.  The postings
     append carries the source fingerprint in its commit meta; the serve
-    path refuses a stale or mixed-generation index from metadata alone
-    (the persisted-ANN-index convention)."""
+    path pins it (README, "Frozen inputs")."""
     from airflow_crypto_btc_spark.sources.snapshot_table import append
 
     meta = {"source_version": source_version}
@@ -249,23 +248,23 @@ def bm25_topk_from_index(
 ) -> DataFrame:
     """BM25 served from the persisted inverted index — the scan a
     100 TB curation query actually pays: no re-tokenization, postings
-    pruned to the queried tokens at the join."""
+    pruned to the queried tokens at the join.  Both tables are pinned
+    (README, "Frozen inputs")."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    if expect_source is not None:
-        for table in (postings_table, doclen_table):
-            got = current_snapshot(table).meta.get("source_version")
-            if got != expect_source:
-                raise ValueError(
-                    f"stale BM25 index at {table}: built from {got!r}, "
-                    f"expected {expect_source!r} — rebuild before serving"
-                )
+    snaps = pin(
+        "BM25 index", postings_table, doclen_table,
+        expect_source=expect_source, agree=(),
+    )
+    postings_df, doclen_df = (
+        read_parts(spark, s.table, s.files, s) for s in snaps
+    )
     return bm25_topk_from_parts(
-        read_snapshot(spark, postings_table),
-        read_snapshot(spark, doclen_table),
+        postings_df,
+        doclen_df,
         queries,
         k=k,
         k1=k1,

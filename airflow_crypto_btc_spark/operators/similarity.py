@@ -389,10 +389,8 @@ def lsh_topk_from_index(
     (:func:`build_ann_index`): queries arrive as their own frame (the
     online shape — the corpus is never re-hashed), hash to their bucket
     plus every ``max_hamming``-flip neighbor, and join the stored
-    buckets; exact cosine ranks the candidates.  ``expect_source`` pins
-    the index to the corpus version the caller queries against —
-    mismatch raises before any data file is read (same freshness
-    contract as ``dedup.minhash_lsh_pairs_from_index_tables``).
+    buckets; exact cosine ranks the candidates.  The index is pinned
+    (README, "Frozen inputs").
 
     ``prune_buckets`` collapses the probe set (driver-bounded —
     ≤ |queries| × (1 + planes) bucket strings) into a numeric [lo, hi]
@@ -403,19 +401,12 @@ def lsh_topk_from_index(
     stats keep every file, and correctness never depends on the prune:
     the bucket join still filters exactly)."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
+        pin,
         read_snapshot,
     )
 
-    meta = current_snapshot(table).meta
-    if expect_source is not None:
-        src = meta.get("source_version")
-        if src != expect_source:
-            raise ValueError(
-                f"stale ANN index: built from {src!r}, caller expects "
-                f"{expect_source!r} — rebuild before probing"
-            )
-    built_planes = meta.get("planes")
+    [snap] = pin("ANN index", table, expect_source=expect_source)
+    built_planes = snap.meta.get("planes")
     if built_planes is not None and built_planes != planes:
         raise ValueError(
             f"ANN index was built with planes={built_planes}, probe "
@@ -458,7 +449,7 @@ def lsh_topk_from_index(
             # envelope): a scattered probe set over a bnum-clustered
             # table skips every file strictly between two probed keys
             prune = ("bnum", [(b, b) for b in sorted(set(bnums))])
-    base = read_snapshot(spark, table, prune=prune)
+    base = read_snapshot(spark, table, version=snap.version, prune=prune)
     cos = F.when(
         F.col("qn") * F.col("vn") != 0,
         F.round(dot_expr("qe", "ve") / (F.col("qn") * F.col("vn")), 6),
@@ -896,39 +887,23 @@ def semantic_purge_delta(
     )
 
 
-def _check_semantic_index_meta(
+def _pin_semantic_index(
     centroids_table: str,
     members_table: str,
     expect_source: str | None,
-) -> dict:
-    """Shared freshness gate of the semantic-index table consumers
+):
+    """The pin of the semantic-index table consumers
     (:func:`semantic_purge_from_tables`, :func:`ivf_topk_from_tables`):
-    the two tables' ``source_version`` and ``quantizer`` metadata must
-    agree with each other, and with ``expect_source`` when given — all
-    checked from the commit log, no data files read.  Returns the
-    members table's metadata."""
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-    )
+    the two tables must agree on ``source_version`` and ``quantizer``
+    (members assigned by one model probed against another's centroids
+    would silently mis-cluster).  Returns (centroids, members)
+    snapshots."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import pin
 
-    c_meta = current_snapshot(centroids_table).meta
-    m_meta = current_snapshot(members_table).meta
-    for key in ("source_version", "quantizer"):
-        if c_meta.get(key) != m_meta.get(key):
-            raise ValueError(
-                f"semantic index tables disagree on {key}: "
-                f"centroids={c_meta.get(key)!r} "
-                f"members={m_meta.get(key)!r} — mixed-generation index, "
-                "rebuild it"
-            )
-    if expect_source is not None:
-        src = c_meta.get("source_version")
-        if src != expect_source:
-            raise ValueError(
-                f"stale semantic index: built from {src!r}, caller "
-                f"expects {expect_source!r} — rebuild before probing"
-            )
-    return m_meta
+    return pin(
+        "semantic index", centroids_table, members_table,
+        expect_source=expect_source, agree=("source_version", "quantizer"),
+    )
 
 
 def ivf_topk_from_tables(
@@ -964,14 +939,19 @@ def ivf_topk_from_tables(
     list and filtering in the join.  The range is a superset of the
     probed set (correctness never depends on it — the cid join still
     filters exactly); scattered probes prune less, which is honest
-    range-stats behavior.  ``expect_source`` pins the index generation
-    (same contract as every ``*_from_tables`` consumer)."""
+    range-stats behavior.  The index is pinned (README, "Frozen
+    inputs")."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
+        read_parts,
         read_snapshot,
     )
 
-    _check_semantic_index_meta(centroids_table, members_table, expect_source)
-    cent = read_snapshot(spark, centroids_table).withColumn(
+    c_snap, m_snap = _pin_semantic_index(
+        centroids_table, members_table, expect_source
+    )
+    cent = read_parts(
+        spark, centroids_table, c_snap.files, c_snap
+    ).withColumn(
         "cn", F.sqrt(norm2_expr("ce"))
     )
     probed = _nearest_centroids(
@@ -1000,7 +980,7 @@ def ivf_topk_from_tables(
             # lists, not just outside the [min, max] envelope
             prune = ("cid", [(c, c) for c in sorted(set(cids))])
     members = read_snapshot(
-        spark, members_table, prune=prune
+        spark, members_table, version=m_snap.version, prune=prune
     ).select(
         F.col("id").alias("nid"),
         F.col("e").alias("ve"),
@@ -1034,19 +1014,12 @@ def semantic_purge_from_tables(
     expect_source: str | None = None,
     prune_clusters: bool = True,
 ) -> DataFrame:
-    """Table-path front end of :func:`semantic_purge_delta` with the
-    FRESHNESS + MONOTONICITY pinning the exactness argument needs, all
-    checked before any index data file is read:
-
-    - the two tables' ``source_version`` (and ``quantizer``) metadata
-      must agree with each other — members assigned by model A probed
-      against model B's centroids would silently mis-cluster;
-    - ``expect_source``, when given, pins the index to the corpus
-      version the caller is deduplicating against (stale = rebuild);
-    - the delta's smallest id must exceed the recorded ``max_id`` (one
-      delta-sized aggregation vs one metadata scalar) — interleaved ids
-      would invalidate already-emitted old labelings, so they are
-      refused, not absorbed.
+    """Table-path front end of :func:`semantic_purge_delta` over the
+    pinned index (README, "Frozen inputs"), plus the MONOTONICITY check
+    the exactness argument needs: the delta's smallest id must exceed
+    the recorded ``max_id`` (one delta-sized aggregation vs one
+    metadata scalar) — interleaved ids would invalidate already-emitted
+    old labelings, so they are refused, not absorbed.
 
     ``prune_clusters``: file-level data skipping to match the plan-level
     semi-join — the delta's assignment is materialized ONCE, its touched
@@ -1058,14 +1031,14 @@ def semantic_purge_from_tables(
     Answer-invariant — pruning keeps a superset of the rows the
     semi-join keeps."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
+        read_parts,
         read_snapshot,
     )
 
-    m_meta = _check_semantic_index_meta(
+    c_snap, m_snap = _pin_semantic_index(
         centroids_table, members_table, expect_source
     )
-    max_id = m_meta.get("max_id")
+    max_id = m_snap.meta.get("max_id")
     if max_id is not None:
         lo = delta.agg(F.min(id_col).alias("lo")).collect()[0]["lo"]
         if lo is not None and lo <= max_id:
@@ -1076,7 +1049,7 @@ def semantic_purge_from_tables(
                 "emitted labelings; rebuild the index over the full "
                 "corpus instead"
             )
-    cent_df = read_snapshot(spark, centroids_table)
+    cent_df = read_parts(spark, centroids_table, c_snap.files, c_snap)
     delta_assigned = None
     prune = None
     if prune_clusters:
@@ -1101,7 +1074,9 @@ def semantic_purge_from_tables(
         prune = ("cid", [(c, c) for c in cids])
     return semantic_purge_delta(
         cent_df,
-        read_snapshot(spark, members_table, prune=prune),
+        read_snapshot(
+            spark, members_table, version=m_snap.version, prune=prune
+        ),
         delta,
         id_col,
         vec_col,
@@ -1910,43 +1885,27 @@ def pq_topk_from_index(
     vectorized table lookups (no corpus re-encode — the float vectors
     are touched solely to rerank the shortlist), and the whole pipeline
     keeps the 6-dp determinism contract, so the output is bit-identical
-    to :func:`pq_topk` on the same corpus version.  ``expect_source``
-    pins both tables to the corpus version being queried; a books/codes
-    version mismatch (partial rebuild) is refused too."""
+    to :func:`pq_topk` on the same corpus version.  Books and codes are
+    pinned (README, "Frozen inputs")."""
     import os
 
     import numpy as np
     import pandas as pd
 
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
     books_t = os.path.join(index_root, "books")
     codes_t = os.path.join(index_root, "codes")
-    b_meta = current_snapshot(books_t).meta
-    c_meta = current_snapshot(codes_t).meta
-    # compare the GENERATION keys only: maintenance commits (a takedown
-    # eviction annotating the codes table) add audit keys without
-    # changing the generation — a version OR m mismatch is still a
-    # partial rebuild and still refuses
-    gen = ("source_version", "m")
-    if {k: b_meta.get(k) for k in gen} != {k: c_meta.get(k) for k in gen}:
-        raise ValueError(
-            f"PQ index books/codes disagree ({b_meta!r} vs {c_meta!r}) "
-            "— partial rebuild, rebuild both"
-        )
-    if (
-        expect_source is not None
-        and b_meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale PQ index: built from "
-            f"{b_meta.get('source_version')!r}, caller expects "
-            f"{expect_source!r} — rebuild before probing"
-        )
-    books = pq_load_codebooks(spark, books_t)
+    # the GENERATION keys only: maintenance commits (a takedown eviction
+    # annotating the codes table) add audit keys without changing it
+    b_snap, c_snap = pin(
+        "PQ index", books_t, codes_t,
+        expect_source=expect_source, agree=("source_version", "m"),
+    )
+    books = pq_load_codebooks(spark, books_t, version=b_snap.version)
     m = len(books)
     unit = _unit_vectors(vectors, id_col, vec_col)
     qrows = (
@@ -1973,7 +1932,8 @@ def pq_topk_from_index(
                 ignore_index=True,
             )
 
-    cands = widen_small_input(read_snapshot(spark, codes_t)).mapInPandas(
+    codes = read_parts(spark, codes_t, c_snap.files, c_snap)
+    cands = widen_small_input(codes).mapInPandas(
         score, "qid long, nid long, adc double"
     )
     return _pq_shortlist_rerank(
@@ -2158,6 +2118,25 @@ def ivfpq_save_index(
     )
 
 
+def _pin_ivfpq_index(index_root: str, expect_source: str | None):
+    """Pin the four tables of an :func:`ivfpq_save_index` layout
+    (books, codes, centroids, lists) — they must agree on their whole
+    meta, so a partial rebuild is refused.  The one agreement rule of
+    the from-index serve and the arrivals sink."""
+    import os
+
+    from airflow_crypto_btc_spark.sources.snapshot_table import pin
+
+    return pin(
+        "IVF-PQ index",
+        *(
+            os.path.join(index_root, name)
+            for name in ("books", "codes", "centroids", "lists")
+        ),
+        expect_source=expect_source, agree=None,
+    )
+
+
 def ivfpq_topk_from_index(
     spark,
     index_root: str,
@@ -2174,39 +2153,17 @@ def ivfpq_topk_from_index(
     queries probe the loaded centroid table, ADC joins the persisted
     CODES restricted to the persisted LISTS, and the float corpus is
     touched only to rerank the shortlist — no re-assignment, no
-    re-encode, no training.  All four artifact tables must agree on
-    (source_version, m); a partial rebuild is refused, and
-    ``expect_source`` additionally pins the generation being queried.
-    Output is bit-identical to :func:`ivfpq_topk` on the same corpus
-    version (shared scoring tail, same 6-dp contract)."""
-    import os
+    re-encode, no training.  The four artifact tables are pinned
+    (README, "Frozen inputs") by :func:`_pin_ivfpq_index`.  Output is
+    bit-identical to :func:`ivfpq_topk` on the same corpus version
+    (shared scoring tail, same 6-dp contract)."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import read_parts
 
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+    books_s, codes_s, cent_s, lists_s = _pin_ivfpq_index(
+        index_root, expect_source
     )
-
-    parts = {
-        name: os.path.join(index_root, name)
-        for name in ("books", "codes", "centroids", "lists")
-    }
-    metas = {n: current_snapshot(p).meta for n, p in parts.items()}
-    if len({tuple(sorted(m.items())) for m in metas.values()}) != 1:
-        raise ValueError(
-            f"IVF-PQ index tables disagree ({metas!r}) — partial "
-            "rebuild, rebuild all four"
-        )
-    if (
-        expect_source is not None
-        and metas["books"].get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale IVF-PQ index: built from "
-            f"{metas['books'].get('source_version')!r}, caller expects "
-            f"{expect_source!r} — rebuild before probing"
-        )
-    books = pq_load_codebooks(spark, parts["books"])
-    cent = read_snapshot(spark, parts["centroids"]).withColumn(
+    books = pq_load_codebooks(spark, books_s.table, version=books_s.version)
+    cent = read_parts(spark, cent_s.table, cent_s.files, cent_s).withColumn(
         "cn", F.sqrt(norm2_expr("ce"))
     )
     probed = _nearest_centroids(
@@ -2215,8 +2172,8 @@ def ivfpq_topk_from_index(
         ),
         cent, "qid", "qe", keep=n_probe,
     ).select("qid", "cid")
-    codes = read_snapshot(spark, parts["codes"])
-    assigned = read_snapshot(spark, parts["lists"])
+    codes = read_parts(spark, codes_s.table, codes_s.files, codes_s)
+    assigned = read_parts(spark, lists_s.table, lists_s.files, lists_s)
     return _ivfpq_score_rerank(
         spark, vectors, codes, assigned, probed, books, len(books),
         id_col, vec_col, query_filter, shortlist, k,

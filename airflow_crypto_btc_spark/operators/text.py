@@ -499,21 +499,12 @@ def dup_coverage_from_index(
         shingles_expr,
     )
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(gram_table).meta
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale gram index: built from "
-            f"{meta.get('source_version')!r}, caller expects "
-            f"{expect_source!r} — rebuild before scoring"
-        )
-    k = int(meta.get("k", 8))
+    [snap] = pin("gram index", gram_table, expect_source=expect_source)
+    k = int(snap.meta.get("k", 8))
     tok = with_tokens(delta, text_col)
     grams = shingles_expr("tokens", k)
     g = tok.select(
@@ -527,7 +518,9 @@ def dup_coverage_from_index(
         .agg(F.count("*").alias("ddf"))
         .localCheckpoint(eager=False)
     )  # feeds the corpus probe AND the delta-internal branch
-    corpus_hits = read_snapshot(spark, gram_table).select("h").join(
+    corpus_hits = read_parts(
+        spark, gram_table, snap.files, snap
+    ).select("h").join(
         F.broadcast(delta_df.select("h")), ["h"], "left_semi"
     )
     dup_h = (
@@ -882,24 +875,6 @@ def build_text_models(
     )
 
 
-def _text_model_meta(table: str, expect_source: str | None) -> dict:
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-    )
-
-    meta = current_snapshot(table).meta
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale text model: built from "
-            f"{meta.get('source_version')!r}, caller expects "
-            f"{expect_source!r} — rebuild before scoring"
-        )
-    return meta
-
-
 def tfidf_top_terms_from_model(
     spark,
     docs: DataFrame,
@@ -918,13 +893,16 @@ def tfidf_top_terms_from_model(
     surface.  The model side is vocabulary-sized (Zipf-bounded) and
     broadcasts; the corpus is never re-aggregated."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        read_snapshot,
+        pin,
+        read_parts,
     )
     from pyspark.sql import Window
 
-    meta = _text_model_meta(idf_table, expect_source)
-    n_docs = int(meta["n_docs"])
-    model = read_snapshot(spark, idf_table).select("token", "idf")
+    [snap] = pin("text model", idf_table, expect_source=expect_source)
+    n_docs = int(snap.meta["n_docs"])
+    model = read_parts(spark, idf_table, snap.files, snap).select(
+        "token", "idf"
+    )
     toks = docs.select(
         "doc_id", F.explode(tokens_expr(text_col)).alias("token")
     )
@@ -966,12 +944,15 @@ def unigram_logprob_from_model(
     scores LOW against a frozen model, which is the quality-gate
     behavior the inline self-estimate cannot express."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = _text_model_meta(unigram_table, expect_source)
-    denom = float(int(meta["n_total"]) + int(meta["n_vocab"]))
-    model = read_snapshot(spark, unigram_table).select("token", "logp")
+    [snap] = pin("text model", unigram_table, expect_source=expect_source)
+    denom = float(int(snap.meta["n_total"]) + int(snap.meta["n_vocab"]))
+    model = read_parts(spark, unigram_table, snap.files, snap).select(
+        "token", "logp"
+    )
     toks = docs.select(
         "doc_id", F.explode(tokens_expr(text_col)).alias("token")
     )
@@ -1210,17 +1191,21 @@ def bigram_logprob_from_model(
     context u scores ``ln(0.5/|V| + 0.5·(c_v+1)/(N+|V|))``), so novel
     text scores low instead of erroring — the ingest-gate behavior."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = _text_model_meta(bigram_table, expect_source)
-    _text_model_meta(unigram_table, expect_source)
-    n_total, n_vocab = int(meta["n_total"]), int(meta["n_vocab"])
+    bi_snap, uni_snap = pin(
+        "text model", bigram_table, unigram_table,
+        expect_source=expect_source, agree=(),
+    )
+    n_total = int(bi_snap.meta["n_total"])
+    n_vocab = int(bi_snap.meta["n_vocab"])
     # barrier: see bigram_logprob_score — without it the join-key null
     # constraints re-derive the pair build below the Generate
     pairs = _bigram_pairs(docs, text_col).localCheckpoint(eager=False)
-    bi = read_snapshot(spark, bigram_table)
-    uni = read_snapshot(spark, unigram_table)
+    bi = read_parts(spark, bigram_table, bi_snap.files, bi_snap)
+    uni = read_parts(spark, unigram_table, uni_snap.files, uni_snap)
     scored = (
         pairs.join(bi, ["prev", "tok"], "left")
         .join(

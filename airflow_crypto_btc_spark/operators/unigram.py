@@ -533,26 +533,15 @@ def unigram_encode_from_model(
     path with UTF-8 ``<0xNN>`` byte pieces (see
     :func:`_encode_against`) — the production serve mode."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(model_table).meta
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale unigram model: trained on "
-            f"{meta.get('source_version')!r}, encoder expects "
-            f"{expect_source!r} — retrain before encoding (piece "
-            "scores are only meaningful against one generation)"
-        )
-    model = read_snapshot(spark, model_table)
+    [snap] = pin("unigram model", model_table, expect_source=expect_source)
     return _encode_against(
         docs,
-        model,
-        int(meta["max_piece_len"]),
+        read_parts(spark, model_table, snap.files, snap),
+        int(snap.meta["max_piece_len"]),
         id_col,
         text_col,
         byte_fallback=byte_fallback,

@@ -95,20 +95,12 @@ def encode_from_vocab(
     space-joined string for stable cross-engine comparison (the
     signature-array precedent)."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    if expect_source is not None:
-        meta = current_snapshot(vocab_table).meta
-        if meta.get("source_version") != expect_source:
-            raise ValueError(
-                f"stale vocab: built from "
-                f"{meta.get('source_version')!r}, encoder expects "
-                f"{expect_source!r} — rebuild before encoding (ids are "
-                f"only meaningful against one vocab generation)"
-            )
-    vmap = read_snapshot(spark, vocab_table).agg(
+    [snap] = pin("vocab", vocab_table, expect_source=expect_source)
+    vmap = read_parts(spark, vocab_table, snap.files, snap).agg(
         F.map_from_entries(
             F.collect_list(F.struct("token", "token_id"))
         ).alias("vm")
@@ -521,23 +513,17 @@ def build_bpe_table(
 
 
 def load_bpe_merges(spark: SparkSession, table: str, expect_source=None):
-    """Load a persisted merge list in TRAINING ORDER, version-checked."""
+    """Load a persisted merge list in TRAINING ORDER, pinned (README,
+    "Frozen inputs")."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(table).meta
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale BPE merges: trained on "
-            f"{meta.get('source_version')!r}, caller expects "
-            f"{expect_source!r} — retrain before encoding"
-        )
-    rows = read_snapshot(spark, table).orderBy("step").collect()
+    [snap] = pin("BPE merges", table, expect_source=expect_source)
+    rows = read_parts(spark, table, snap.files, snap).orderBy(
+        "step"
+    ).collect()
     return [
         (r["step"], r["lhs"], r["rhs"], r["pair_count"]) for r in rows
     ]

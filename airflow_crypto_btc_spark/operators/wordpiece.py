@@ -400,26 +400,15 @@ def wordpiece_encode_from_model(
     replaces the ``[UNK]`` word path with UTF-8 ``<0xNN>`` byte
     pieces (see :func:`_encode_against`)."""
     from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
-    meta = current_snapshot(vocab_table).meta
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale WordPiece vocab: built from "
-            f"{meta.get('source_version')!r}, encoder expects "
-            f"{expect_source!r} — rebuild before encoding (piece "
-            "boundaries are only meaningful against one generation)"
-        )
-    vocab = read_snapshot(spark, vocab_table)
+    [snap] = pin("WordPiece vocab", vocab_table, expect_source=expect_source)
     return _encode_against(
         docs,
-        vocab,
-        int(meta["max_piece_len"]),
+        read_parts(spark, vocab_table, snap.files, snap),
+        int(snap.meta["max_piece_len"]),
         id_col,
         text_col,
         byte_fallback=byte_fallback,

@@ -960,8 +960,8 @@ def q_curate_ppl_gate_from_model(spark, sf_dir):
     from airflow_crypto_btc_spark.plans.registry_more import _landing_zone
     from airflow_crypto_btc_spark.sources.snapshot_table import (
         append as snap_append,
-        current_snapshot,
-        read_snapshot,
+        pin,
+        read_parts,
     )
 
     zone, source_version = _text_models_zone(spark, sf_dir)
@@ -977,14 +977,10 @@ def q_curate_ppl_gate_from_model(spark, sf_dir):
 
     path = _landing_zone(sf_dir, "documents", "ppl_cutoffs", _land)
     cuts_table = os.path.join(path, "cutoffs")
-    meta = current_snapshot(cuts_table).meta
-    if meta.get("source_version") != source_version:
-        raise ValueError(
-            f"stale perplexity cutoffs: built from "
-            f"{meta.get('source_version')!r}, gate expects "
-            f"{source_version!r} — rebuild before gating"
-        )
-    cuts = read_snapshot(spark, cuts_table).collect()[0]  # one row
+    [snap] = pin(
+        "perplexity cutoffs", cuts_table, expect_source=source_version
+    )
+    cuts = read_parts(spark, cuts_table, snap.files, snap).collect()[0]
     scored = unigram_logprob_from_model(
         spark, docs, os.path.join(zone, "unigram"),
         expect_source=source_version,

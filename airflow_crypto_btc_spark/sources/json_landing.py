@@ -17,12 +17,18 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from airflow_crypto_btc_spark.operators.merge import dedup_keep_first
 
-#: Landed klines page row: the 12 positional fields keyed by name, all
-#: strings (Binance returns numerics as strings; cast at normalization).
+#: Landed klines page row: the positional fields keyed by name, all
+#: strings (Binance returns numerics as strings; cast at normalization),
+#: plus the row's position ``pos`` in its page.
 KLINES_JSON_SCHEMA = StructType(
     [
         StructField("open_time", StringType()),
@@ -31,6 +37,7 @@ KLINES_JSON_SCHEMA = StructType(
         StructField("low", StringType()),
         StructField("close", StringType()),
         StructField("volume", StringType()),
+        StructField("pos", LongType()),
     ]
 )
 
@@ -39,16 +46,16 @@ def land_klines_json(
     rows: Sequence[Sequence], path: str, day: str
 ) -> str:
     """Fetcher-side landing: one JSON-lines file per (day) page under
-    ``path``.  Driver/fetcher code — no Spark involved, mirroring a fleet
-    of API pollers writing to object storage."""
+    ``path``, each line carrying its page position ``pos``.
+    Driver/fetcher code — no Spark involved, mirroring a fleet of API
+    pollers writing to object storage."""
     os.makedirs(path, exist_ok=True)
     out = os.path.join(path, f"klines_{day}.jsonl")
-    fields = [f.name for f in KLINES_JSON_SCHEMA.fields]
+    fields = [f.name for f in KLINES_JSON_SCHEMA.fields if f.name != "pos"]
     with open(out, "w") as fh:
-        for r in rows:
-            fh.write(
-                json.dumps({k: str(v) for k, v in zip(fields, r)}) + "\n"
-            )
+        for pos, r in enumerate(rows):
+            line = {k: str(v) for k, v in zip(fields, r)} | {"pos": pos}
+            fh.write(json.dumps(line) + "\n")
     return out
 
 
@@ -58,8 +65,9 @@ def read_klines_landing(
     """Spark-side: schema'd JSON-lines scan of the landing zone →
     canonical ``(ts_utc, asset, price)`` batch (same normalization as
     ``pipeline.normalize_klines``: F1-F3 conversions + D1 keep-first
-    dedup).  Explicit schema — no inference pass, malformed rows surface
-    as nulls rather than schema drift."""
+    dedup, the first copy being the earliest by landed file name, then
+    page position).  Explicit schema — no inference pass, malformed rows
+    surface as nulls rather than schema drift."""
     raw = spark.read.schema(KLINES_JSON_SCHEMA).json(path)
     return (
         raw.select(
@@ -68,8 +76,12 @@ def read_klines_landing(
                 "yyyy-MM-dd'T'HH:mm:ss'Z'",
             ).alias("ts_utc"),
             F.col("close").cast("double").alias("price"),
+            F.col("_metadata.file_name").alias("file"),
+            "pos",
         )
-        .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "ts_utc"))
+        .transform(
+            lambda d: dedup_keep_first(d, ["ts_utc"], ["file", "pos"])
+        )
         .withColumn("asset", F.lit(asset))
         .select("ts_utc", "asset", "price")
     )

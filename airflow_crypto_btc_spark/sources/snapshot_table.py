@@ -490,6 +490,42 @@ def fold_base(
     return snap.version, read_parts(spark, table, snap.files, snap)
 
 
+def pin(
+    what: str,
+    *tables: str,
+    expect_source: str | None = None,
+    agree: tuple[str, ...] | None = ("source_version",),
+) -> tuple[Snapshot, ...]:
+    """The generation pin of a frozen model or index (README, "Frozen
+    inputs"): replay each table's log ONCE and return those snapshots.
+    The tables must agree on the ``agree`` meta keys (``None``: the
+    whole meta), else a partial rebuild is refused as "``what`` tables
+    disagree"; with ``expect_source`` given, each must have been built
+    from it (meta ``source_version``), else "stale ``what``".  Callers
+    then read exactly the pinned commits (``read_parts(spark, t,
+    snap.files, snap)``, ``read_snapshot(..., version=snap.version)``),
+    so the meta they trusted and the rows they serve are one commit's."""
+    snaps = tuple(current_snapshot(t) for t in tables)
+
+    def gen(meta: dict) -> dict:
+        return meta if agree is None else {k: meta.get(k) for k in agree}
+
+    if any(gen(s.meta) != gen(snaps[0].meta) for s in snaps[1:]):
+        got = ", ".join(f"{s.table}={gen(s.meta)!r}" for s in snaps)
+        raise ValueError(
+            f"{what} tables disagree ({got}) — mixed-generation "
+            "(partial) rebuild, rebuild them together"
+        )
+    for s in snaps if expect_source is not None else ():
+        got = s.meta.get("source_version")
+        if got != expect_source:
+            raise ValueError(
+                f"stale {what}: {s.table} built from {got!r}, expected "
+                f"{expect_source!r} — rebuild before serving"
+            )
+    return snaps
+
+
 def _write_parts(
     df: DataFrame, table: str
 ) -> tuple[list[str], dict, dict]:

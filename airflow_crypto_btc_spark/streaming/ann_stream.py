@@ -42,8 +42,10 @@ from airflow_crypto_btc_spark.operators.similarity import (
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
     fold_base,
+    pin,
 )
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -190,14 +192,11 @@ def pq_codes_sink(
 ):
     """``foreachBatch`` callback appending arriving vectors' PQ CODES to
     the persisted index (``operators/similarity.pq_save_index`` layout):
-    the codebooks are FROZEN — loaded once at sink construction, with
-    ``expect_source`` pinning them to the corpus generation the stream
-    extends — and each batch encodes only its fresh ids against them
-    (m·4 bytes per vector appended, the float payload never lands in
-    the index).  A corpus-version change means retrain + rebuild, not
-    streaming: appending codes from different codebooks would silently
-    corrupt every ADC comparison, which is exactly what the version pin
-    refuses.
+    the codebooks are a FROZEN input (README, "Frozen inputs"), and each
+    batch encodes only its fresh ids against them (m·4 bytes per vector
+    appended, the float payload never lands in the index).  Appending
+    codes from different codebooks would silently corrupt every ADC
+    comparison, which is what the pin refuses.
 
     Replay safety: within-batch dedup is deterministic, already-encoded
     ids anti-join away against the committed codes, and the single
@@ -208,37 +207,22 @@ def pq_codes_sink(
         pq_encode,
         pq_load_codebooks,
     )
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-    )
 
-    books_t = os.path.join(index_root, "books")
     codes_t = os.path.join(index_root, "codes")
-    books_snap = current_snapshot(books_t)
+    [books_snap] = pin(
+        "PQ codebooks", os.path.join(index_root, "books"),
+        expect_source=expect_source,
+    )
     meta = books_snap.meta
-    if expect_source is not None and meta.get("source_version") != expect_source:
-        raise ValueError(
-            f"stale PQ codebooks: built from "
-            f"{meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — retrain before streaming codes"
-        )
-
     books_cache = {}
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # frozen-model contract: books load ONCE (first batch) and every
-        # later batch asserts the books table is still the SAME COMMIT —
-        # by VERSION, not meta: a rebuild with identical meta (same
-        # corpus tag, retrained books) bumps the version and must stop
-        # the stream rather than silently mix codebook generations
-        if current_snapshot(books_t).version != books_snap.version:
-            raise ValueError(
-                "PQ codebooks changed under a running codes stream — "
-                "restart the sink against the new generation"
+        assert_pinned("PQ codebooks", books_snap)
+        if "books" not in books_cache:  # loaded once, on the first batch
+            books_cache["books"] = pq_load_codebooks(
+                spark, books_snap.table, version=books_snap.version
             )
-        if "books" not in books_cache:
-            books_cache["books"] = pq_load_codebooks(spark, books_t)
         books = books_cache["books"]
         txn = f"{query_name}:{batch_id}"
         codes_v, committed = fold_base(spark, codes_t, txn)
@@ -277,12 +261,10 @@ def ivfpq_arrivals_sink(
     appends (codes, lists) — so ``ivfpq_topk_from_index`` serves a
     corpus that grows online without ever re-training or re-scanning.
 
-    Frozen-model contract: books AND centroids are version-asserted
-    every batch (a retrain/re-seed mid-stream would silently mix code
-    spaces or split inverted lists — refused, restart the sink against
-    the new generation).  ``expect_source`` pins the generation at
-    construction; all four index tables must agree (partial rebuilds
-    refused).
+    Books AND centroids are frozen inputs (README, "Frozen inputs"): a
+    retrain/re-seed mid-stream would silently mix code spaces or split
+    inverted lists.  All four index tables are pinned at construction
+    (``similarity._pin_ivfpq_index``: a partial rebuild is refused).
 
     Exactly-once: within-batch dedup is deterministic, already-indexed
     ids anti-join away against the LISTS table (the final commit, so
@@ -300,72 +282,45 @@ def ivfpq_arrivals_sink(
     Scale shape per batch: one broadcast-centroid assignment scan and
     one Arrow encode over the BATCH only; the growing index tables are
     touched only by the anti-join (id column) and the appends."""
-    import os
-
     from airflow_crypto_btc_spark.operators.similarity import (
         _nearest_centroids,
+        _pin_ivfpq_index,
         pq_encode,
         pq_load_codebooks,
     )
     from airflow_crypto_btc_spark.sources.snapshot_table import (
         CommitConflictError,
         current_snapshot,
-        read_snapshot,
+        read_parts,
     )
 
-    parts = {
-        name: os.path.join(index_root, name)
-        for name in ("books", "codes", "centroids", "lists")
-    }
-    metas = {n: current_snapshot(p).meta for n, p in parts.items()}
-    if len({tuple(sorted(m.items())) for m in metas.values()}) != 1:
-        raise ValueError(
-            f"IVF-PQ index tables disagree ({metas!r}) — partial "
-            "rebuild, rebuild all four before streaming arrivals"
-        )
-    meta = metas["books"]
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale IVF-PQ index: built from "
-            f"{meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming arrivals"
-        )
-    books_snap = current_snapshot(parts["books"])
-    cent_snap = current_snapshot(parts["centroids"])
+    books_snap, codes_snap, cent_snap, lists_snap = _pin_ivfpq_index(
+        index_root, expect_source
+    )
+    meta = books_snap.meta
+    codes_t, lists_t = codes_snap.table, lists_snap.table
     cache: dict = {}
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(parts["books"]).version != books_snap.version:
-            raise ValueError(
-                "PQ codebooks changed under a running IVF-PQ stream — "
-                "restart the sink against the new generation"
-            )
-        if (
-            current_snapshot(parts["centroids"]).version
-            != cent_snap.version
-        ):
-            raise ValueError(
-                "coarse centroids changed under a running IVF-PQ "
-                "stream — restart the sink against the new generation"
-            )
+        assert_pinned("PQ codebooks", books_snap)
+        assert_pinned("coarse centroids", cent_snap)
         if "books" not in cache:
-            cache["books"] = pq_load_codebooks(spark, parts["books"])
+            cache["books"] = pq_load_codebooks(
+                spark, books_snap.table, version=books_snap.version
+            )
         books = cache["books"]
         # CAS anchors: the versions the codes append and the anti-join
         # (lists, the final commit) are based on
-        codes_v = current_snapshot(parts["codes"]).version
+        codes_v = current_snapshot(codes_t).version
         lists_txn = f"{query_name}:{batch_id}:lists"
-        lists_v, committed = fold_base(spark, parts["lists"], lists_txn)
+        lists_v, committed = fold_base(spark, lists_t, lists_txn)
         fresh = fresh_rows(
             batch_df, id_col, vec_order(vec_col), committed, "nid"
         )
-        cent = read_snapshot(spark, parts["centroids"]).withColumn(
-            "cn", F.sqrt(norm2_expr("ce"))
-        )
+        cent = read_parts(
+            spark, cent_snap.table, cent_snap.files, cent_snap
+        ).withColumn("cn", F.sqrt(norm2_expr("ce")))
         assigned = _nearest_centroids(
             fresh.select(
                 F.col(id_col).alias("nid"), F.col(vec_col).alias("ve")
@@ -375,7 +330,7 @@ def ivfpq_arrivals_sink(
         codes_new = pq_encode(fresh, books, id_col, vec_col)
         # fast-fail: a second writer that already folded would have
         # appended lists; the CAS below is the same-table guarantee
-        now = current_snapshot(parts["lists"])
+        now = current_snapshot(lists_t)
         if lists_txn not in now.txn_ids and now.version != lists_v:
             raise CommitConflictError(
                 f"lists table moved past v{lists_v} during IVF-PQ "
@@ -383,18 +338,18 @@ def ivfpq_arrivals_sink(
                 "retry the batch"
             )
         append(
-            spark, codes_new, parts["codes"],
+            spark, codes_new, codes_t,
             txn_id=f"{query_name}:{batch_id}:codes",
             meta=meta, expect_version=codes_v,
         )
         append(
-            spark, assigned, parts["lists"],
+            spark, assigned, lists_t,
             txn_id=lists_txn,
             meta=meta, expect_version=lists_v,
         )
         maintain(
             spark, batch_id, compact_every, compact_target_parts,
-            {parts["codes"]: None, parts["lists"]: None},
+            {codes_t: None, lists_t: None},
         )
 
     return _fold

@@ -8,11 +8,9 @@ pipeline trains the classifier ONCE on the labeled reference set and
 gates arrivals against FROZEN weights — re-running gradient descent per
 micro-batch would both rescan the corpus and DRIFT (the same document
 admitted today, dropped tomorrow, because unrelated arrivals moved the
-weights).  The weights are loaded once at sink construction,
-version-asserted every batch: a model rebuild under a running stream
-stops it rather than silently mixing scoring regimes (the same doctrine
-as ``text_stream.quality_scores_sink`` and ``semantic_stream``'s frozen
-quantizer).
+weights).  The weights are a frozen input (README, "Frozen inputs"): a
+model rebuild under a running stream stops it rather than silently
+mixing scoring regimes.
 
 Per batch: deterministic within-batch dedup, already-decided ids
 anti-join away (re-delivery), survivors score via one broadcast
@@ -37,11 +35,12 @@ from airflow_crypto_btc_spark.operators.probe import (
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
-    current_snapshot,
     fold_base,
-    read_snapshot,
+    pin,
+    read_parts,
 )
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -60,34 +59,17 @@ def probe_gate_sink(
 ):
     """``foreachBatch`` callback appending arriving vectors' frozen-probe
     gate decisions — ``(id, score_micro, passed)`` — with exactly-once
-    semantics.  ``expect_source`` pins the weights to the corpus
-    generation the gate was calibrated on (checked once at
-    construction); every batch then asserts the model table is still the
-    SAME COMMIT by version.
+    semantics against the pinned weights.
 
     Arrivals carry no label (that is the point of the gate), so scoring
     goes through the weight array directly rather than
     ``quality_probe_scores_from_model``'s labeled-evaluation shape."""
 
-    model_snap = current_snapshot(model_table)
-    if (
-        expect_source is not None
-        and model_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale probe model: built from "
-            f"{model_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming the gate"
-        )
+    [model_snap] = pin("probe model", model_table, expect_source=expect_source)
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(model_table).version != model_snap.version:
-            raise ValueError(
-                "probe model changed under a running gate stream — "
-                "restart the sink against the new generation (scores "
-                "from different weight generations are not comparable)"
-            )
+        assert_pinned("probe model", model_snap)
         txn = f"{query_name}:{batch_id}"
         decisions_v, committed = fold_base(spark, decisions_table, txn)
         fresh = fresh_rows(
@@ -95,7 +77,9 @@ def probe_gate_sink(
             committed, id_col,
         )
         weights = weights_from_model_rows(
-            read_snapshot(spark, model_table).select("pos", "w_micro")
+            read_parts(
+                spark, model_table, model_snap.files, model_snap
+            ).select("pos", "w_micro")
         )
         # label-free scoring: reuse the batch scorer with a dummy label,
         # then keep only the gate-relevant columns

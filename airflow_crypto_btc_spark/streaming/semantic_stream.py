@@ -11,10 +11,8 @@ The batch-side architecture (``build_semantic_index`` →
 exact under a FROZEN quantizer and append-only ids.  This module runs
 the Δ side per micro-batch:
 
-1. the centroids table is loaded once at sink construction and
-   version-asserted every batch — a rebuild under a running stream must
-   stop it, never silently re-cluster (same frozen-model doctrine as
-   ``ann_stream.pq_codes_sink``);
+1. the centroids are a frozen input (README, "Frozen inputs") — a
+   rebuild under a running stream stops it, never silently re-clusters;
 2. within-batch duplicates resolve deterministically and already-indexed
    ids anti-join away (re-delivery from an at-least-once source);
 3. ids arriving BELOW the committed high-water mark would invalidate
@@ -44,10 +42,12 @@ from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
     current_snapshot,
     fold_base,
-    read_snapshot,
+    pin,
+    read_parts,
 )
 from airflow_crypto_btc_spark.streaming.ann_stream import vec_order
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -71,11 +71,7 @@ def semantic_index_sink(
     table and the emitted labelings table with exactly-once semantics
     against FROZEN centroids.
 
-    ``expect_source`` pins the centroids to the corpus generation the
-    stream extends (checked once at construction); every batch then
-    asserts the centroids table is still the SAME COMMIT by version — a
-    retrain with identical metadata bumps the version and stops the
-    stream rather than mixing quantizer generations.
+    The centroids are a frozen input (README, "Frozen inputs").
 
     ``quarantine_table``: where below-high-water-mark arrivals land
     (id, batch max_id at refusal time).  Without it such rows are
@@ -90,28 +86,18 @@ def semantic_index_sink(
     serving artifact stays complete; audit with
     ``similarity.semantic_purge_skipped_clusters``."""
 
-    cent_snap = current_snapshot(centroids_table)
-    if (
-        expect_source is not None
-        and cent_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale semantic quantizer: built from "
-            f"{cent_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming"
-        )
-
+    [cent_snap] = pin(
+        "semantic quantizer", centroids_table, expect_source=expect_source
+    )
     state: dict = {}  # frozen centroids frame, loaded on first batch
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(centroids_table).version != cent_snap.version:
-            raise ValueError(
-                "semantic quantizer changed under a running stream — "
-                "restart the sink against the new generation"
-            )
+        assert_pinned("semantic quantizer", cent_snap)
         if "cent" not in state:
-            state["cent"] = read_snapshot(spark, centroids_table)
+            state["cent"] = read_parts(
+                spark, centroids_table, cent_snap.files, cent_snap
+            )
         members_txn = f"{query_name}:{batch_id}:members"
         members_v, committed = fold_base(spark, members_table, members_txn)
         # the fresh chain (deterministic dedup + anti-join) feeds the

@@ -8,11 +8,9 @@ serpentine balance plan is computed ONCE on a reference corpus census
 and frozen — re-planning per micro-batch would move already-assigned
 documents between shards as the observed token distribution drifts
 (a shard assignment, like a quality score, must not change because
-unrelated documents arrived).  The map is loaded once at sink
-construction, version-asserted every batch: a rebuild under a running
-stream stops the sink rather than silently splitting the corpus across
-two shard plans (the same doctrine as ``probe_stream`` /
-``text_stream`` / ``semantic_stream``).
+unrelated documents arrived).  The map is a frozen input (README,
+"Frozen inputs"): a rebuild under a running stream stops the sink
+rather than silently splitting the corpus across two shard plans.
 
 Per batch: deterministic within-batch dedup, already-assigned ids
 anti-join away (re-delivery), survivors assign via one broadcast join
@@ -32,11 +30,12 @@ from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
-    current_snapshot,
     fold_base,
+    pin,
     read_snapshot,
 )
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -54,34 +53,18 @@ def shard_assignments_sink(
 ):
     """``foreachBatch`` callback appending arriving documents' frozen-map
     shard assignments — ``(id, n_tokens, micro_shard, shard)`` — with
-    exactly-once semantics.  ``expect_source`` pins the map to the
-    census generation it was planned on (checked once at construction);
-    every batch then asserts the map table is still the SAME COMMIT by
-    version.  Because the persisted map is complete over every
-    micro-shard, an arrival can never miss it — there is no fallback
-    path whose behavior could diverge from the batch operator."""
+    exactly-once semantics against the pinned map.  Because the
+    persisted map is complete over every micro-shard, an arrival can
+    never miss it — there is no fallback path whose behavior could
+    diverge from the batch operator."""
     from airflow_crypto_btc_spark.functions.hashing import tokens_expr
 
-    map_snap = current_snapshot(map_table)
-    if (
-        expect_source is not None
-        and map_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale shard map: planned on "
-            f"{map_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming assignments"
-        )
+    [map_snap] = pin("shard map", map_table, expect_source=expect_source)
     m = int(map_snap.meta["shards"]) * int(map_snap.meta["oversample"])
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(map_table).version != map_snap.version:
-            raise ValueError(
-                "shard map changed under a running assignment stream — "
-                "restart the sink against the new generation (documents "
-                "assigned under different plans would split the corpus)"
-            )
+        assert_pinned("shard map", map_snap)
         # the map-version assert above is the cross-table fast-fail;
         # the anchored append below is the same-table guarantee
         txn = f"{query_name}:{batch_id}"
@@ -89,9 +72,9 @@ def shard_assignments_sink(
         fresh = fresh_rows(
             batch_df, id_col, F.md5(F.col(text_col)), committed, id_col
         )
-        mapping = read_snapshot(spark, map_table).select(
-            "micro_shard", "shard"
-        )
+        mapping = read_snapshot(
+            spark, map_table, version=map_snap.version
+        ).select("micro_shard", "shard")
         assigned = (
             fresh.select(
                 F.col(id_col),

@@ -20,7 +20,9 @@ file write.
 The maintainer sinks (``streaming/*_stream.py``) share the rest of the
 contract (README, "sink contract"): ``snapshot_table.fold_base`` is the
 anchored or pre-fold read, :func:`fresh_rows` the insert-only front end,
-and :func:`maintain` the cadence compaction.
+:func:`maintain` the cadence compaction, and ``snapshot_table.pin`` at
+construction plus :func:`assert_pinned` per batch the frozen-input
+check.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.sources.snapshot_table import (
+    Snapshot,
     append,
     compact,
     current_snapshot,
@@ -67,6 +70,22 @@ def fresh_rows(
             "left_anti",
         )
     return fresh
+
+
+def assert_pinned(what: str, *snaps: Snapshot) -> None:
+    """The per-batch half of a frozen input's pin (README, "Frozen
+    inputs"): each of ``snaps`` — taken by ``snapshot_table.pin`` at
+    sink construction — must still be its table's current commit.  By
+    VERSION, not meta: a rebuild with identical meta (same corpus tag,
+    retrained model) stops the stream rather than mixing generations."""
+    for s in snaps:
+        now = current_snapshot(s.table).version
+        if now != s.version:
+            raise ValueError(
+                f"{what} changed under a running stream ({s.table}: "
+                f"v{s.version} -> v{now}) — restart the sink against "
+                "the new generation"
+            )
 
 
 def maintain(

@@ -6,11 +6,9 @@ This is the ingest-time shape the persisted model exists for: a quality
 gate must not re-estimate corpus statistics per micro-batch (the inline
 ``unigram_logprob_score`` self-estimate would both rescan the corpus
 and DRIFT — the same document scoring differently as unrelated arrivals
-shift the distribution).  Here the model is FROZEN: loaded once at sink
-construction, version-asserted every batch — a model rebuild under a
-running stream stops it rather than silently mixing scoring regimes
-(same doctrine as ``ann_stream.pq_codes_sink``'s codebooks and
-``semantic_stream``'s quantizer).
+shift the distribution).  Here the model is a frozen input (README,
+"Frozen inputs"): a model rebuild under a running stream stops it
+rather than silently mixing scoring regimes.
 
 Per batch: deterministic within-batch dedup, already-scored ids
 anti-join away (re-delivery), survivors score via one broadcast model
@@ -35,10 +33,12 @@ from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
     current_snapshot,
     fold_base,
+    pin,
     upsert,
     vacuum,
 )
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -57,30 +57,14 @@ def quality_scores_sink(
 ):
     """``foreachBatch`` callback appending arriving documents' frozen-
     model quality scores — (doc_id, n_tokens, mean_logprob[, passed]) —
-    with exactly-once semantics.  ``expect_source`` pins the model to
-    the corpus generation the gate was calibrated on (checked once at
-    construction); every batch then asserts the model table is still
-    the SAME COMMIT by version."""
-
-    model_snap = current_snapshot(unigram_table)
-    if (
-        expect_source is not None
-        and model_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale text model: built from "
-            f"{model_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming scores"
-        )
+    with exactly-once semantics against the pinned model."""
+    [model_snap] = pin(
+        "text model", unigram_table, expect_source=expect_source
+    )
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(unigram_table).version != model_snap.version:
-            raise ValueError(
-                "text model changed under a running scoring stream — "
-                "restart the sink against the new generation (scores "
-                "from different model generations are not comparable)"
-            )
+        assert_pinned("text model", model_snap)
         # the model-version assert above is the cross-table fast-fail;
         # the anchored append below is the same-table guarantee
         txn = f"{query_name}:{batch_id}"
@@ -138,8 +122,8 @@ def gram_index_sink(
     defined against the corpus AS OF its arrival plus its own batch —
     exactly the batch operator's semantics under arrival order — so the
     per-batch merge is the contract, not a violation of it.  ``k`` is
-    pinned from the index commit metadata; ``expect_source`` pins the
-    base generation at construction.
+    fixed from the index commit metadata; ``expect_source`` pins the
+    base generation at construction (``snapshot_table.pin``).
 
     Commit order scores → gram-upsert → ids: freshness keys off the
     FINAL commit (ids), so any crash window replays the whole batch and
@@ -148,17 +132,8 @@ def gram_index_sink(
     its txn guard runs before staging, so a replay after the merge
     committed can never double-count a df."""
 
-    base_meta = current_snapshot(gram_table).meta
-    if (
-        expect_source is not None
-        and base_meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale gram index: built from "
-            f"{base_meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming"
-        )
-    k = int(base_meta.get("k", 8))
+    [base] = pin("gram index", gram_table, expect_source=expect_source)
+    k = int(base.meta.get("k", 8))
 
     def _fold(batch_df, batch_id: int) -> None:
         from airflow_crypto_btc_spark.functions.hashing import (
@@ -184,8 +159,8 @@ def gram_index_sink(
         live_k = int(gram_snap.meta.get("k", 8))
         if live_k != k:
             raise ValueError(
-                f"gram index k changed under a running stream "
-                f"({k} -> {live_k}) — scores would mix gram widths"
+                f"gram index k moved from {k} to {live_k} mid-stream — "
+                "scores would mix gram widths"
             )
         # freshness keys off the FINAL commit (ids)
         _, seen = fold_base(
@@ -258,22 +233,13 @@ def bigram_scores_sink(
     (``operators/text.build_bigram_lm``) — word order now matters at
     the gate, so shuffled-vocabulary spam that passes the unigram gate
     is caught here.  BOTH model tables (pair counts + unigram counts)
-    are version-pinned at construction and asserted every batch: a
-    retrain of either under a running stream stops the sink rather
-    than silently mixing scoring regimes.  Decisions land with
+    are frozen inputs (README, "Frozen inputs").  Decisions land with
     evidence — (doc_id, n_bigrams, mean_logprob[, passed]) — via one
     txn-idempotent CAS append."""
-
-    bi_snap = current_snapshot(bigram_table)
-    uni_snap = current_snapshot(unigram_table)
-    if expect_source is not None:
-        for snap, what in ((bi_snap, "bigram"), (uni_snap, "unigram")):
-            if snap.meta.get("source_version") != expect_source:
-                raise ValueError(
-                    f"stale {what} LM: built from "
-                    f"{snap.meta.get('source_version')!r}, sink expects "
-                    f"{expect_source!r} — rebuild before streaming"
-                )
+    snaps = pin(
+        "bigram LM", bigram_table, unigram_table,
+        expect_source=expect_source, agree=(),
+    )
 
     def _fold(batch_df, batch_id: int) -> None:
         from airflow_crypto_btc_spark.operators.text import (
@@ -281,15 +247,7 @@ def bigram_scores_sink(
         )
 
         spark = batch_df.sparkSession
-        if (
-            current_snapshot(bigram_table).version != bi_snap.version
-            or current_snapshot(unigram_table).version != uni_snap.version
-        ):
-            raise ValueError(
-                "bigram LM changed under a running scoring stream — "
-                "restart the sink against the new generation (scores "
-                "from different model generations are not comparable)"
-            )
+        assert_pinned("bigram LM", *snaps)
         txn = f"{query_name}:{batch_id}"
         scores_v, committed = fold_base(spark, scores_table, txn)
         fresh = fresh_rows(

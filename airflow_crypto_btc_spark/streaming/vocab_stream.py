@@ -2,12 +2,10 @@
 the PERSISTED vocabulary and append each document's id array exactly
 once — the ingest-time shape of tokenizer sharding.
 
-Same doctrine as the other frozen-model sinks (``text_stream``,
-``semantic_stream``): the vocab is loaded once at sink construction,
-version-asserted every batch — a vocab rebuild under a running encode
-stream stops it rather than silently mixing id spaces (id 7 from two
-vocab generations is two different tokens; a mixed table would be
-silently corrupt training data).
+The vocab is a frozen input (README, "Frozen inputs"): a vocab rebuild
+under a running encode stream stops it rather than silently mixing id
+spaces (id 7 from two vocab generations is two different tokens; a
+mixed table would be silently corrupt training data).
 
 Per batch: deterministic within-batch dedup, already-encoded ids
 anti-join away (re-delivery; append-ignore), one broadcast-map encode
@@ -22,10 +20,11 @@ from pyspark.sql import functions as F
 from airflow_crypto_btc_spark.operators.vocab import encode_from_vocab
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
-    current_snapshot,
     fold_base,
+    pin,
 )
 from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    assert_pinned,
     fresh_rows,
     maintain,
 )
@@ -42,25 +41,11 @@ def encoded_sink(
     compact_target_parts: int = 4,
 ):
     """``foreachBatch`` callback appending frozen-vocab encodings."""
-    vocab_snap = current_snapshot(vocab_table)
-    if (
-        expect_source is not None
-        and vocab_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale vocab: built from "
-            f"{vocab_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming encodes"
-        )
+    [vocab_snap] = pin("vocab", vocab_table, expect_source=expect_source)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if current_snapshot(vocab_table).version != vocab_snap.version:
-            raise ValueError(
-                "vocab changed under a running encode stream — restart "
-                "the sink against the new generation (id spaces from "
-                "different vocab generations must never mix)"
-            )
+        assert_pinned("vocab", vocab_snap)
         # the vocab-version assert above is the cross-table fast-fail;
         # the anchored append below is the same-table guarantee
         txn = f"{query_name}:{batch_id}"

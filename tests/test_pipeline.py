@@ -392,9 +392,11 @@ def test_json_landing_roundtrip_matches_direct_normalization(spark, tmp_path):
     )
     assert len(via_landing) == 2
     assert list(via_landing["ts_utc"]) == list(via_direct["ts_utc"])
-    # keep-first across files: the file-order winner for the dup ts is
-    # whichever row dedup_keep_first ranks first on the tie-break — both
-    # engines use the same rule, so prices agree
+    # keep-first across files: the dup ts keeps the copy landed first
+    # (earliest file name, then page position), as the direct path keeps
+    # the first page row
+    assert via_landing["price"].iloc[0] == 42050.5
+    assert via_direct["price"].iloc[0] == 42050.5
     assert via_landing["price"].iloc[1] == via_direct["price"].iloc[1]
 
 

@@ -975,6 +975,16 @@ def test_semantic_index_pinning_refusals(vectors, spark, tmp_path):
     )
     with pytest.raises(ValueError, match="mixed-generation"):
         semantic_purge_from_tables(spark, ct2, mt, delta)
+    # same corpus version, another quantizer (a different seed rule)
+    ct3 = str(tmp_path / "centroids3")
+    build_semantic_index(
+        spark, old, ct3, mt + "_scratch3", source_version="v1",
+        centroid_filter="vec_id % 7 = 3",
+    )
+    with pytest.raises(ValueError, match="disagree"):
+        semantic_purge_from_tables(
+            spark, ct3, mt, delta, expect_source="v1"
+        )
     # trained centroids without a model version tag → refused at build
     with pytest.raises(ValueError, match="quantizer version"):
         build_semantic_index(

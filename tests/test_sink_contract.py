@@ -1,8 +1,12 @@
 """The streaming sink contract's shared pieces: ``fold_base`` (the
-anchored or pre-fold read), ``fresh_rows`` (the insert-only front end)
-and ``maintain`` (cadence compaction)."""
+anchored or pre-fold read), ``fresh_rows`` (the insert-only front end),
+``maintain`` (cadence compaction) and the frozen-input pin (``pin`` plus
+``assert_pinned``)."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,3 +106,145 @@ def test_maintain_propagates_compact_failure_on_a_live_table(
     monkeypatch.setattr(snapshot_sink, "compact", failing)
     with pytest.raises(ValueError, match="compaction failed"):
         snapshot_sink.maintain(spark, 0, 1, 1, {t: None})
+
+
+# ------------------------------------------------------- frozen inputs
+def test_pin_checks_agree_keys_then_source(spark, tmp_path):
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    st.append(spark, _rows(spark, 0, 2), a,
+              meta={"source_version": "v1", "quantizer": "q1"})
+    st.append(spark, _rows(spark, 0, 2), b,
+              meta={"source_version": "v1", "quantizer": "q2"})
+    # only the agree keys are compared: the default is source_version
+    sa, sb = st.pin("index", a, b, expect_source="v1")
+    assert (sa.table, sb.table, sa.version) == (a, b, 0)
+    with pytest.raises(ValueError, match="index tables disagree"):
+        st.pin("index", a, b, agree=("source_version", "quantizer"))
+    with pytest.raises(ValueError, match="stale index"):
+        st.pin("index", a, b, expect_source="v2")
+    assert st.pin("index", a, expect_source=None, agree=None)[0].meta
+
+
+def test_assert_pinned_refuses_any_new_commit(spark, tmp_path):
+    t = str(tmp_path / "t")
+    st.append(spark, _rows(spark, 0, 2), t, meta={"source_version": "v1"})
+    [snap] = st.pin("model", t)
+    snapshot_sink.assert_pinned("model", snap)
+    st.append(spark, _rows(spark, 2, 3), t)  # same meta, new commit
+    with pytest.raises(ValueError, match="model changed under a running"):
+        snapshot_sink.assert_pinned("model", snap)
+
+
+def _rebuild_right_after_pin(monkeypatch, last_table, rebuild):
+    """Wrap ``snapshot_table.current_snapshot`` once: the first replay of
+    ``last_table`` (the last table a serve path pins) returns, then a
+    new generation commits before the serve reads any row."""
+    real = st.current_snapshot
+    fired = []
+
+    def racing(table, version=None):
+        snap = real(table, version)
+        if table == last_table and version is None and not fired:
+            fired.append(snap.version)
+            rebuild()
+        return snap
+
+    monkeypatch.setattr(st, "current_snapshot", racing)
+    return fired
+
+
+def test_pinned_read_serves_the_pinned_generation(
+    spark, tmp_path, monkeypatch
+):
+    """A rebuild committing between a serve path's pin and its read is
+    not served: the rows come from the commit whose meta was checked."""
+    from airflow_crypto_btc_spark.operators import search as S
+    from airflow_crypto_btc_spark.operators.vocab import (
+        build_bpe_table,
+        load_bpe_merges,
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    # one table: the BPE merge list, retrained on another corpus
+    bpe = str(tmp_path / "bpe")
+    gen1 = build_bpe_table(
+        spark, docs([(1, "ab ab abc"), (2, "bc abc ab")]), bpe,
+        merges=3, source_version="v1",
+    )
+    fired = _rebuild_right_after_pin(
+        monkeypatch, bpe, lambda: build_bpe_table(
+            spark, docs([(1, "xy xyz yz"), (2, "xyz xy")]), bpe,
+            merges=3, source_version="v1",
+        ),
+    )
+    assert load_bpe_merges(spark, bpe, expect_source="v1") == [
+        tuple(m) for m in gen1
+    ]
+    assert fired == [0] and st.current_snapshot(bpe).version == 1
+    monkeypatch.undo()
+
+    # two tables: the BM25 index, a second generation appended to both
+    corpus = docs([(0, "alpha beta gamma"), (1, "beta gamma delta")])
+    q = spark.createDataFrame(
+        [(1, "beta"), (2, "delta")], "query_id bigint, token string"
+    )
+    post, dlen = str(tmp_path / "post"), str(tmp_path / "dlen")
+    S.build_bm25_index(spark, corpus, post, dlen, source_version="v1")
+    fired = _rebuild_right_after_pin(
+        monkeypatch, dlen, lambda: S.build_bm25_index(
+            spark, docs([(2, "beta beta delta"), (3, "delta")]), post,
+            dlen, source_version="v1",
+        ),
+    )
+    served = S.bm25_topk_from_index(spark, post, dlen, q, expect_source="v1")
+    assert fired == [0]
+    assert sorted(map(tuple, served.collect())) == sorted(
+        map(tuple, S.bm25_topk(corpus, q).collect())
+    )
+
+
+def _package_modules():
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "airflow_crypto_btc_spark"
+    for path in sorted(pkg.rglob("*.py")):
+        yield path.relative_to(pkg).as_posix(), ast.parse(path.read_text())
+
+
+def test_generation_decision_lives_in_one_module():
+    """Only ``sources/snapshot_table.py`` reads ``source_version`` off
+    commit meta, and only ``streaming/snapshot_sink.py`` raises "changed
+    under a running": every frozen model or index goes through ``pin``
+    and ``assert_pinned`` (writing ``meta={"source_version": ...}`` is
+    a builder's business and allowed)."""
+    readers, raisers = [], []
+    for name, tree in _package_modules():
+        for node in ast.walk(tree):
+            key = None
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get"
+                and node.args
+            ):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and isinstance(
+                node.ctx, ast.Load
+            ):
+                key = node.slice
+            if isinstance(key, ast.Constant) and key.value == "source_version":
+                readers.append(f"{name}:{node.lineno}")
+            if isinstance(node, ast.Raise) and any(
+                isinstance(c, ast.Constant)
+                and isinstance(c.value, str)
+                and "changed under a running" in c.value
+                for c in ast.walk(node)
+            ):
+                raisers.append(f"{name}:{node.lineno}")
+    assert {r.split(":")[0] for r in readers} == {
+        "sources/snapshot_table.py"
+    }, readers
+    assert {r.split(":")[0] for r in raisers} == {
+        "streaming/snapshot_sink.py"
+    }, raisers

@@ -339,6 +339,18 @@ def test_streaming_ivfpq_maintains_full_index(spark, tmp_path):
     sink(arrivals.filter("vec_id >= 105"), 1)  # replay
     sink(arrivals.filter("vec_id = 100"), 2)   # re-delivery
     assert _contents() == before
+    # a centroids-only rebuild between batches (same rows, same meta)
+    # stops the stream with nothing landed
+    from airflow_crypto_btc_spark.sources.snapshot_table import overwrite
+
+    cent = read_snapshot(spark, root + "/centroids")
+    overwrite(
+        spark, spark.createDataFrame(cent.collect(), cent.schema),
+        root + "/centroids", meta=current_snapshot(root + "/books").meta,
+    )
+    with pytest.raises(ValueError, match="centroids changed"):
+        sink(arrivals.filter("vec_id = 126"), 3)
+    assert _contents() == before
 
 
 def test_streaming_ivfpq_frozen_model_refusals_and_racer(

@@ -147,8 +147,10 @@ def test_streaming_semantic_frozen_quantizer_refusals(spark, tmp_path):
         str(tmp_path / "members_scratch"), source_version="v1",
         centroid_filter="vec_id % 7 = 2",
     )
+    members_v = current_snapshot(mt).version
     with pytest.raises(ValueError, match="changed under a running"):
         sink(df.filter("vec_id >= 50"), 1)
+    assert current_snapshot(mt).version == members_v  # nothing landed
 
 
 def test_streaming_semantic_compaction_bounds_parts(spark, tmp_path):
