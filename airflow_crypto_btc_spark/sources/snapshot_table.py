@@ -516,9 +516,9 @@ def pin(
             f"{what} tables disagree ({got}) — mixed-generation "
             "(partial) rebuild, rebuild them together"
         )
-    for s in snaps if expect_source is not None else ():
+    for s in snaps:
         got = s.meta.get("source_version")
-        if got != expect_source:
+        if expect_source is not None and got != expect_source:
             raise ValueError(
                 f"stale {what}: {s.table} built from {got!r}, expected "
                 f"{expect_source!r} — rebuild before serving"
